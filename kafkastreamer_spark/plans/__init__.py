@@ -1,5 +1,8 @@
-"""Pipeline/topology compiler (SURVEY.md §2-A A14/A15), plus the DAG
-generalization (fan-out/fan-in) the linear reference cannot express."""
+"""Topology compiler (``plans.topology``): linear and DAG specs over two
+stage vocabularies — the reference's integer stages and the corpus
+hygiene stages (``plans.corpus_pipeline``) — compiled into one query
+or deployed one query per node. The other modules bind its public
+names per vocabulary and shape."""
 
 from kafkastreamer_spark.plans.dag import (
     DagNode,

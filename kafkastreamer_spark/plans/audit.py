@@ -6,9 +6,7 @@ plan that passes at sf0.01 falls over at 100 TB. But not every
 1-partition exchange is that — a scalar aggregate's final merge or an
 ordered window over an already-aggregated, domain-bounded series
 (daily counts, histogram cells) shuffles a few hundred rows by
-construction. Round 4 left "the 123 single-partition exchanges are
-all benign" as prose in docs/PLAN_AUDIT.md; this module makes the
-claim executable (round-4 verdict item #2): every SinglePartition
+construction. This module tells them apart: every SinglePartition
 exchange in every registered plan is classified by walking the
 physical tree, and the lint (tests/test_plan_lint.py) asserts the
 ``base_table`` class is EMPTY registry-wide.

@@ -1,188 +1,44 @@
-"""DAG-shaped CORPUS topologies, batch and streaming (VERDICT r8
-stretch #8): the fan-out/fan-in composition of plans/dag.py with the
-corpus-hygiene stage vocabulary of plans/corpus_pipeline.py.
+"""DAG topologies over the corpus stage vocabulary: one intake forking
+into gate chains tuned per destination and merged back by ``union``.
+Bindings onto ``plans.topology`` with ``CORPUS``.
 
-The linear corpus compiler already deploys as a Structured Streaming
-job (CLI ``--mode corpus --stream``); real intakes fork — one cleansed
-stream feeding several gate chains tuned per destination, then a
-fan-in union into one training corpus — and until this module the DAG
-compiler only spoke the int-stage vocabulary. Here the two meet:
+Deployment shapes, as for integer DAGs:
 
-* nodes are corpus stages (``repetition_gate`` / ``gopher_gate`` /
-  ``length_gate`` / ``langid_gate`` / ``exact_dedup`` / ``source_cap``
-  / ``temperature_mix`` — plans/corpus_pipeline.py:CORPUS_STAGES),
-  each with exactly one input;
-* ``union`` is the fan-in (≥2 inputs, unionByName) and fan-OUT is any
-  node consumed by several downstream inputs — compilation builds the
-  shared subplan once, exactly like compile_dag;
-* graph-shape validation (unique names, known inputs, acyclicity via
-  Kahn, sources/sinks/reachability) is plans/dag.py's
-  ``validate_dag`` with the corpus vocabulary's op check plugged in —
-  one graph validator, two vocabularies;
-* STREAMING mode applies the same compile-time rejections as the
-  linear validator (plans/corpus_pipeline.py:validate_corpus_spec):
-  rank-based stages (``source_cap``, ``temperature_mix``) are
-  batch-only, and ``exact_dedup`` without a positive TTL arg is
-  rejected — unbounded state never reaches runtime (the r8 weak-fix
-  discipline, plans/corpus_pipeline.py:83-103).
+* single query per sink — ``compile_corpus_dag(spec, streaming=True)``
+  over streaming sources, one writeStream per sink (the CLI's
+  ``--mode corpus-dag --stream``);
+* node per query — ``run_corpus_dag_available_now`` drains a bounded
+  DAG with one availableNow query per node over parquet channels
+  ``cnode_<id>_<name>`` (checkpoints ``cnode_<name>``); a stateful
+  node (``exact_dedup``) keeps its state in its own checkpoint.
 
-Deployment shapes, mirroring the int-stage pair:
-- SINGLE QUERY per sink: ``compile_corpus_dag(spec, streaming=True)``
-  over streaming source bindings; start one writeStream per returned
-  sink (the CLI's ``--mode corpus-dag --stream`` path). Catalyst plans
-  each sink's whole branch as one query; the shared upstream is one
-  scan per query (across queries the channel/source is re-read — the
-  same contract as plans/dag.py fan-out in streaming).
-- NODE PER QUERY: ``run_corpus_dag_available_now`` drains a bounded
-  DAG with one availableNow query per non-source node over parquet
-  channels (plans/topology_mode.py's DirChannels shape generalized to
-  the document schema) — the reference's process-per-stage deployment
-  (CreateBash.py:2-22) for corpus gates, each node independently
-  restartable with its own checkpoint.
-
-Stream==batch parity contract: with arrivals fed in doc_id order
-(the discipline every dedup twin documents), streamed survivors equal
-the batch compile's for the same DAG — tested on a 2-branch fan-out/
-fan-in topology in tests/test_corpus_dag.py.
-
-Reference parity note: the reference's topology is strictly linear
-(KafkaParser.py:144-155); the DAG generalization serves SURVEY §2
-Part-B pipeline-composition closure.
+With arrivals in doc_id order, streamed survivors equal the batch
+compile's for the same DAG.
 """
 
 from __future__ import annotations
 
-import os
-from collections.abc import Callable, Mapping
+from collections.abc import Mapping
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
-from kafkastreamer_spark.plans.corpus_pipeline import (
-    ALLOWED_CORPUS_OPERATIONS,
-    CORPUS_STAGES,
-)
-from kafkastreamer_spark.plans.dag import (
+from kafkastreamer_spark.plans.corpus_pipeline import CORPUS
+from kafkastreamer_spark.plans.dag import from_dict as dag_from_dict
+from kafkastreamer_spark.plans.topology import (
     SOURCE_OP,
-    UNION_OP,
-    DagNode,
     DagSpec,
-    from_dict as dag_from_dict,
-    validate_dag,
+    DirChannels,
+    TopologyError,
+    compile_topology,
+    drain_available_now,
+    read_dict,
+    validate,
 )
-from kafkastreamer_spark.plans.pipeline import TopologyError
 
-
-def _corpus_op_check(streaming: bool):
-    def check(n: DagNode) -> None:
-        if n.operation == UNION_OP:
-            if len(n.inputs) < 2:
-                raise TopologyError(
-                    f"union node {n.name!r} needs >= 2 inputs, got "
-                    f"{len(n.inputs)}"
-                )
-            return
-        if n.operation not in CORPUS_STAGES:
-            raise TopologyError(
-                f"operation {n.operation!r} not allowed; expected one of "
-                f"{ALLOWED_CORPUS_OPERATIONS + (SOURCE_OP, UNION_OP)}"
-            )
-        if len(n.inputs) != 1:
-            raise TopologyError(
-                f"stage node {n.name!r} ({n.operation}) needs exactly one "
-                f"input, got {len(n.inputs)}"
-            )
-        if streaming and CORPUS_STAGES[n.operation][1] is None:
-            raise TopologyError(
-                f"operation {n.operation!r} needs a per-group rank and "
-                "cannot run in streaming mode (batch-only stage)"
-            )
-        if streaming and n.operation == "exact_dedup":
-            eff = n.arg if n.arg >= 0 else CORPUS_STAGES[n.operation][2]
-            if eff <= 0:
-                raise TopologyError(
-                    "exact_dedup without a TTL keeps unbounded state in "
-                    "streaming mode; give it a positive arg (TTL in "
-                    "event-time minutes) — it maps to "
-                    "dropDuplicatesWithinWatermark's watermark delay"
-                )
-
-    return check
-
-
-def validate_corpus_dag(spec: DagSpec, streaming: bool = False) -> DagSpec:
-    """Graph-shape + corpus-vocabulary validation; returns the spec
-    topologically ordered. ``streaming=True`` adds the compile-time
-    rejections the linear corpus validator enforces."""
-    return validate_dag(spec, op_check=_corpus_op_check(streaming))
-
-
-def corpus_dag_from_dict(d: dict, streaming: bool = False) -> DagSpec:
-    """Same JSON surface as plans/dag.from_dict, corpus vocabulary.
-    Note ``arg`` default: corpus stages use -1 (= the stage default),
-    so a missing ``arg`` key maps to -1 here, not dag.py's 1."""
-    try:
-        nodes = tuple(
-            DagNode(
-                name=str(n["name"]),
-                operation=str(n["operation"]),
-                inputs=tuple(str(i) for i in n.get("inputs", ())),
-                arg=int(n.get("arg", -1)),
-            )
-            for n in d["nodes"]
-        )
-    except KeyError as exc:
-        raise TopologyError(
-            f"node element missing required key: {exc}"
-        ) from exc
-    return validate_corpus_dag(
-        DagSpec(
-            nodes=nodes,
-            sinks=tuple(str(s) for s in d.get("sinks", ())),
-            stream_id=str(d.get("stream_id", "")),
-        ),
-        streaming=streaming,
-    )
-
-
-def compile_corpus_dag(
-    spec: DagSpec, streaming: bool = False
-) -> Callable[[Mapping[str, DataFrame]], dict[str, DataFrame]]:
-    """Compile into ``f({source_name: df}) -> {sink_name: df}`` —
-    shared upstream nodes built once (fan-out), ``union`` merged by
-    name (fan-in), corpus stage functions applied per node in
-    topological order. ``streaming=True`` selects each stage's
-    streaming form and enforces the streaming rejections at compile
-    time."""
-    spec = validate_corpus_dag(spec, streaming=streaming)
-
-    def transform(sources: Mapping[str, DataFrame]) -> dict[str, DataFrame]:
-        built: dict[str, DataFrame] = {}
-        for n in spec.nodes:  # already topologically ordered
-            if n.operation == SOURCE_OP:
-                if n.name not in sources:
-                    raise TopologyError(
-                        f"no DataFrame bound for source {n.name!r}"
-                    )
-                built[n.name] = sources[n.name]
-            elif n.operation == UNION_OP:
-                dfs = [built[i] for i in n.inputs]
-                out = dfs[0]
-                for other in dfs[1:]:
-                    out = out.unionByName(other)
-                built[n.name] = out
-            else:
-                batch_fn, stream_fn, default = CORPUS_STAGES[n.operation]
-                fn = stream_fn if streaming else batch_fn
-                built[n.name] = fn(
-                    built[n.inputs[0]], n.arg if n.arg >= 0 else default
-                )
-        return {s: built[s] for s in spec.sinks}
-
-    return transform
-
-
-def _channel(root: str, stream_id: str, name: str) -> str:
-    return os.path.join(root, f"cnode_{stream_id}_{name}")
+validate_corpus_dag = partial(validate, vocab=CORPUS)
+corpus_dag_from_dict = partial(read_dict, vocab=CORPUS)
+compile_corpus_dag = partial(compile_topology, vocab=CORPUS)
 
 
 def run_corpus_dag_available_now(
@@ -192,58 +48,22 @@ def run_corpus_dag_available_now(
     channel_root: str,
     checkpoint_root: str,
 ) -> dict[str, str]:
-    """Drain a bounded corpus DAG with ONE availableNow streaming
-    query per non-source node over parquet-directory channels — the
-    reference's process-per-stage deployment shape
-    (plans/topology_mode.run_dag_available_now) with corpus gates.
-
-    ``seeds`` maps every source node to an existing parquet directory
-    of documents (the node's intake channel); each stage node reads
-    its input node's channel as a file stream, applies its STREAMING
-    stage form, and appends to its own channel with its own
-    checkpoint. Returns {sink name: channel path}.
-
-    Stateful nodes (``exact_dedup``) keep their state in their own
-    query's checkpoint, so a node restart resumes where it left off
-    without touching its neighbours — the per-stage restartability
-    the reference gets from one JVM per stage (CreateBash.py:2-22).
-    """
-    from kafkastreamer_spark.streaming.sources import file_source
-
+    """Drain a bounded corpus DAG node by node. ``seeds`` maps every
+    source node to an existing parquet directory of documents; returns
+    {sink name: channel path}."""
     spec = validate_corpus_dag(spec, streaming=True)
-    paths: dict[str, str] = {}
-    for n in spec.nodes:
-        if n.operation == SOURCE_OP:
-            if n.name not in seeds:
-                raise TopologyError(f"no seed directory for source {n.name!r}")
-            paths[n.name] = seeds[n.name]
-    schema = spark.read.parquet(next(iter(paths.values()))).schema
-
-    for n in spec.nodes:  # topological order
-        if n.operation == SOURCE_OP:
-            continue
-        src = None
-        for i in n.inputs:
-            part = file_source(spark, paths[i], schema, max_files_per_trigger=1)
-            src = part if src is None else src.unionByName(part)
-        if n.operation != UNION_OP:
-            _, stream_fn, default = CORPUS_STAGES[n.operation]
-            src = stream_fn(src, n.arg if n.arg >= 0 else default)
-        out_path = _channel(channel_root, spec.stream_id, n.name)
-        paths[n.name] = out_path
-        q = (
-            src.writeStream.format("parquet")
-            .option("path", out_path)
-            .option(
-                "checkpointLocation",
-                os.path.join(checkpoint_root, f"cnode_{n.name}"),
-            )
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return {s: paths[s] for s in spec.sinks}
+    sources = [n.name for n in spec.nodes if n.operation == SOURCE_OP]
+    missing = sorted(set(sources) - set(seeds))
+    if missing:
+        raise TopologyError(f"no seed directory for sources {missing}")
+    channels = DirChannels(
+        channel_root, spec.stream_id, "cnode", tuple(seeds.items())
+    )
+    sinks = drain_available_now(
+        spark, spec, channels, checkpoint_root,
+        vocab=CORPUS, checkpoint_prefix="cnode_",
+    )
+    return {s: channels.path(k) for s, k in sinks.items()}
 
 
 __all__ = [

@@ -1,62 +1,59 @@
-"""Corpus-hygiene topology: the reference's pipeline format driving
-LLM-data stages instead of integer stage functions.
+"""The corpus stage vocabulary: the reference's topology format driving
+document-hygiene stages instead of integer stage functions.
 
-The reference's topology compiler wires stages drawn from a fixed
-whitelist into a linear chain (KafkaParser.py:124,136-138 — adder /
-power / diff / identity over int payloads). `plans/pipeline.py`
-reproduces that contract verbatim; THIS module is the same compiler
-contract over the engine's training-data operators, so a user can
-declare "repetition gate → exact dedup → per-source cap → temperature
-mix" in the reference's own XML/dict shape and get ONE composed
+A user declares e.g. "repetition gate → exact dedup → per-source cap →
+temperature mix" in the reference's XML/dict shape, linear or as a DAG,
+and the compiler in ``plans.topology`` turns it into one composed
 DataFrame transform — the corpus-prep capstone
-(operators/quality.py `pipeline_corpus_prep`) as a declarative
-topology instead of code.
+(operators/quality.py ``pipeline_corpus_prep``) as a declarative
+topology. Frames are documents-shaped (doc_id, text, lang, source, ...).
 
-Stage vocabulary (documents-shaped frames: doc_id, text, lang,
-source, ...):
+Stages (``CORPUS_STAGES``: op → batch fn, stream fn or None, default
+arg; a negative arg means the default):
 
 - ``repetition_gate`` — drop Gopher-repetitive docs via the map-only
   flag expression (bit-identical to the metrics query for docs with
-  >= 2 tokens, parity-tested; sub-2-token docs are flagged — and thus
-  dropped — by construction, see with_repetition_flag's docstring)
-  — STATELESS, usable on streams.
-- ``exact_dedup`` — keep the lowest-doc_id copy per md5(text)
-  (batch: rank; streaming: ``dropDuplicatesWithinWatermark`` on the
-  hash — keeps the FIRST arrival, which equals lowest-id when ids
-  arrive in order). In streaming mode the stage's ``arg`` is a TTL
-  in event-time MINUTES and is REQUIRED (> 0): it maps to the
-  watermark delay that bounds the dedup state store, so state holds
-  only hashes within TTL of the watermark instead of every distinct
-  document ever seen. The TTL-less form is rejected at COMPILE time
-  (unbounded state on an unbounded stream is a guaranteed OOM), and
-  the input frame must carry a timestamp column named ``ts``
-  (validated before the query starts). Recall contract: a duplicate
-  arriving more than TTL after its first copy is re-admitted — the
-  standard windowed-dedup semantics, same as the evicting LSH twin
-  (streaming/dedup.py). Batch ignores the TTL (global dedup);
-  stream survivors == batch survivors whenever duplicates arrive
-  within the TTL in id order (parity-tested).
-- ``source_cap`` — at most ``arg`` docs per source by md5(doc_id)
-  order (deskewed rank) — batch-only (needs a per-group rank).
+  >= 2 tokens; sub-2-token docs are flagged and dropped, see
+  with_repetition_flag). Streamable.
+- ``gopher_gate`` — keep docs passing all four Gopher rules, with the
+  registered quality_gopher_rules thresholds. Streamable.
+- ``length_gate`` — keep docs with at least ``arg`` tokens. Streamable.
+- ``langid_gate`` — keep docs whose predicted language equals their
+  ``lang``, scored like text_language_id. Streamable.
+- ``exact_dedup`` — keep the lowest-doc_id copy per md5(text). Batch:
+  a rank. Streaming: ``dropDuplicatesWithinWatermark`` on the hash,
+  which keeps the first arrival (the lowest id when ids arrive in
+  order). The stream form's ``arg`` is a TTL in event-time minutes and
+  must be > 0 (``ttl_ops``): it is the watermark delay that bounds the
+  dedup state, and the input needs a timestamp column ``ts``. A
+  duplicate arriving more than TTL after its first copy is re-admitted,
+  the usual windowed-dedup contract. Batch ignores the TTL.
+- ``source_cap`` — at most ``arg`` docs per source in md5(doc_id)
+  order. Batch-only (a per-group rank).
 - ``temperature_mix`` — per-language count^0.5 rebalance with
-  multiplier ``arg`` — batch-only.
+  multiplier ``arg``. Batch-only.
 
-Validation mirrors pipeline.py: contiguous stages 0..N, whitelist,
-positive counts, random stream id fallback. ``streaming=True``
-additionally rejects the rank-based stages — the error a user needs
-at COMPILE time, not as a mid-run AnalysisException.
+Node-per-query drains read channels one file per trigger, so the
+streaming exact_dedup sees documents in the order they were seeded.
 """
 
 from __future__ import annotations
 
-import random
-import xml.etree.ElementTree as ET
-from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, functions as F
 
-from kafkastreamer_spark.plans.pipeline import TopologyError
+from kafkastreamer_spark.plans.topology import (
+    PipelineSpec,
+    StageSpec,
+    TopologyError,
+    Vocabulary,
+    compile_linear,
+    read_dict,
+    read_xml,
+    validate,
+)
 
 
 def _repetition_gate(df: DataFrame, arg: int) -> DataFrame:
@@ -193,134 +190,24 @@ CORPUS_STAGES: dict[str, tuple] = {
 }
 ALLOWED_CORPUS_OPERATIONS = tuple(CORPUS_STAGES)
 
+CORPUS = Vocabulary(
+    stages=CORPUS_STAGES,
+    missing_arg=-1,
+    ttl_ops=frozenset({"exact_dedup"}),
+    files_per_trigger=1,
+)
+
 
 @dataclass(frozen=True)
-class CorpusStageSpec:
-    stage: int
-    operation: str
+class CorpusStageSpec(StageSpec):
     arg: int = -1  # -1 -> the operation's default
 
 
-@dataclass(frozen=True)
-class CorpusPipelineSpec:
-    stages: tuple[CorpusStageSpec, ...]
-    partitions: int = 1
-    stream_id: str = ""
-
-
-def validate_corpus_spec(
-    spec: CorpusPipelineSpec, streaming: bool = False
-) -> CorpusPipelineSpec:
-    if not spec.stages:
-        raise TopologyError("pipeline has no stages")
-    for st in spec.stages:
-        if st.operation not in CORPUS_STAGES:
-            raise TopologyError(
-                f"operation {st.operation!r} not allowed; expected one of "
-                f"{ALLOWED_CORPUS_OPERATIONS}"
-            )
-        if streaming and CORPUS_STAGES[st.operation][1] is None:
-            raise TopologyError(
-                f"operation {st.operation!r} needs a per-group rank and "
-                "cannot run in streaming mode (batch-only stage)"
-            )
-        if streaming and st.operation == "exact_dedup":
-            eff = st.arg if st.arg >= 0 else CORPUS_STAGES[st.operation][2]
-            if eff <= 0:
-                raise TopologyError(
-                    "exact_dedup without a TTL keeps unbounded state in "
-                    "streaming mode; give it a positive arg (TTL in "
-                    "event-time minutes) — it maps to "
-                    "dropDuplicatesWithinWatermark's watermark delay"
-                )
-    if len({st.stage for st in spec.stages}) != len(spec.stages):
-        raise TopologyError("duplicate stage numbers")
-    numbers = sorted(st.stage for st in spec.stages)
-    if numbers != list(range(len(numbers))):
-        missing = sorted(set(range(max(numbers) + 1)) - set(numbers))
-        raise TopologyError(f"missing stage: {missing}")
-    if spec.partitions < 1:
-        raise TopologyError("partitions must be >= 1")
-    stages = tuple(sorted(spec.stages, key=lambda s: s.stage))
-    return CorpusPipelineSpec(
-        stages=stages,
-        partitions=spec.partitions,
-        stream_id=spec.stream_id or str(random.randint(0, 9999)),
-    )
-
-
-def corpus_spec_from_dict(d: dict) -> CorpusPipelineSpec:
-    """{"stream_id": "...", "partitions": 2,
-        "stages": [{"stage": 0, "operation": "repetition_gate"}, ...]}"""
-    try:
-        stages = tuple(
-            CorpusStageSpec(
-                stage=int(s["stage"]),
-                operation=str(s["operation"]),
-                arg=int(s.get("arg", -1)),
-            )
-            for s in d["stages"]
-        )
-    except KeyError as exc:
-        raise TopologyError(f"stage element missing required key: {exc}") from exc
-    return validate_corpus_spec(
-        CorpusPipelineSpec(
-            stages=stages,
-            partitions=int(d.get("partitions", 1)),
-            stream_id=str(d.get("stream_id", "")),
-        )
-    )
-
-
-def parse_corpus_topology_xml(path: str) -> CorpusPipelineSpec:
-    """Reference-format XML (template.xml layout: <Stream id> root,
-    <Streamer><stage>/<operation>[/<arg>]) with the corpus whitelist;
-    infra-only tags tolerated and ignored, like plans/pipeline.py."""
-    root = ET.parse(path).getroot()
-    if root.tag != "Stream":
-        raise TopologyError("root tag must be 'Stream'")
-    part_el = root.find("partition")
-    partitions = int(part_el.get("value", 1)) if part_el is not None else 1
-    stages = []
-    for streamer in root.iter("Streamer"):
-        props = {p.tag: (p.text or "") for p in streamer}
-        if "stage" not in props:
-            raise TopologyError("no stage tag found in 'Streamer' element")
-        if "operation" not in props:
-            raise TopologyError("no operation tag found in 'Streamer' element")
-        stages.append(
-            CorpusStageSpec(
-                stage=int(props["stage"]),
-                operation=props["operation"],
-                arg=int(props.get("arg", -1)),
-            )
-        )
-    return validate_corpus_spec(
-        CorpusPipelineSpec(
-            stages=tuple(stages),
-            partitions=partitions,
-            stream_id=root.get("id", ""),
-        )
-    )
-
-
-def compile_corpus_pipeline(
-    spec: CorpusPipelineSpec, streaming: bool = False
-) -> Callable[[DataFrame], DataFrame]:
-    """Compile into one composed DataFrame transform (batch or
-    streaming). Same contract as plans/pipeline.compile_pipeline:
-    Catalyst plans the whole declared chain as one query."""
-    spec = validate_corpus_spec(spec, streaming=streaming)
-
-    def transform(df: DataFrame) -> DataFrame:
-        out = df
-        for st in spec.stages:
-            batch_fn, stream_fn, default = CORPUS_STAGES[st.operation]
-            fn = stream_fn if streaming else batch_fn
-            out = fn(out, st.arg if st.arg >= 0 else default)
-        return out
-
-    return transform
+CorpusPipelineSpec = PipelineSpec
+validate_corpus_spec = partial(validate, vocab=CORPUS)
+corpus_spec_from_dict = partial(read_dict, vocab=CORPUS)
+parse_corpus_topology_xml = partial(read_xml, vocab=CORPUS)
+compile_corpus_pipeline = partial(compile_linear, vocab=CORPUS)
 
 
 def _register_topology_report() -> None:

@@ -1,242 +1,30 @@
-"""DAG topologies: fan-out / fan-in pipeline composition.
-
-The reference's topology model is strictly linear — stage i feeds
-stage i+1 and nothing else (contiguity enforced at
-KafkaParser.py:144-155; wiring at Streamer.java:89-95). Real
-deployments fork streams (one cleansed stream feeding both an
-aggregation and an archive) and merge them (two source topics into
-one downstream stage). This module generalizes plans/pipeline.py to
-an arbitrary DAG while keeping the reference's stage semantics for
-every node:
-
-* node operations are the same whitelisted scalar stages
-  (adder/power/diff/identity — Streamer.java:166-205) with exactly
-  one input each;
-* ``union`` is the fan-in node (≥2 inputs, unionByName — the Kafka
-  analogue is two producers into one topic);
-* ``source`` nodes (no inputs) bind to caller-provided DataFrames;
-* fan-OUT needs no node type: any node's name may appear in several
-  downstream ``inputs`` lists, and compilation reuses the one
-  DataFrame (Catalyst/AQE reuse the subplan; in streaming each sink
-  is its own query over the shared upstream definition).
-
-Validation mirrors the reference's strictness (TopologyError on every
-malformed shape): unique names, known inputs, arity per operation,
-acyclicity via Kahn topological sort, at least one source and one
-sink, and no dangling nodes (everything must reach a sink — the
-reference's "no gaps in the chain" generalized).
-
-Compilation is batch/streaming agnostic, exactly like
-``compile_pipeline``: the returned callable maps {source name →
-DataFrame} to {sink name → DataFrame}; a linear PipelineSpec
-round-trips through ``from_pipeline_spec`` and compiles to the
-identical single-projection plan (parity-tested).
-"""
+"""DAG topologies over the integer stage vocabulary: fan-out (a node
+consumed by several nodes) and fan-in (``union``), a shape the
+reference's strictly linear topology cannot express
+(KafkaParser.py:144-155). Bindings onto ``plans.topology``."""
 
 from __future__ import annotations
 
-from collections import deque
-from collections.abc import Callable, Mapping
-from dataclasses import dataclass, field
+from functools import partial
 
-from pyspark.sql import DataFrame
-
-from kafkastreamer_spark.plans.pipeline import (
-    ALLOWED_OPERATIONS,
+from kafkastreamer_spark.plans.topology import (  # noqa: F401
+    INT,
+    SOURCE_OP,
+    UNION_OP,
+    DagNode,
+    DagSpec,
     PipelineSpec,
-    TopologyError,
-    validate_spec,
+    chain,
+    compile_topology,
+    read_dict,
+    validate,
 )
-from kafkastreamer_spark.streaming.stages import apply_stage
 
-SOURCE_OP = "source"
-UNION_OP = "union"
-
-
-@dataclass(frozen=True)
-class DagNode:
-    name: str
-    operation: str
-    inputs: tuple[str, ...] = ()
-    arg: int = 1
-
-
-@dataclass(frozen=True)
-class DagSpec:
-    nodes: tuple[DagNode, ...]
-    sinks: tuple[str, ...] = field(default_factory=tuple)
-    stream_id: str = ""
-
-
-def _int_stage_check(n: DagNode) -> None:
-    """The int-pipeline vocabulary's per-node op/arity rules."""
-    if n.operation == UNION_OP:
-        if len(n.inputs) < 2:
-            raise TopologyError(
-                f"union node {n.name!r} needs >= 2 inputs, got {len(n.inputs)}"
-            )
-    elif n.operation in ALLOWED_OPERATIONS:
-        if len(n.inputs) != 1:
-            raise TopologyError(
-                f"stage node {n.name!r} ({n.operation}) needs exactly one "
-                f"input, got {len(n.inputs)}"
-            )
-    else:
-        raise TopologyError(
-            f"operation {n.operation!r} not allowed; expected one of "
-            f"{ALLOWED_OPERATIONS + (SOURCE_OP, UNION_OP)}"
-        )
-
-
-def validate_dag(spec: DagSpec, op_check=_int_stage_check) -> DagSpec:
-    """Validate shape, arity, reachability, and acyclicity; returns
-    the spec with nodes in a deterministic topological order.
-
-    ``op_check(node)`` supplies the per-vocabulary op/arity rules for
-    every non-source node (raise TopologyError on violation) — the
-    int-stage rules by default; plans/corpus_dag.py passes the corpus
-    vocabulary's. Graph-shape rules (unique names, known inputs,
-    acyclicity, sources/sinks/reachability) are vocabulary-independent
-    and live here once."""
-    if not spec.nodes:
-        raise TopologyError("dag has no nodes")
-    by_name = {}
-    for n in spec.nodes:
-        if n.name in by_name:
-            raise TopologyError(f"duplicate node name {n.name!r}")
-        by_name[n.name] = n
-
-    sources = []
-    for n in spec.nodes:
-        if n.operation == SOURCE_OP:
-            if n.inputs:
-                raise TopologyError(f"source node {n.name!r} must have no inputs")
-            sources.append(n.name)
-        else:
-            op_check(n)
-        for i in n.inputs:
-            if i not in by_name:
-                raise TopologyError(f"node {n.name!r} reads unknown input {i!r}")
-    if not sources:
-        raise TopologyError("dag has no source nodes")
-
-    sinks = tuple(spec.sinks) or _leaf_names(spec.nodes)
-    for s in sinks:
-        if s not in by_name:
-            raise TopologyError(f"unknown sink {s!r}")
-    if not sinks:
-        raise TopologyError("dag has no sinks")
-
-    # Kahn topological sort — deterministic (name-ordered ready set)
-    indeg = {n.name: len(n.inputs) for n in spec.nodes}
-    downstream: dict[str, list[str]] = {n.name: [] for n in spec.nodes}
-    for n in spec.nodes:
-        for i in n.inputs:
-            downstream[i].append(n.name)
-    ready = sorted(name for name, d in indeg.items() if d == 0)
-    queue = deque(ready)
-    order: list[str] = []
-    while queue:
-        cur = queue.popleft()
-        order.append(cur)
-        for nxt in sorted(downstream[cur]):
-            indeg[nxt] -= 1
-            if indeg[nxt] == 0:
-                queue.append(nxt)
-    if len(order) != len(spec.nodes):
-        cyclic = sorted(name for name, d in indeg.items() if d > 0)
-        raise TopologyError(f"dag has a cycle through {cyclic}")
-
-    # reachability: every node must reach a sink (generalized "no
-    # dangling stage")
-    reaches: set[str] = set(sinks)
-    for name in reversed(order):
-        if any(d in reaches for d in downstream[name]):
-            reaches.add(name)
-    dangling = sorted(set(by_name) - reaches)
-    if dangling:
-        raise TopologyError(f"nodes never reach a sink: {dangling}")
-
-    return DagSpec(
-        nodes=tuple(by_name[name] for name in order),
-        sinks=sinks,
-        stream_id=spec.stream_id,
-    )
-
-
-def _leaf_names(nodes: tuple[DagNode, ...]) -> tuple[str, ...]:
-    consumed = {i for n in nodes for i in n.inputs}
-    return tuple(sorted(n.name for n in nodes if n.name not in consumed))
-
-
-def from_dict(d: dict) -> DagSpec:
-    """JSON surface: {"stream_id": "x", "sinks": ["out"],
-    "nodes": [{"name": "src", "operation": "source"},
-              {"name": "a", "operation": "adder", "inputs": ["src"]},
-              ...]}"""
-    try:
-        nodes = tuple(
-            DagNode(
-                name=str(n["name"]),
-                operation=str(n["operation"]),
-                inputs=tuple(str(i) for i in n.get("inputs", ())),
-                arg=int(n.get("arg", 1)),
-            )
-            for n in d["nodes"]
-        )
-    except KeyError as exc:
-        raise TopologyError(f"node element missing required key: {exc}") from exc
-    return validate_dag(
-        DagSpec(
-            nodes=nodes,
-            sinks=tuple(str(s) for s in d.get("sinks", ())),
-            stream_id=str(d.get("stream_id", "")),
-        )
-    )
+validate_dag = partial(validate, vocab=INT)
+from_dict = partial(read_dict, vocab=INT)
+compile_dag = partial(compile_topology, vocab=INT)
 
 
 def from_pipeline_spec(spec: PipelineSpec) -> DagSpec:
-    """Embed a linear pipeline as the equivalent chain DAG (source
-    node ``src`` + one node per stage; the last stage is the sink)."""
-    spec = validate_spec(spec)
-    nodes = [DagNode(name="src", operation=SOURCE_OP)]
-    prev = "src"
-    for st in spec.stages:
-        name = f"stage{st.stage}"
-        nodes.append(
-            DagNode(name=name, operation=st.operation, inputs=(prev,), arg=st.arg)
-        )
-        prev = name
-    return validate_dag(
-        DagSpec(nodes=tuple(nodes), sinks=(prev,), stream_id=spec.stream_id)
-    )
-
-
-def compile_dag(spec: DagSpec) -> Callable[[Mapping[str, DataFrame]], dict[str, DataFrame]]:
-    """Compile a validated DAG into a transform over source bindings.
-
-    Returns ``f({source_name: df}) -> {sink_name: df}``. Shared
-    upstream nodes are built once and reused by every consumer
-    (fan-out); ``union`` nodes merge by name so column order never
-    matters. Works on batch and streaming DataFrames alike — for
-    streaming, start one writeStream per returned sink."""
-    spec = validate_dag(spec)
-
-    def transform(sources: Mapping[str, DataFrame]) -> dict[str, DataFrame]:
-        built: dict[str, DataFrame] = {}
-        for n in spec.nodes:  # already topologically ordered
-            if n.operation == SOURCE_OP:
-                if n.name not in sources:
-                    raise TopologyError(f"no DataFrame bound for source {n.name!r}")
-                built[n.name] = sources[n.name]
-            elif n.operation == UNION_OP:
-                dfs = [built[i] for i in n.inputs]
-                out = dfs[0]
-                for other in dfs[1:]:
-                    out = out.unionByName(other)
-                built[n.name] = out
-            else:
-                built[n.name] = apply_stage(built[n.inputs[0]], n.operation, arg=n.arg)
-        return {s: built[s] for s in spec.sinks}
-
-    return transform
+    """A linear spec as its chain DAG: ``src → stage0 → … → stageN``."""
+    return chain(validate_dag(spec))

@@ -1,174 +1,25 @@
-"""Declarative pipeline spec → validated → composed DataFrame DAG
-(SURVEY.md §2-A A14/A15, §3 EP1).
-
-The reference compiles an XML topology into bash launch scripts — one
-OS process per stage×partition wired through Kafka topics
-(KafkaParser.py:121-157, CreateBash.py:2-22). Here the same topology
-compiles into ONE DataFrame transformation chain inside one query:
-inter-stage data movement becomes operator pipelining in a single JVM
-stage (no broker hop), and partition parallelism becomes Spark tasks.
-
-Validation mirrors the reference's semantic checks (same error
-conditions, engine-appropriate messages):
-
-* stages contiguous 0..N  (KafkaParser.py:149-155)
-* operation whitelist {adder, power, diff, identity}
-  (KafkaParser.py:124,136-138; Streamer.java:186-205)
-* required tags per element (KafkaParser.py:24-41,129-142)
-* positive partition/replica counts (KafkaParser.py:222-227)
-* random stream id fallback (KafkaParser.py:216-220)
-
-Infrastructure concerns the reference validates (broker sockets, jar
-paths, .properties codegen — §2-A A16) are out of engine scope:
-SparkSession + source/sink options replace them.
-"""
+"""Linear topologies over the integer stage vocabulary — the
+reference's format (KafkaParser.py:121-157) as bindings onto the one
+compiler in ``plans.topology``: a linear spec compiles as its chain
+DAG, which Catalyst folds into one projection (three adders →
+``value + 3``)."""
 
 from __future__ import annotations
 
-import random
-import xml.etree.ElementTree as ET
-from collections.abc import Callable
-from dataclasses import dataclass
+from functools import partial
 
-from pyspark.sql import DataFrame
+from kafkastreamer_spark.plans.topology import (  # noqa: F401
+    INT,
+    PipelineSpec,
+    StageSpec,
+    TopologyError,
+    compile_linear,
+    read_dict,
+    read_xml,
+    validate,
+)
 
-from kafkastreamer_spark.streaming.stages import STAGE_FUNCTIONS, apply_stage
-
-ALLOWED_OPERATIONS = tuple(STAGE_FUNCTIONS)  # adder, power, diff, identity
-
-
-@dataclass(frozen=True)
-class StageSpec:
-    stage: int
-    operation: str
-    arg: int = 1  # the reference hard-codes 1 (Streamer.java:328)
-
-
-@dataclass(frozen=True)
-class PipelineSpec:
-    stages: tuple[StageSpec, ...]
-    partitions: int = 1
-    replica: int = 1
-    stream_id: str = ""
-
-
-class TopologyError(ValueError):
-    """Invalid pipeline spec (the engine's KafkaParser ValueError)."""
-
-
-def validate_spec(spec: PipelineSpec) -> PipelineSpec:
-    """Validate and normalize a pipeline spec.
-
-    Returns a spec with stages sorted by number and a stream id
-    assigned (random 0..9999 when missing, like KafkaParser.py:216-220).
-    """
-    if not spec.stages:
-        raise TopologyError("pipeline has no stages")
-    for st in spec.stages:
-        if st.operation not in ALLOWED_OPERATIONS:
-            raise TopologyError(
-                f"operation {st.operation!r} not allowed; expected one of "
-                f"{ALLOWED_OPERATIONS}"
-            )
-    numbers = sorted(st.stage for st in spec.stages)
-    expected = list(range(len(numbers)))
-    if numbers != expected:
-        missing = sorted(set(range(max(numbers) + 1)) - set(numbers))
-        raise TopologyError(f"missing stage: {missing}")
-    if len({st.stage for st in spec.stages}) != len(spec.stages):
-        raise TopologyError("duplicate stage numbers")
-    if spec.partitions < 1:
-        raise TopologyError("partitions must be >= 1")
-    if spec.replica < 1:
-        raise TopologyError("replica must be >= 1")
-    stages = tuple(sorted(spec.stages, key=lambda s: s.stage))
-    stream_id = spec.stream_id or str(random.randint(0, 9999))
-    return PipelineSpec(
-        stages=stages,
-        partitions=spec.partitions,
-        replica=spec.replica,
-        stream_id=stream_id,
-    )
-
-
-def from_dict(d: dict) -> PipelineSpec:
-    """Build a spec from a plain dict (the JSON surface).
-
-    Shape: {"stream_id": "1996", "partitions": 2, "replica": 2,
-            "stages": [{"stage": 0, "operation": "adder"}, ...]}
-    """
-    try:
-        stages = tuple(
-            StageSpec(
-                stage=int(s["stage"]),
-                operation=str(s["operation"]),
-                arg=int(s.get("arg", 1)),
-            )
-            for s in d["stages"]
-        )
-    except KeyError as exc:
-        raise TopologyError(f"stage element missing required key: {exc}") from exc
-    return validate_spec(
-        PipelineSpec(
-            stages=stages,
-            partitions=int(d.get("partitions", 1)),
-            replica=int(d.get("replica", 1)),
-            stream_id=str(d.get("stream_id", "")),
-        )
-    )
-
-
-def parse_topology_xml(path: str) -> PipelineSpec:
-    """Read a reference-format topology XML (template.xml shape).
-
-    Accepts the reference's element layout — <Stream id> root,
-    <partition value>/<replica value>, <Streamer><stage>/<operation> —
-    and applies the same validation. Infra-only tags (<jar>, <Server>,
-    <Zookeeper>, <Topic>, <Producer>) are tolerated and ignored.
-    """
-    root = ET.parse(path).getroot()
-    if root.tag != "Stream":
-        raise TopologyError("root tag must be 'Stream'")
-
-    def attr_value(tag: str, default: int) -> int:
-        el = root.find(tag)
-        if el is None:
-            return default
-        return int(el.get("value", default))
-
-    stages = []
-    for streamer in root.iter("Streamer"):
-        props = {p.tag: (p.text or "") for p in streamer}
-        if "stage" not in props:
-            raise TopologyError("no stage tag found in 'Streamer' element")
-        if "operation" not in props:
-            raise TopologyError("no operation tag found in 'Streamer' element")
-        stages.append(StageSpec(stage=int(props["stage"]), operation=props["operation"]))
-    return validate_spec(
-        PipelineSpec(
-            stages=tuple(stages),
-            partitions=attr_value("partition", 1),
-            replica=attr_value("replica", 1),
-            stream_id=root.get("id", ""),
-        )
-    )
-
-
-def compile_pipeline(spec: PipelineSpec) -> Callable[[DataFrame], DataFrame]:
-    """Compile a validated spec into one composed DataFrame transform.
-
-    Works identically on batch and streaming DataFrames with a
-    ``value`` long column. Catalyst constant-folds the whole chain
-    into a single projection (e.g. three adders → value + 3), so a
-    k-stage topology costs one scan — where the reference pays k
-    broker round-trips and k JVMs.
-    """
-    spec = validate_spec(spec)
-
-    def transform(df: DataFrame) -> DataFrame:
-        out = df
-        for st in spec.stages:
-            out = apply_stage(out, st.operation, arg=st.arg)
-        return out
-
-    return transform
+validate_spec = partial(validate, vocab=INT)
+from_dict = partial(read_dict, vocab=INT)
+parse_topology_xml = partial(read_xml, vocab=INT)
+compile_pipeline = partial(compile_linear, vocab=INT)

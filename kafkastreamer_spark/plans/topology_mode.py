@@ -1,201 +1,57 @@
-"""Topology-compat mode: one streaming query per stage, wired through
-intermediate storage (SURVEY.md §1.3 "chained queries with Kafka
-topics between them").
+"""Node-per-query deployment of integer topologies: one checkpointed
+streaming query per stage or DAG node, wired through channels — the
+reference's deployment shape (one JVM per stage, Kafka topics between
+them; CreateBash.py:2-22, Streamer.java:89-95). Bindings onto
+``plans.topology.drain_available_now``; the two modes differ only in
+channel naming:
 
-The default engine mode compiles the whole topology into ONE query —
-strictly better (no broker hop per stage). This mode reproduces the
-reference's deployment shape instead: stage i consumes channel i and
-produces channel i+1, each stage an independently restartable query
-with its own checkpoint — the property the reference gets from one
-JVM per stage (CreateBash.py:2-22) and that operators sometimes want
-for per-stage scaling/upgrade.
-
-Channels are pluggable: Kafka topics in production (`KafkaChannels`),
-parquet directories for tests/local (`DirChannels` — same code path,
-no broker dependency).
+* linear: channel ``i`` feeds stage ``i`` (``DirChannels.path(i)`` =
+  ``stage_<id>_<i>``), checkpoints ``stage<i>``; Kafka channels
+  (``KafkaChannels``) in production, directories in tests;
+* DAG: one channel per node (``node_<id>_<name>``), checkpoints
+  ``node_<name>``.
 """
 
 from __future__ import annotations
 
-import os
-from dataclasses import dataclass
+from dataclasses import replace
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.query import StreamingQuery
-from pyspark.sql.types import StringType, StructField, StructType
-
-from kafkastreamer_spark.plans.pipeline import PipelineSpec, validate_spec
-from kafkastreamer_spark.streaming.core import stage_transform
-from kafkastreamer_spark.streaming.sources import file_source, kafka_source
-
-RECORD_SCHEMA = StructType(
-    [StructField("key", StringType()), StructField("value", StringType())]
+from kafkastreamer_spark.plans.topology import (  # noqa: F401
+    INT,
+    RECORD_SCHEMA,
+    DagSpec,
+    DirChannels,
+    KafkaChannels,
+    PipelineSpec,
+    chain,
+    drain_available_now,
+    validate,
 )
 
 
-@dataclass(frozen=True)
-class DirChannels:
-    """Parquet-directory channels (test/local mode). Channel i is
-    ``<root>/stage_<id>_<i>`` — the naming mirrors the reference's
-    ``__stage_<id>_<i>`` topics (Streamer.java:89-95)."""
-
-    root: str
-    stream_id: str
-
-    def path(self, i: int) -> str:
-        return os.path.join(self.root, f"stage_{self.stream_id}_{i}")
-
-    def read(self, spark: SparkSession, i: int) -> DataFrame:
-        return file_source(spark, self.path(i), RECORD_SCHEMA)
-
-    def writer(self, df: DataFrame, i: int, checkpoint: str):
-        return (
-            df.writeStream.format("parquet")
-            .option("path", self.path(i))
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-        )
-
-
-@dataclass(frozen=True)
-class KafkaChannels:
-    """Kafka-topic channels (production mode): topic per stage, same
-    names as the reference."""
-
-    bootstrap: str
-    stream_id: str
-
-    def topic(self, i: int) -> str:
-        return f"__stage_{self.stream_id}_{i}"
-
-    def read(self, spark: SparkSession, i: int) -> DataFrame:
-        return kafka_source(spark, self.bootstrap, self.topic(i)).select("key", "value")
-
-    def writer(self, df: DataFrame, i: int, checkpoint: str):
-        return (
-            df.selectExpr("CAST(key AS STRING) key", "CAST(value AS STRING) value")
-            .writeStream.format("kafka")
-            .option("kafka.bootstrap.servers", self.bootstrap)
-            .option("topic", self.topic(i))
-            .option("checkpointLocation", checkpoint)
-            .outputMode("append")
-        )
-
-
-def start_stage(
-    spark: SparkSession,
-    spec: PipelineSpec,
-    stage_idx: int,
-    channels,
-    checkpoint_root: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Start stage ``stage_idx`` as its own streaming query: read
-    channel i, apply the stage function, write channel i+1. The last
-    stage's output channel exists but nothing reads it (the reference
-    suppresses last-stage output entirely, Streamer.java:375-384 —
-    here it lands in the final channel as the pipeline result)."""
-    spec = validate_spec(spec)
-    st = spec.stages[stage_idx]
-    src = channels.read(spark, stage_idx)
-    out = stage_transform(src, [st.operation], quarantine=False)
-    ckpt = os.path.join(checkpoint_root, f"stage{stage_idx}")
-    writer = channels.writer(out, stage_idx + 1, ckpt)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def run_topology_available_now(
-    spark: SparkSession,
-    spec: PipelineSpec,
-    channels,
-    checkpoint_root: str,
+    spark, spec: PipelineSpec, channels, checkpoint_root: str
 ) -> None:
-    """Drain a bounded topology: run stages in order with availableNow
-    triggers (each stage processes everything upstream produced).
-    Unbounded deployments instead call start_stage for every stage
-    concurrently and let the queries run."""
-    spec = validate_spec(spec)
-    for i in range(len(spec.stages)):
-        q = start_stage(spark, spec, i, channels, checkpoint_root, available_now=True)
-        q.awaitTermination()
-
-
-# ---------------------------------------------------------------------------
-# DAG deployment mode: one streaming query per DAG node, channels per
-# node output (plans/dag.py is the single-query compilation; this is
-# the reference's process-per-stage deployment shape generalized to
-# fan-out/fan-in — a channel with several consumers IS the fan-out,
-# a union node reading several channels IS the fan-in).
-# ---------------------------------------------------------------------------
+    """Drain a bounded linear topology; the result lands in channel
+    ``len(spec.stages)``."""
+    dag = chain(validate(spec, vocab=INT))
+    index = {n.name: i for i, n in enumerate(dag.nodes)}
+    drain_available_now(
+        spark, dag, channels, checkpoint_root, vocab=INT, channel_of=index.get
+    )
 
 
 def _named_path(channels: DirChannels, name: str) -> str:
-    return os.path.join(channels.root, f"node_{channels.stream_id}_{name}")
-
-
-def start_dag_node(
-    spark: SparkSession,
-    spec,
-    node_name: str,
-    channels: DirChannels,
-    checkpoint_root: str,
-    available_now: bool = False,
-) -> StreamingQuery:
-    """Run one DAG node as its own streaming query: read the channel
-    of every input (unioned for fan-in), apply the node's stage
-    function, write the node's own channel. Source nodes have no
-    query — their channel is seeded externally (exactly like stage 0's
-    input topic in the linear mode)."""
-    from kafkastreamer_spark.plans.dag import SOURCE_OP, UNION_OP, validate_dag
-    from kafkastreamer_spark.streaming.stages import apply_stage
-
-    spec = validate_dag(spec)
-    node = next(n for n in spec.nodes if n.name == node_name)
-    if node.operation == SOURCE_OP:
-        raise ValueError(f"source node {node_name!r} is seeded, not started")
-    src = None
-    for i in node.inputs:
-        part = file_source(spark, _named_path(channels, i), RECORD_SCHEMA)
-        src = part if src is None else src.unionByName(part)
-    if node.operation != UNION_OP:
-        src = apply_stage(
-            src.withColumn("value", src["value"].cast("long")), node.operation,
-            arg=node.arg,
-        ).withColumn("value", F.col("value").cast("string"))
-    ckpt = os.path.join(checkpoint_root, f"node_{node_name}")
-    writer = (
-        src.writeStream.format("parquet")
-        .option("path", _named_path(channels, node_name))
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return replace(channels, prefix="node").path(name)
 
 
 def run_dag_available_now(
-    spark: SparkSession,
-    spec,
-    channels: DirChannels,
-    checkpoint_root: str,
+    spark, spec: DagSpec, channels: DirChannels, checkpoint_root: str
 ) -> dict[str, str]:
-    """Drain a bounded DAG topology: nodes run in topological order
-    with availableNow triggers (each consumes everything upstream
-    produced). Returns {sink name: channel path} for reading results.
-    Unbounded deployments start every node's query concurrently and
-    let micro-batches flow."""
-    from kafkastreamer_spark.plans.dag import SOURCE_OP, validate_dag
-
-    spec = validate_dag(spec)
-    for node in spec.nodes:  # topologically ordered by validate_dag
-        if node.operation == SOURCE_OP:
-            continue
-        q = start_dag_node(
-            spark, spec, node.name, channels, checkpoint_root, available_now=True
-        )
-        q.awaitTermination()
-    return {s: _named_path(channels, s) for s in spec.sinks}
+    """Drain a bounded DAG; returns {sink name: channel path}. Source
+    channels are seeded at ``_named_path(channels, source)``."""
+    nodes = replace(channels, prefix="node")
+    sinks = drain_available_now(
+        spark, spec, nodes, checkpoint_root, vocab=INT, checkpoint_prefix="node_"
+    )
+    return {s: nodes.path(k) for s, k in sinks.items()}

@@ -12,6 +12,7 @@ across engines (the DuckDB oracle runs in UTC-naive time).
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -39,8 +40,9 @@ ENGINE_CONF: dict[str, str] = {
     # A/B at sf0.1: dedup_exact 1.89->0.75 s, q2 1.94->1.41,
     # text_chunk_tokens 1.14->0.47, dedup_ngram_jaccard 2.51->1.69,
     # q3 1.25->0.83; no query measured worse at 32 or 8 cores.
-    # Static (core) conf: applied by get_spark's builder; a
-    # driver-built session can't set it at runtime (correctness is
+    # Static (core) conf: applied by get_spark's builder; a session
+    # built elsewhere can't set it at runtime, and
+    # ensure_engine_conf warns when it is missing (correctness is
     # unaffected — it only picks the writer implementation).
     "spark.shuffle.sort.bypassMergeThreshold": "1",
     # Apply AQE inside cached (persisted) plan compilation too — the
@@ -62,6 +64,10 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }
 
+
+#: ENGINE_CONF entries only a session builder can set (Spark core
+#: confs); ensure_engine_conf checks them on the running SparkContext
+STATIC_CONF = ("spark.shuffle.sort.bypassMergeThreshold",)
 
 ROCKSDB_STATE_CONF = {
     # Large streaming state (wide key spaces, long watermarks) should
@@ -113,12 +119,32 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
 
     The verification driver constructs its own SparkSession; queries
     still need UTC semantics and the nanos-as-long parquet reader.
-    Static confs (driver memory etc.) are skipped — only SQL confs are
-    applied here, and all of ENGINE_CONF's entries are SQL confs.
+    Nothing is dropped silently: a conf that cannot be set, and a
+    static conf (``STATIC_CONF``) the running SparkContext lacks, each
+    emit one RuntimeWarning per process.
     """
     for k, v in ENGINE_CONF.items():
+        if k in STATIC_CONF:
+            if spark.sparkContext.getConf().get(k) != v:
+                _warn_once(
+                    k,
+                    f"running without the static conf {k}={v}; set it when "
+                    "building the session (session.get_spark does)",
+                )
+            continue
         try:
             spark.conf.set(k, v)
-        except Exception:  # pragma: no cover - static conf on some build
-            pass
+        except Exception as exc:
+            _warn_once(k, f"could not apply engine conf {k}={v}: {exc}")
     return spark
+
+
+# confs already warned about: ensure_engine_conf runs once per query
+# (__spark_entry__.queries), and one warning per conf is enough
+_warned: set[str] = set()
+
+
+def _warn_once(key: str, message: str) -> None:
+    if key not in _warned:
+        _warned.add(key)
+        warnings.warn(message, RuntimeWarning, stacklevel=3)

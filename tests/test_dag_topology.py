@@ -98,9 +98,16 @@ def test_multi_source_fan_in(spark):
     assert _vals(out["out"]) == sorted([i + 1 for i in range(5)] + [i + 1 for i in range(3)])
 
 
-def test_linear_pipeline_parity(spark):
-    """A linear PipelineSpec embedded as a chain DAG produces the
-    identical result (and the identical folded plan shape)."""
+def test_linear_pipeline_parity(spark, sf_dir):
+    """A linear spec embedded as a chain DAG produces the identical
+    rows and the identical optimized plan shape, for both stage
+    vocabularies: the integer stages and the corpus stages."""
+    from kafkastreamer_spark.plans.corpus_dag import compile_corpus_dag
+    from kafkastreamer_spark.plans.corpus_pipeline import (
+        compile_corpus_pipeline,
+        corpus_spec_from_dict,
+    )
+
     pipe = PipelineSpec(
         stages=(StageSpec(0, "adder"), StageSpec(1, "adder"), StageSpec(2, "diff")),
         stream_id="p1",
@@ -108,14 +115,46 @@ def test_linear_pipeline_parity(spark):
     src = keyed_int_batch(spark, 100, 2).withColumn(
         "value", F.col("value").cast("long")
     )
+    ops = [("repetition_gate", -1), ("exact_dedup", -1), ("length_gate", 40)]
+    corpus_pipe = corpus_spec_from_dict(
+        {
+            "stream_id": "p2",
+            "stages": [
+                {"stage": i, "operation": op, "arg": arg}
+                for i, (op, arg) in enumerate(ops)
+            ],
+        }
+    )
+    corpus_chain = DagSpec(
+        nodes=(DagNode("docs", "source"),)
+        + tuple(
+            DagNode(f"n{i}", op, (f"n{i - 1}" if i else "docs",), arg)
+            for i, (op, arg) in enumerate(ops)
+        ),
+        sinks=(f"n{len(ops) - 1}",),
+    )
+    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+
     via_pipeline = compile_pipeline(pipe)(src)
     via_dag = compile_dag(from_pipeline_spec(pipe))({"src": src})["stage2"]
-    assert _vals(via_pipeline) == _vals(via_dag)
-    # Catalyst folds the chain identically in both forms: one Project
-    # with the same composed arithmetic ("(x + 2) - 1"), no extra nodes
+    cases = [
+        (via_pipeline, via_dag),
+        (
+            compile_corpus_pipeline(corpus_pipe)(docs),
+            compile_corpus_dag(corpus_chain)({"docs": docs})["n2"],
+        ),
+    ]
     fold = lambda df: df._jdf.queryExecution().optimizedPlan().toString()  # noqa: E731
+    for direct, chained in cases:
+        rows = sorted(repr(r) for r in direct.collect())
+        assert rows and rows == sorted(repr(r) for r in chained.collect())
+        for node in ("Project", "Window"):
+            assert fold(direct).count(node) == fold(chained).count(node)
+    # Catalyst folds the integer chain identically in both forms: one
+    # Project with the same composed arithmetic ("(x + 2) - 1")
     assert "+ 2) - 1" in fold(via_dag)
-    assert fold(via_dag).count("Project") == fold(via_pipeline).count("Project") == 1
+    assert fold(via_dag).count("Project") == 1
+    assert "Window" in fold(cases[1][0])
 
 
 @pytest.mark.parametrize(

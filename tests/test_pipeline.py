@@ -38,6 +38,12 @@ def test_validate_contiguous_stages():
         validate_spec(
             PipelineSpec(stages=(StageSpec(0, "adder"), StageSpec(2, "adder")))
         )
+    with pytest.raises(TopologyError, match="duplicate stage numbers"):
+        validate_spec(
+            PipelineSpec(
+                stages=(StageSpec(0, "adder"), StageSpec(0, "adder"), StageSpec(1, "adder"))
+            )
+        )
 
 
 def test_validate_operation_whitelist():
