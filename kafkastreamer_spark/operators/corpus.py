@@ -76,26 +76,33 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "lang", "quality_score")
         .persist()
     )
-    # Overlap independent jobs (r14, guide §2.6): the quality leg
-    # shares nothing with the pair/CC pipeline until the final join,
-    # and dedup_cluster_representatives' build below runs the CC
-    # rounds as driver-coordinated jobs anyway — so materialize the
-    # quality persist on a concurrent driver thread and let its tasks
+    # Overlap independent jobs: the quality leg shares nothing with
+    # the pair/CC pipeline until the final join, and
+    # dedup_cluster_representatives' build below runs the CC rounds as
+    # driver-coordinated jobs anyway — so materialize the quality
+    # persist on a concurrent driver thread and let its tasks
     # back-fill the CC stages' idle slots. Same per-run compute (the
     # persist is fresh per call and cleared by the caller's
     # clearCache protocol); only the serialization between the two
-    # legs is removed.
+    # legs is removed. A failure on the thread is re-raised here.
     from pyspark import InheritableThread  # noqa: PLC0415
 
-    warm = InheritableThread(
-        target=lambda: quality.write.format("noop").mode("overwrite").save(),
-        daemon=True,
-    )
+    errors: list[Exception] = []
+
+    def warm_quality() -> None:
+        try:
+            quality.write.format("noop").mode("overwrite").save()
+        except Exception as e:  # noqa: BLE001 — re-raised after join
+            errors.append(e)
+
+    warm = InheritableThread(target=warm_quality, daemon=True)
     warm.start()
     try:
         reps = dedup_cluster_representatives(spark, sf_dir)
     finally:
         warm.join()
+    if errors:
+        raise errors[0]
     keep = quality.filter(F.col("quality_score") >= MIN_QUALITY)
     return (
         keep.join(reps, "doc_id", "left")

@@ -18,11 +18,13 @@ import os
 from collections.abc import Iterator, Sequence
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.streaming.query import StreamingQuery
 
+from kafkastreamer_spark.io import table_exists
+from kafkastreamer_spark.streaming import statedir
 from kafkastreamer_spark.streaming.stages import apply_stage_chain, parse_value
 
 
@@ -136,16 +138,16 @@ def keyed_running_count_tws(stream: DataFrame) -> DataFrame:
 
 
 def to_memory_sink(
-    stream: DataFrame,
-    name: str,
-    output_mode: str = "update",
-    available_now: bool = True,
+    stream: DataFrame, name: str, output_mode: str = "update"
 ) -> StreamingQuery:
     """Memory sink for tests/inspection (bounded data only)."""
-    writer = stream.writeStream.format("memory").queryName(name).outputMode(output_mode)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
+    )
 
 
 def kafka_producer_options(
@@ -184,33 +186,19 @@ def to_kafka_sink(
 
 
 def exactly_once_parquet_sink(
-    stream: DataFrame,
-    out_dir: str,
-    checkpoint: str,
-    available_now: bool = True,
+    stream: DataFrame, out_dir: str, checkpoint: str
 ) -> StreamingQuery:
-    """Strict end-to-end exactly-once sink (SURVEY.md §4.3(2)).
-
-    The reference commits consumer offsets and produced records in one
-    Kafka transaction per record (Streamer.java:393-415). Micro-batch
-    Spark can't transact per record, but ``foreachBatch`` + a
-    batchId-keyed idempotent write gives the same end-to-end
-    guarantee at batch granularity: a replayed batch overwrites its
-    own directory instead of duplicating. Readers see each input
-    record's effect exactly once.
-    """
+    """Strict end-to-end exactly-once sink (SURVEY.md §4.3(2)): each
+    micro-batch overwrites its own ``out_dir/batch_id=N`` directory,
+    so a replayed batch replaces its earlier output instead of
+    duplicating it — the batch-granularity form of the reference's
+    per-record transaction (Streamer.java:393-415)."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         target = os.path.join(out_dir, f"batch_id={batch_id}")
-        # dynamic overwrite of this batch's partition only → replay-safe
         batch_df.write.mode("overwrite").parquet(target)
 
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return statedir.run_batches(stream, checkpoint, write_batch)
 
 
 def keyed_heavy_hitters_stateful(
@@ -279,68 +267,74 @@ def merge_upsert_sink(
     checkpoint: str,
     key_col: str = "key",
     delta_col: str = "delta",
-    available_now: bool = True,
     pre_flip_hook=None,
     post_publish_hook=None,
 ) -> StreamingQuery:
-    """Streaming CDC apply: each micro-batch merges its per-key deltas
-    into a parquet base table (read-modify-write via the same
-    full-outer-join plan as the batch merge_upsert_customers query) —
-    the foreachBatch upsert pattern that Delta/Iceberg MERGE sinks
-    run under the hood.
+    """Streaming CDC apply: the state table (``key_col``, total) is
+    the per-key sum of ``delta_col`` over every batch so far (a NULL
+    key is one key). Kept through ``statedir.fold_sink``."""
 
-    Crash posture: state is persisted through the crash-atomic
-    versioned store (streaming/statedir.py) — each batch reads the
-    current version and publishes a fresh one behind an atomic pointer
-    flip, so a mid-write crash can never lose or corrupt the totals.
-    Delta sums are NOT idempotent under replay, so the sink also skips
-    a batch whose id the pointer already records
-    (statedir.applied_batch) — exactly-once on the state table. At
-    scale the base would be key-bucketed so only buckets with changes
-    rewrite (upsert_parquet_sink's layout).
-    """
-    from kafkastreamer_spark.streaming import statedir  # noqa: PLC0415
+    def partials(batch_df: DataFrame) -> DataFrame:
+        return batch_df.groupBy(key_col).agg(F.sum(delta_col).alias("total"))
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if statedir.applied_batch(base_dir) == batch_id:
-            return  # replay of an already-published batch
-        changes = batch_df.groupBy(key_col).agg(
-            F.sum(delta_col).alias("_delta")
-        )
-        base = statedir.read_state(spark, base_dir)
-        if base is None:
-            base = changes.select(
-                key_col, F.lit(None).cast("long").alias("total")
-            ).limit(0)
-        else:
-            base = base.select(key_col, "total")
-        merged = (
-            base.alias("b")
-            .join(changes.alias("c"), key_col, "full_outer")
-            .select(
-                F.col(key_col),
-                (
-                    F.coalesce(F.col("b.total"), F.lit(0))
-                    + F.coalesce(F.col("c._delta"), F.lit(0))
-                ).alias("total"),
-            )
-        )
-        statedir.publish_state(
-            merged, base_dir, batch_id, pre_flip_hook=pre_flip_hook
-        )
-        # Crash-injection point for the flip-committed-but-checkpoint-
-        # uncommitted window: the replayed batch must be SKIPPED
-        # (applied_batch high-water mark), never re-summed.
-        if post_publish_hook is not None:
-            post_publish_hook(batch_id)
-
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    return statedir.fold_sink(
+        stream,
+        base_dir,
+        checkpoint,
+        statedir.merge_fold(partials, [key_col], {"total": F.sum}),
+        pre_flip_hook=pre_flip_hook,
+        post_publish_hook=post_publish_hook,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _bucket_upsert(
+    stream: DataFrame,
+    table_dir: str,
+    checkpoint: str,
+    bucket_cols: Sequence[str],
+    n_buckets: int,
+    recompute,
+    post_write_hook=None,
+    output_mode: str | None = None,
+) -> StreamingQuery:
+    """The bucket rewrite both upsert sinks share. Per micro-batch:
+    the batch rows are tagged with ``_bkt =
+    pmod(xxhash64(bucket_cols), n_buckets)`` (a key never changes
+    bucket); the current rows of only the affected buckets are read
+    back (partition-pruned) and unioned in; ``recompute`` reduces the
+    union to the buckets' new contents, which a dynamic partition
+    overwrite writes over the affected buckets only. ``recompute``
+    must be idempotent — a replayed batch re-reads rows it already
+    wrote. ``post_write_hook(batch_id)`` runs after the overwrite,
+    before the checkpoint commit (crash-injection point)."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        bkt = F.pmod(F.xxhash64(*bucket_cols), F.lit(n_buckets)).cast("int")
+        batch = batch_df.withColumn("_bkt", bkt)
+        affected = [r["_bkt"] for r in batch.select("_bkt").distinct().collect()]
+        if not affected:
+            return
+        rows = batch
+        # Existence probe, not a catch-all: a transient read error must
+        # fail (and retry) the batch, never rewrite the affected
+        # buckets from this batch's rows alone.
+        if table_exists(spark, table_dir):
+            current = spark.read.parquet(table_dir).filter(
+                F.col("_bkt").isin(affected)
+            )
+            rows = current.select(*batch.columns).unionByName(batch)
+        (
+            recompute(rows)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_bkt")
+            .parquet(table_dir)
+        )
+        if post_write_hook is not None:
+            post_write_hook(batch_id)
+
+    return statedir.run_batches(stream, checkpoint, write_batch, output_mode)
 
 
 def upsert_parquet_sink(
@@ -350,95 +344,36 @@ def upsert_parquet_sink(
     version_col: str,
     checkpoint: str,
     n_buckets: int = 64,
-    available_now: bool = True,
     post_write_hook=None,
     output_mode: str | None = None,
 ) -> StreamingQuery:
-    """Streaming keyed upsert (Type-1 / last-writer-wins) into a
-    hash-bucket-partitioned parquet table — the CDC-apply sink the
-    reference's state-changelog consumers would need, without a table
-    format.
-
-    ``post_write_hook(batch_id)``, if given, runs after the dynamic
-    overwrite lands but BEFORE foreachBatch returns (i.e. before the
-    checkpoint commit) — the failure-injection point for the
-    mid-commit crash test: a hook that raises simulates a driver
-    death in the window where the table already holds the batch but
-    the checkpoint does not, forcing a replay of the same batch
-    against the already-updated table
-    (tests/test_streaming_upsert_crash.py asserts convergence).
-
-    Per micro-batch (foreachBatch):
-
-    1. keys bucket by ``pmod(xxhash64(keys), n_buckets)`` — the same
-       deterministic bucketing as the engine's sampling/split
-       operators, so a key's bucket never moves;
-    2. the CURRENT rows of only the AFFECTED buckets are read back
-       (partition pruning on the bucket column — untouched buckets are
-       never scanned);
-    3. old ∪ new rank by (version desc, md5-of-row) per key, keep 1 —
-       last-writer-wins with a deterministic tie-break, so replaying
-       a batch converges to the same table (idempotent);
-    4. dynamic partition overwrite writes ONLY the affected buckets
-       (``partitionOverwriteMode=dynamic``).
-
-    Scale: per batch the work is |batch| + |current rows in affected
-    buckets|. With uniformly-hashed keys, a batch touching k distinct
-    keys rewrites at most min(k, n_buckets)/n_buckets of the table —
-    size n_buckets so a typical batch touches a small fraction (the
-    driver-side bucket list is bounded by n_buckets, never by keys).
-    The reader's view of a bucket flips atomically on the directory
-    rename inside dynamic overwrite.
-    """
+    """Streaming keyed upsert (type 1, last writer wins) into a
+    hash-bucket-partitioned parquet table: per key the row with the
+    highest ``version_col`` is kept, ties broken by the md5 of the
+    row, so a replayed batch converges to the same table. Only the
+    buckets a batch touches are rewritten (``_bucket_upsert``).
+    ``output_mode="update"`` feeds it the changed keys of a running
+    aggregation (streaming/ts_similarity.py)."""
     keys = list(key_cols)
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bkt = F.pmod(F.xxhash64(*keys), F.lit(n_buckets)).cast("int")
-        batch = batch_df.withColumn("_bkt", bkt)
-        affected = [r["_bkt"] for r in batch.select("_bkt").distinct().collect()]
-        if not affected:
-            return
-        data_cols = [c for c in batch.columns]  # includes _bkt
-        from kafkastreamer_spark.io import table_exists  # noqa: PLC0415
-
-        # Existence probe, not a catch-all: a transient read error must
-        # fail (and retry) the batch — swallowing it would dynamic-
-        # overwrite the affected buckets with only this batch's rows.
-        if table_exists(spark, table_dir):
-            current = spark.read.parquet(table_dir).filter(
-                F.col("_bkt").isin(affected)
-            )
-            merged = current.select(*data_cols).unionByName(batch.select(*data_cols))
-        else:  # first batch: table doesn't exist yet
-            merged = batch.select(*data_cols)
-        from pyspark.sql import Window  # noqa: PLC0415
-
-        tie = F.md5(F.concat_ws("\x1f", *[F.col(c).cast("string") for c in data_cols]))
+    def last_writer_wins(rows: DataFrame) -> DataFrame:
+        cells = [F.col(c).cast("string") for c in rows.columns]
+        tie = F.md5(F.concat_ws("\x1f", *cells))
         rn = F.row_number().over(
             Window.partitionBy(*keys).orderBy(F.col(version_col).desc(), tie)
         )
-        latest = merged.withColumn("_rn", rn).filter(F.col("_rn") == 1).drop("_rn")
-        (
-            latest.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bkt")
-            .parquet(table_dir)
-        )
-        if post_write_hook is not None:
-            post_write_hook(batch_id)
+        return rows.withColumn("_rn", rn).filter(F.col("_rn") == 1).drop("_rn")
 
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
+    return _bucket_upsert(
+        stream,
+        table_dir,
+        checkpoint,
+        keys,
+        n_buckets,
+        last_writer_wins,
+        post_write_hook,
+        output_mode,
     )
-    if output_mode is not None:
-        # e.g. "update" when the upstream is a running aggregation
-        # (streaming/ts_similarity.py): foreachBatch then receives
-        # only the keys whose value changed in this micro-batch.
-        writer = writer.outputMode(output_mode)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def scd2_upsert_sink(
@@ -449,90 +384,39 @@ def scd2_upsert_sink(
     ts_col: str,
     checkpoint: str,
     n_buckets: int = 64,
-    available_now: bool = True,
     post_write_hook=None,
 ) -> StreamingQuery:
-    """Streaming SCD **type-2** apply: maintain a full version-history
-    dimension table (one row per (key, value, valid_from) with
-    valid_to = next version's start, NULL while current) from a change
-    stream — the history-keeping sibling of ``upsert_parquet_sink``'s
-    type-1 last-writer-wins, and the streaming twin of the batch
-    ``events_scd2_intervals`` LEAD formulation.
+    """Streaming SCD type 2: a full version-history table (k, v,
+    valid_from, valid_to, is_current; valid_to is the next version's
+    start, NULL while current) from a change stream, the streaming
+    twin of the batch ``events_scd2_intervals``. Per affected key the
+    change events (k, v, valid_from) are deduplicated — so a replayed
+    batch adds nothing — and the intervals recomputed with one LEAD
+    window. Only the buckets a batch touches are rewritten
+    (``_bucket_upsert``)."""
 
-    Per micro-batch (foreachBatch):
-
-    1. keys bucket by ``pmod(xxhash64(key), n_buckets)`` (stable —
-       a key's history never moves buckets);
-    2. the existing VERSIONS of only the affected buckets read back
-       (partition-pruned), reduced to their underlying change events
-       (key, value, valid_from);
-    3. union with the batch's change events, exact-dedup on
-       (key, valid_from, value) — the replay guard: a re-applied batch
-       contributes no new change events, so the rebuilt history is
-       byte-identical (idempotent under the mid-commit crash window,
-       same hook contract as upsert_parquet_sink);
-    4. intervals recomputed per key with one LEAD window (ordered by
-       valid_from, value tie-break), dynamic partition overwrite
-       rewrites only the affected buckets.
-
-    Scale: per batch the work is |batch| + |versions in affected
-    buckets|; history grows per key, so at very deep histories a real
-    deployment splits current/closed rows into separate partitions
-    (closed rows are immutable — only the open tail rewrites). Window
-    partitions are per-key version chains — bounded by change rate,
-    never corpus size.
-    """
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        bkt = F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
-        changes = batch_df.select(
-            F.col(key_col).alias("k"),
-            F.col(value_col).alias("v"),
-            F.col(ts_col).alias("valid_from"),
-        ).withColumn("_bkt", F.pmod(F.xxhash64("k"), F.lit(n_buckets)).cast("int"))
-        affected = [r["_bkt"] for r in changes.select("_bkt").distinct().collect()]
-        if not affected:
-            return
-        # Explicit existence probe — NOT a bare except around the read:
-        # a transient IO error / corrupt footer must propagate and fail
-        # the batch (checkpoint retries it), never masquerade as "first
-        # batch" and dynamic-overwrite buckets with only the current
-        # batch's changes (silent history loss).
-        from kafkastreamer_spark.io import table_exists  # noqa: PLC0415
-
-        if table_exists(spark, table_dir):
-            existing = (
-                spark.read.parquet(table_dir)
-                .filter(F.col("_bkt").isin(affected))
-                .select("k", "v", "valid_from", "_bkt")
-            )
-            events = existing.unionByName(changes)
-        else:  # first batch
-            events = changes
-        events = events.dropDuplicates(["k", "valid_from", "v"])
-        from pyspark.sql import Window  # noqa: PLC0415
-
+    def history(rows: DataFrame) -> DataFrame:
+        events = rows.dropDuplicates(["k", "valid_from", "v"])
         w = Window.partitionBy("k").orderBy("valid_from", "v")
-        history = events.select(
+        return events.select(
             "k",
             "v",
             "valid_from",
             "_bkt",
             F.lead("valid_from").over(w).alias("valid_to"),
         ).withColumn("is_current", F.col("valid_to").isNull())
-        (
-            history.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_bkt")
-            .parquet(table_dir)
-        )
-        if post_write_hook is not None:
-            post_write_hook(batch_id)
 
-    writer = stream.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", checkpoint
+    changes = stream.select(
+        F.col(key_col).alias("k"),
+        F.col(value_col).alias("v"),
+        F.col(ts_col).alias("valid_from"),
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _bucket_upsert(
+        changes,
+        table_dir,
+        checkpoint,
+        ["k"],
+        n_buckets,
+        history,
+        post_write_hook,
+    )

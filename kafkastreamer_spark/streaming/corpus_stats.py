@@ -11,11 +11,9 @@ streaming twins of batch 226's planning/QA entries:
   per-source doc/token counts are additive; the schedule is a pure
   function of the maintained counts.
 
-Both persist through the crash-atomic versioned store
-(streaming/statedir.py). The merges are PLAIN ADDITION — not
-idempotent under replay — so both sinks skip a replayed batch via the
-pointer's batchId high-water mark (exactly-once on the state table),
-the same contract as merge_upsert_sink / cms_merge_sink.
+Both keep per-key BIGINT totals through ``statedir.fold_sink``
+(``statedir.merge_fold`` with ``F.sum``), the same fold as merge_upsert_sink and
+cms_merge_sink.
 
 The render helpers re-derive the EXACT batch-entry output shape from
 the maintained sums, so the twin tests assert bit-for-bit equality
@@ -32,42 +30,6 @@ from pyspark.sql.streaming import StreamingQuery
 from kafkastreamer_spark.operators._embed import tokens
 from kafkastreamer_spark.queries.relational18 import _ISO_SCALE, _MIX_BUDGET
 from kafkastreamer_spark.streaming import statedir
-
-
-def _additive_sink(
-    stream: DataFrame,
-    to_partials,
-    key_cols: list[str],
-    sum_cols: list[str],
-    state_dir: str,
-    checkpoint: str,
-    pre_flip_hook=None,
-) -> StreamingQuery:
-    """foreachBatch sink folding per-batch partial sums into a
-    persisted keyed total table: state' = groupBy(keys).sum over
-    (state ∪ partials(batch)). Addition is not replay-idempotent, so
-    a batch whose id the pointer already records is skipped."""
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if statedir.applied_batch(state_dir) == batch_id:
-            return  # replay of an already-published batch
-        partials = to_partials(batch_df)
-        current = statedir.read_state(spark, state_dir)
-        merged = partials if current is None else current.unionByName(partials)
-        totals = merged.groupBy(*key_cols).agg(
-            *[F.sum(c).cast("long").alias(c) for c in sum_cols]
-        )
-        statedir.publish_state(
-            totals.coalesce(1), state_dir, batch_id, pre_flip_hook=pre_flip_hook
-        )
-
-    return (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
 
 
 # ------------------------------------------------------------ isotropy
@@ -123,13 +85,13 @@ def maintain_isotropy_stats(
     """Keep the isotropy audit's sufficient statistics current as
     (label, embedding) rows stream in. State: labels x 64 rows of
     (s, ssq, n_vecs) — KBs regardless of corpus size."""
-    return _additive_sink(
+    return statedir.fold_sink(
         vector_stream,
-        _iso_partials,
-        ["label", "d"],
-        ["s", "ssq", "n_vecs"],
         state_dir,
         checkpoint,
+        statedir.merge_fold(
+            _iso_partials, ["label", "d"], dict.fromkeys(["s", "ssq", "n_vecs"], F.sum)
+        ),
         pre_flip_hook=pre_flip_hook,
     )
 
@@ -184,13 +146,13 @@ def maintain_mixture_schedule(
     """Keep per-source doc/token counts current as documents stream
     in; the epoch/mixture schedule re-derives from them on read.
     State: one row per source."""
-    return _additive_sink(
+    return statedir.fold_sink(
         doc_stream,
-        _mix_partials,
-        ["source"],
-        ["n_docs", "n_tokens"],
         state_dir,
         checkpoint,
+        statedir.merge_fold(
+            _mix_partials, ["source"], dict.fromkeys(["n_docs", "n_tokens"], F.sum)
+        ),
         pre_flip_hook=pre_flip_hook,
     )
 

@@ -33,6 +33,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from kafkastreamer_spark.operators._embed import dot, norm
 from kafkastreamer_spark.operators.similarity import IVF_NPROBE, TOP_K
+from kafkastreamer_spark.streaming import statedir
 
 
 def assign_to_lists(vectors: DataFrame, centroids: DataFrame) -> DataFrame:
@@ -88,12 +89,7 @@ def maintain_ivf_index(
             .parquet(os.path.join(index_dir, f"batch_id={batch_id}"))
         )
 
-    return (
-        vector_stream.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return statedir.run_batches(vector_stream, checkpoint, write_batch)
 
 
 def read_index(spark: SparkSession, index_dir: str) -> DataFrame:

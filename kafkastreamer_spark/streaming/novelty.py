@@ -32,17 +32,13 @@ of two (8 <= m): the vectorized scorer reduces the 128-bit md5-derived
 double hash modulo 2^64 before taking ``% m``, which equals exact
 integer arithmetic only when m divides 2^64.
 
-Replay/crash semantics: the bloom union is IDEMPOTENT (bitwise OR),
-so a replayed batch converges on the BITMAP without the applied-batch
-skip — but not on the parquet survivors: a replay landing after the
-pointer flip (crash between publish and checkpoint commit) would
-re-score the batch against a bloom that already contains its own
-admitted shingles, reject previously admitted docs, and overwrite
-``out_dir/batch_id=N`` with fewer survivors. ``process`` therefore
-skips the whole batch when ``statedir.applied_batch(state_dir) ==
-batch_id`` (the survivors were already written BEFORE the flip), the
-applied-batch-skip pattern documented in ``streaming/statedir.py``;
-the pre-flip window remains covered by the OR-idempotent re-merge.
+Replay/crash semantics: the gate is a ``statedir.fold_sink`` fold
+that writes the batch's survivors before returning the new bloom, so
+the survivors are on disk before the pointer flip. A batch replayed
+after the flip is skipped by the sink (re-scoring it against a bloom
+that already holds its own shingles would reject its admitted docs);
+one replayed before the flip re-scores against the old bloom and
+rewrites the same survivors.
 
 Determinism: shingle arrays come from the SAME Spark expression as
 the batch operators (no tokenizer drift); bits are double-hashed from
@@ -65,8 +61,7 @@ per-batch broadcast is unpersisted at batch end so a long-running
 stream holds one bitmap, not one per micro-batch.
 
 Reference parity note: no reference analog (keyed int streamer,
-v1/src/main/java/Stream/Streamer.java); SURVEY §2 Part-B intake
-closure (round-8 streaming-twin ratchet).
+v1/src/main/java/Stream/Streamer.java); SURVEY §2 Part-B intake.
 """
 
 from __future__ import annotations
@@ -240,19 +235,13 @@ def maintain_novelty_gate(
         )
     spark = stream.sparkSession
 
-    def process(bdf: DataFrame, batch_id: int) -> None:
-        if statedir.applied_batch(state_dir) == batch_id:
-            # Replay after the pointer flip but before the checkpoint
-            # commit: this batch's survivors were already written
-            # BEFORE the flip. Re-scoring now — against a bloom that
-            # already contains the batch's own admitted shingles —
-            # would reject them and overwrite out_dir/batch_id=N with
-            # fewer survivors. Skip; both sinks are already correct.
-            return
-        prior = read_bloom(spark, state_dir)
+    def fold(bdf: DataFrame, state, batch_id: int) -> DataFrame:
+        """Score the batch against the current bloom, write its
+        survivors, and return the bloom row OR'd with the survivors'
+        shingles."""
         bloom0 = (
-            np.frombuffer(prior, dtype=np.uint8).copy()
-            if prior is not None
+            np.frombuffer(bytes(state.collect()[0]["bloom"]), dtype=np.uint8).copy()
+            if state is not None
             else np.zeros(m_bits // 8, dtype=np.uint8)
         )
         bc = spark.sparkContext.broadcast(bloom0.tobytes())
@@ -314,21 +303,14 @@ def maintain_novelty_gate(
                     "m >= 38x the expected distinct admitted shingle "
                     "count (FP <= 1e-4 at k=4) and rebuild the state"
                 )
-            state_df = spark.createDataFrame(
+            return spark.createDataFrame(
                 [(bytearray(merged.tobytes()),)], "bloom binary"
             ).coalesce(1)
-            statedir.publish_state(
-                state_df, state_dir, batch_id, pre_flip_hook=pre_flip_hook
-            )
         finally:
             if survivors is not None:
                 survivors.unpersist()
             bc.unpersist(blocking=False)
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return statedir.fold_sink(
+        stream, state_dir, checkpoint, fold, pre_flip_hook=pre_flip_hook
     )

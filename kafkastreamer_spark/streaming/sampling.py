@@ -7,14 +7,10 @@ This is the deterministic replacement for a per-stratum streaming
 reservoir sample: ranking by a uniform hash of the id IS a uniform
 draw, but unlike an RNG reservoir the maintained set is a pure
 function of the ids seen — so the streamed result equals the batch
-operator run over the same corpus BIT-FOR-BIT (the twin test), and
-batch replay after a crash is naturally idempotent (dedup by id
-before re-rank, same envelope as streaming/similarity.py).
+operator run over the same corpus BIT-FOR-BIT (the twin test).
 
-State is the <= SOURCE_CAP x |sources| winner set itself, persisted
-through the crash-atomic versioned store (streaming/statedir.py):
-fresh version dir per batch + atomic pointer flip, so a crash at any
-instant (including mid-write) leaves a complete prior sample.
+State is the <= SOURCE_CAP x |sources| winner set itself, kept
+through ``statedir.fold_sink``.
 
 Scale: per batch the work is |delta| hashing map-side plus a
 cap-bounded rank over (state + delta) — the corpus is never
@@ -43,40 +39,27 @@ def maintain_source_cap(
 ) -> StreamingQuery:
     """Keep the per-source md5-ranked document cap current under
     streaming ingest. The stream carries (doc_id, source, ...) rows;
-    per micro-batch: hash the delta, union the current winner set,
-    dedup by doc, re-rank per source, keep ``cap``, publish a new
-    state version (atomic pointer flip; ``pre_flip_hook`` is the
-    crash-injection point, test-only)."""
+    the fold hashes the batch, unions the current winner set, dedups
+    by doc, re-ranks per source and keeps ``cap``."""
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, state, batch_id: int) -> DataFrame:
         delta = batch_df.select(
             "doc_id",
             "source",
             F.md5(F.col("doc_id").cast("string")).alias("h"),
         )
-        current = statedir.read_state(spark, state_dir)
-        merged = delta if current is None else current.unionByName(delta)
-        # Dedup by id (h is a pure function of the id) BEFORE ranking:
-        # replaying a batch whose docs the state already holds re-ranks
-        # to the same winner set — idempotent under the crash window.
+        merged = delta if state is None else state.unionByName(delta)
         deduped = merged.dropDuplicates(["source", "doc_id"])
         w = Window.partitionBy("source").orderBy("h", "doc_id")
-        winners = (
+        return (
             deduped.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") <= cap)
             .drop("_rk")
             .coalesce(1)  # cap x |sources| rows by construction
         )
-        statedir.publish_state(
-            winners, state_dir, batch_id, pre_flip_hook=pre_flip_hook
-        )
 
-    return (
-        doc_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return statedir.fold_sink(
+        doc_stream, state_dir, checkpoint, fold, pre_flip_hook=pre_flip_hook
     )
 
 

@@ -5,16 +5,7 @@ arrive, the per-query top-k is updated from (current top-k) union
 (delta scores) only, never by rescanning the corpus.
 
 State is the k x |queries| result table itself — tiny by construction
-— persisted through the crash-atomic versioned store
-(streaming/statedir.py): each batch reads the current version, writes
-a FRESH version dir, then atomically flips the pointer, so a crash at
-any instant (including mid-write) leaves a complete prior state and
-replay converges. Replay after a crash in the window between pointer
-flip and checkpoint commit also converges because the update is
-idempotent: scores are deterministic functions of the vectors, the
-union is deduplicated by (query, neighbor) before re-ranking, so
-re-applying a batch whose scores the state already contains re-ranks
-to the same table.
+— kept through ``statedir.fold_sink``.
 
 Contract: vectors are immutable — a vec_id is never re-emitted with a
 different embedding. The pair-dedup keeps max(c) per
@@ -46,23 +37,15 @@ def maintain_topk(
     """Keep the per-query top-k current as vectors stream in.
 
     ``queries_df`` is the static query set (query_id, qv as double
-    array); the stream carries (vec_id, embedding, ...) rows. Per
-    micro-batch: score the delta against the broadcast queries, union
-    the current state, dedup by pair, re-rank, keep k, publish a new
-    state version (atomic pointer flip — see statedir.publish_state;
-    ``pre_flip_hook`` is its crash-injection point, test-only).
-
-    Scale: per batch the work is |delta| x |queries| map-side scoring
-    plus a k-bounded window over (state + delta) — the corpus is never
-    rescanned, exactly the incremental contract the batch entry's
-    oracle proves equal to the full rescan. Because the new version is
-    written to a fresh dir, the plan streams executor-side end to end
-    (no driver materialization of the state).
+    array); the stream carries (vec_id, embedding, ...) rows. The fold
+    scores the batch against the broadcast queries, unions the
+    current state, dedups by pair, re-ranks and keeps k — per batch
+    |delta| x |queries| scoring plus a k-bounded window, never a
+    corpus rescan.
     """
     q = queries_df.select("query_id", "qv")
 
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def fold(batch_df: DataFrame, state, batch_id: int) -> DataFrame:
         delta = batch_df.select(
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -74,31 +57,21 @@ def maintain_topk(
             F.col("vec_id").alias("neighbor_id"),
             cosine(F.col("qv"), F.col("v")).alias("c"),
         )
-        current = statedir.read_state(spark, state_dir)
-        merged = scores if current is None else current.unionByName(scores)
-        # Dedup by pair (scores are deterministic and vectors immutable,
-        # so max == the one value) BEFORE ranking: this is what makes
-        # batch replay after a crash idempotent instead of
-        # double-counting a neighbor.
+        merged = scores if state is None else state.unionByName(scores)
+        # scores are deterministic and vectors immutable: max == the one value
         deduped = merged.groupBy("query_id", "neighbor_id").agg(
             F.max("c").alias("c")
         )
         w = Window.partitionBy("query_id").orderBy(F.desc("c"), "neighbor_id")
-        topk = (
+        return (
             deduped.withColumn("_rk", F.row_number().over(w))
             .filter(F.col("_rk") <= k)
             .drop("_rk")
             .coalesce(1)  # k x |queries| rows by construction
         )
-        statedir.publish_state(
-            topk, state_dir, batch_id, pre_flip_hook=pre_flip_hook
-        )
 
-    return (
-        vector_stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return statedir.fold_sink(
+        vector_stream, state_dir, checkpoint, fold, pre_flip_hook=pre_flip_hook
     )
 
 

@@ -1,17 +1,11 @@
-"""Streaming sketch maintenance: Count-Min cells merged per micro-batch.
+"""Streaming sketch maintenance and stateful per-key detectors.
 
-The CMS built in ``operators/sketches.py`` merges by cell-wise
-addition, which makes it the natural streaming aggregate: each
-micro-batch contributes its own d×w cell table and the sink folds it
-into a persistent base with one tiny full-outer join. State is
-permanently bounded at d*w rows — unlike the reference's exact per-key
-Map state, which grows with key cardinality forever
+The Count-Min, HyperLogLog and KLL sinks keep one sketch as a
+``statedir.fold_sink`` state table, merged per micro-batch: CMS cells
+add (d*w rows, kilobytes), HLL and KLL sketches union (one row). State
+stays bounded whatever the stream volume — unlike the reference's
+exact per-key Map state, which grows with key cardinality
 (v1/src/main/java/Stream/Streamer.java:323-344).
-
-The same foreachBatch read-merge-swap pattern as
-``streaming.core.merge_upsert_sink``; at scale the base is d*w rows
-(kilobytes) regardless of stream volume, so the merge is driver-cheap
-and the only real work is each batch's map-side partial aggregation.
 """
 
 from __future__ import annotations
@@ -21,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from kafkastreamer_spark.operators.sketches import CMS_DEPTH, CMS_WIDTH
+from kafkastreamer_spark.streaming import statedir
 
 
 def cms_cells(df: DataFrame, key_col: str) -> DataFrame:
@@ -50,53 +45,32 @@ def cms_merge_sink(
     base_dir: str,
     checkpoint: str,
     key_col: str,
-    available_now: bool = True,
     pre_flip_hook=None,
     post_publish_hook=None,
 ) -> StreamingQuery:
-    """Maintain a persistent Count-Min sketch over a stream: per
-    micro-batch, build the batch's cells and add them into the parquet
-    base cell-wise (full-outer join + coalesced sum). Cell addition is
-    not idempotent under replay, so the sink persists through the
-    crash-atomic versioned store (streaming/statedir.py) and skips a
-    batch whose id the pointer already records — exactly-once on the
-    cell table, crash-safe at any instant including mid-write."""
-    from kafkastreamer_spark.streaming import statedir  # noqa: PLC0415
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if statedir.applied_batch(base_dir) == batch_id:
-            return  # replay of an already-published batch
-        batch_cells = cms_cells(batch_df, key_col)
-        base = statedir.read_state(spark, base_dir)
-        if base is None:
-            base = batch_cells.limit(0)
-        else:
-            base = base.select("d", "bucket", "cell")
-        merged = (
-            base.alias("b")
-            .join(batch_cells.alias("c"), ["d", "bucket"], "full_outer")
-            .select(
-                "d",
-                "bucket",
-                (
-                    F.coalesce(F.col("b.cell"), F.lit(0))
-                    + F.coalesce(F.col("c.cell"), F.lit(0))
-                ).alias("cell"),
-            )
-        )
-        statedir.publish_state(
-            merged, base_dir, batch_id, pre_flip_hook=pre_flip_hook
-        )
-        if post_publish_hook is not None:
-            post_publish_hook(batch_id)
-
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    """Maintain a persistent Count-Min sketch over a stream: the state
+    (d, bucket, cell) is the cell-wise sum of every batch's
+    ``cms_cells``. Kept through ``statedir.fold_sink``."""
+    return statedir.fold_sink(
+        stream,
+        base_dir,
+        checkpoint,
+        statedir.merge_fold(
+            lambda batch_df: cms_cells(batch_df, key_col),
+            ["d", "bucket"],
+            {"cell": F.sum},
+        ),
+        pre_flip_hook=pre_flip_hook,
+        post_publish_hook=post_publish_hook,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+
+
+def _sketch_fold(batch_agg, merge_agg):
+    """One-row sketch state (sk): each batch aggregates into a sketch
+    with ``batch_agg`` and ``merge_agg`` unions it into the state."""
+    return statedir.merge_fold(
+        lambda batch_df: batch_df.agg(batch_agg.alias("sk")), [], {"sk": merge_agg}
+    )
 
 
 def hll_merge_sink(
@@ -104,53 +78,21 @@ def hll_merge_sink(
     base_dir: str,
     checkpoint: str,
     key_col: str,
-    available_now: bool = True,
     pre_flip_hook=None,
     post_publish_hook=None,
 ) -> StreamingQuery:
-    """Maintain a persistent HyperLogLog distinct-count sketch over a
-    stream — the cardinality companion of ``cms_merge_sink``
-    (frequency) and ``kll_merge_sink`` (quantiles), completing the
-    streaming sketch family: per micro-batch, aggregate the batch's
-    keys into an HLL sketch (``hll_sketch_agg``, Apache DataSketches)
-    and fold it into the persisted binary sketch with
-    ``hll_union_agg`` (HLL union is idempotent AND associative, but
-    the binary sketch still double-counts nothing only at the SET
-    level — re-unioning a batch is a no-op by HLL semantics, which
-    makes this the one merge sink whose fold is NATURALLY replay-
-    idempotent; the applied-batch skip is kept anyway for symmetry
-    and to avoid the re-read). Crash posture identical to the other
-    two: crash-atomic versioned store, skip on replayed batchId.
-
-    Scale: state is one sketch row (KBs at lgConfigK=12) regardless
-    of stream cardinality — the exact use case the reference's
-    unbounded per-key Map state cannot serve
-    (v1/src/main/java/Stream/Streamer.java:323-344)."""
-    from kafkastreamer_spark.streaming import statedir  # noqa: PLC0415
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if statedir.applied_batch(base_dir) == batch_id:
-            return  # replay of an already-published batch
-        batch_sk = batch_df.agg(F.hll_sketch_agg(key_col).alias("sk"))
-        base = statedir.read_state(spark, base_dir)
-        if base is None:
-            merged = batch_sk
-        else:
-            both = base.select("sk").unionByName(batch_sk)
-            merged = both.agg(F.hll_union_agg("sk").alias("sk"))
-        statedir.publish_state(
-            merged, base_dir, batch_id, pre_flip_hook=pre_flip_hook
-        )
-        if post_publish_hook is not None:
-            post_publish_hook(batch_id)
-
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    """Maintain a persistent HyperLogLog distinct-count sketch of
+    ``key_col`` (``hll_sketch_agg`` per batch, ``hll_union_agg`` into
+    the state). State is one sketch row (KBs at lgConfigK=12)
+    whatever the stream's cardinality."""
+    return statedir.fold_sink(
+        stream,
+        base_dir,
+        checkpoint,
+        _sketch_fold(F.hll_sketch_agg(key_col), F.hll_union_agg),
+        pre_flip_hook=pre_flip_hook,
+        post_publish_hook=post_publish_hook,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def rate_limit_stateful(
@@ -262,7 +204,7 @@ def sliding_distinct_pairs(
 ) -> DataFrame:
     """Streaming half of the rolling-window COUNT(DISTINCT) — the
     stateful twin of the batch ``events_wau_sliding``
-    (queries/relational11.py), closing round-3 verdict item #6.
+    (queries/relational11.py).
 
     A sliding distinct count is non-mergeable, so no watermark window
     aggregate computes it. The decomposition mirrors the batch side:
@@ -383,51 +325,22 @@ def kll_merge_sink(
     base_dir: str,
     checkpoint: str,
     value_col: str,
-    available_now: bool = True,
     pre_flip_hook=None,
     post_publish_hook=None,
 ) -> StreamingQuery:
-    """Maintain a persistent KLL quantile sketch over a stream — the
-    quantile companion to ``cms_merge_sink``'s frequency sketch: per
-    micro-batch, aggregate the batch's values into a KLL sketch
-    (``kll_sketch_agg_double``) and fold it into the persisted binary
-    sketch with ``kll_merge_agg_double`` (DataSketches merge is
-    associative, so incremental maintenance is sound). Unlike the CMS
-    cells, a KLL sketch's internal state depends on compaction
-    randomness — consumers must assert quantiles within the sketch's
-    rank-error bound, never bit-equality (the test does exactly
-    that). Sketch folds are not idempotent under replay, so the sink
-    persists through the crash-atomic versioned store
-    (streaming/statedir.py) and skips a batch whose id the pointer
-    already records — exactly-once on the sketch, crash-safe at any
-    instant including mid-write."""
-    from kafkastreamer_spark.streaming import statedir  # noqa: PLC0415
-
-    def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if statedir.applied_batch(base_dir) == batch_id:
-            return  # replay of an already-published batch
-        batch_sk = batch_df.agg(
-            F.kll_sketch_agg_double(value_col).alias("sk")
-        )
-        base = statedir.read_state(spark, base_dir)
-        if base is None:
-            merged = batch_sk
-        else:
-            both = base.select("sk").unionByName(batch_sk)
-            merged = both.agg(F.kll_merge_agg_double("sk").alias("sk"))
-        statedir.publish_state(
-            merged, base_dir, batch_id, pre_flip_hook=pre_flip_hook
-        )
-        if post_publish_hook is not None:
-            post_publish_hook(batch_id)
-
-    writer = stream.writeStream.foreachBatch(apply_batch).option(
-        "checkpointLocation", checkpoint
+    """Maintain a persistent KLL quantile sketch of ``value_col``
+    (``kll_sketch_agg_double`` per batch, ``kll_merge_agg_double``
+    into the state). A KLL sketch's bytes depend on compaction
+    randomness: compare quantiles within its rank-error bound, never
+    bit-equality."""
+    return statedir.fold_sink(
+        stream,
+        base_dir,
+        checkpoint,
+        _sketch_fold(F.kll_sketch_agg_double(value_col), F.kll_merge_agg_double),
+        pre_flip_hook=pre_flip_hook,
+        post_publish_hook=post_publish_hook,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def alarm_hysteresis_stateful(

@@ -153,10 +153,10 @@ def run_eos_smoke(spark, channel, src_dir: str, ckpt: str, n: int) -> dict:
     from kafkastreamer_spark.streaming.sources import file_source
 
     stream = file_source(spark, src_dir, RECORD_SCHEMA)
-    q = exactly_once_sink(stream, channel, ckpt, available_now=True)
+    q = exactly_once_sink(stream, channel, ckpt)
     q.awaitTermination()
     # replay the same produce (simulated at-least-once duplicate)
-    q2 = exactly_once_sink(stream, channel, ckpt + "_replay", available_now=True)
+    q2 = exactly_once_sink(stream, channel, ckpt + "_replay")
     q2.awaitTermination()
     raw = channel.read_all(spark)
     deduped = exactly_once_view(raw)

@@ -137,6 +137,7 @@ def test_statedir_pre_flip_crash_keeps_old_state(spark, tmp_path):
 def _cdc_input(spark, tmp_path, name="cdc_in"):
     src = str(tmp_path / name)
     rows = [(f"k{i % 5}", i) for i in range(100)]
+    rows += [(None, 1), (None, 60)]  # a NULL key in both batches
     df = spark.createDataFrame(rows, ["key", "delta"])
     # two files -> two micro-batches with max_files_per_trigger=1
     df.filter(F.col("delta") < 50).coalesce(1).write.mode("append").parquet(src)
@@ -217,6 +218,44 @@ def test_merge_upsert_replay_after_flip_not_double_applied(spark, tmp_path):
     q.awaitTermination(180)
     got = {r["key"]: r["total"] for r in statedir.read_state(spark, base).collect()}
     assert got == want  # replayed batch 1 skipped, not re-summed
+
+
+def test_fresh_checkpoint_on_existing_state_raises(spark, tmp_path):
+    """Deleting the checkpoint but not the state dir restarts batch
+    ids at 0; the sink must refuse the pairing instead of skipping the
+    new batch 0 as a replay."""
+    import shutil
+
+    from kafkastreamer_spark.streaming.core import merge_upsert_sink
+
+    schema = StructType(
+        [StructField("key", StringType()), StructField("delta", LongType())]
+    )
+    base, ckpt = str(tmp_path / "base"), str(tmp_path / "ckpt")
+
+    def run(name, rows):
+        src = str(tmp_path / name)
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+        return merge_upsert_sink(
+            file_source(spark, src, schema, fmt="parquet"),
+            base,
+            ckpt,
+            delta_col="delta",
+        )
+
+    run("in1", [("a", 1), ("b", 2)]).awaitTermination(180)
+    assert statedir.applied_batch(base) == 0
+
+    shutil.rmtree(ckpt)
+    q = run("in2", [("a", 10), ("c", 5)])
+    with pytest.raises(Exception, match="fresh checkpoint was paired"):  # noqa: PT011
+        q.awaitTermination(180)
+    try:
+        q.stop()
+    except Exception:
+        pass
+    got = {r["key"]: r["total"] for r in statedir.read_state(spark, base).collect()}
+    assert got == {"a": 1, "b": 2}
 
 
 # ----------------------------------------------------------- cms_merge_sink
