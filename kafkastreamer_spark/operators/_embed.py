@@ -9,7 +9,9 @@ engine-specific hash.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 HEX = "0123456789abcdef"
@@ -36,16 +38,84 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def coarse_centroids(ep: DataFrame) -> DataFrame:
+    """The IVF coarse quantizer's centroids: every step-th vector of
+    ``ep`` (vec_id, v, nv) as (cent_id, cv, ncv), with
+    step = n div floor(sqrt(n)) (at least 1), so about sqrt(n) lists.
+    The stride is a one-row relation inside the plan, so building the
+    plan runs no job."""
+    params = ep.agg(F.count(F.lit(1)).alias("cnt")).select(
+        F.expr(
+            "greatest(CAST(1 AS BIGINT), cnt div greatest(CAST(1 AS BIGINT),"
+            " CAST(floor(sqrt(CAST(cnt AS DOUBLE))) AS BIGINT)))"
+        ).alias("step")
+    )
+    return (
+        ep.crossJoin(F.broadcast(params))
+        .filter(F.col("vec_id") % F.col("step") == 0)
+        .select(
+            F.col("vec_id").alias("cent_id"),
+            F.col("v").alias("cv"),
+            F.col("nv").alias("ncv"),
+        )
+    )
+
+
+def nearest_centroids(
+    rows: DataFrame,
+    centroids: DataFrame,
+    id: str,
+    score: Callable[[Column], Column],
+    n: int = 1,
+    best: str = "min",
+) -> DataFrame:
+    """Each row's best ``n`` centroids, picked map-side: the centroid
+    table is collected into one broadcast row, and every row ranks
+    that array in place, so the row side never shuffles.
+
+    ``score(c)`` gives a row's score against one centroid; ``c`` is a
+    struct of the centroid table's columns and row columns are
+    referenced by name. ``best`` is "min" (distances) or "max"
+    (similarities); "max" needs a numeric ``id``. Ties go to the
+    lowest ``id``. Returns the row columns plus ``id`` and ``score``;
+    when ``n > 1``, one row per pick with ``rank`` 1..n (fewer when
+    there are fewer centroids). For ``n = 1`` an empty centroid table
+    gives a NULL ``id``."""
+    tie = (lambda c: c[id]) if best == "min" else (lambda c: -c[id])
+    ranked = F.transform(
+        "_cents",
+        lambda c: F.struct(
+            score(c).alias("score"), tie(c).alias("tie"), c[id].alias(id)
+        ),
+    )
+    if n == 1:
+        pick = F.array_min(ranked) if best == "min" else F.array_max(ranked)
+        top = F.array(pick)
+    else:
+        top = F.slice(F.sort_array(ranked, asc=best == "min"), 1, n)
+    cents = centroids.agg(
+        F.collect_list(F.struct(*centroids.columns)).alias("_cents")
+    )
+    # The picks are a generator's output, so a filter on the returned
+    # id (e.g. the IS NOT NULL a join on it infers) stays above the
+    # pick instead of being pushed below it as a second evaluation.
+    return (
+        rows.crossJoin(F.broadcast(cents))
+        .select(*rows.columns, F.posexplode(top).alias("_pos", "_best"))
+        .select(
+            *rows.columns,
+            F.col("_best")[id].alias(id),
+            F.col("_best.score").alias("score"),
+            *([(F.col("_pos") + 1).alias("rank")] if n > 1 else []),
+        )
+    )
+
+
 def hyperplane_bucket(n_planes: int, v: Column | str = "v") -> Column:
     """Sign-bucket string over ``n_planes`` md5-derived random
-    hyperplanes, computed per row (r13, guide §2.4): one nested
-    transform over p = 0..n_planes-1 folding dot(plane_p, v). The
-    previous idiom — crossJoin with a plane table + groupBy(vec_id, v)
-    reassembling signs with array_sort(collect_list(...)) — exchanged
-    an n_planes×-exploded copy of every vector and hashed the full
-    64-double array as a group key; this form has zero exchanges and
-    produces bit-identical buckets (same md5 plane derivation, same
-    sign expression, same p order)."""
+    hyperplanes, computed per row: one nested transform over
+    p = 0..n_planes-1 folding dot(plane_p, v), so there is no
+    exchange and no plane table."""
     vc = v if isinstance(v, Column) else F.col(v)
 
     def _proj(p: Column) -> Column:

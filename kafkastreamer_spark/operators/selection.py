@@ -20,10 +20,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafkastreamer_spark.operators._embed import SQL_TOKENS, dot, norm, tokens
+from kafkastreamer_spark.operators._embed import (
+    SQL_TOKENS,
+    coarse_centroids,
+    dot,
+    norm,
+    tokens,
+)
 from kafkastreamer_spark.operators.dedup import COSINE_DUP_THRESHOLD
 from kafkastreamer_spark.operators.sampling import hash_bucket, sql_hash_bucket
-from kafkastreamer_spark.operators.similarity import _SQL_EMB, _sql_cos
+from kafkastreamer_spark.operators.similarity import _SQL_EMB, _sql_cos, ivf_assign
 from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table, widen
 
@@ -206,58 +212,14 @@ def text_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Coarse-quantizer assignment shared by the SemDeDup family:
     ~sqrt(n) deterministic centroids (the ``similarity_ivf_probe``
-    scheme), nearest-centroid via map-side argmax over broadcast
+    scheme), nearest-centroid picked map-side against the broadcast
     centroids. Returns (vec_id, v, nv, cent_id), persisted — callers
     self-join it."""
     e = widen(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
     ep = e.select("vec_id", "v", norm(F.col("v")).alias("nv")).persist()
-    # r14 (ADVICE r13, as similarity_ivf_probe): centroid stride from a
-    # one-row params relation inside the plan instead of a build-time
-    # driver e.count() — plan-only consumers no longer run a scan job.
-    params = ep.agg(F.count(F.lit(1)).alias("cnt")).select(
-        F.expr(
-            "greatest(CAST(1 AS BIGINT), cnt div greatest(CAST(1 AS BIGINT),"
-            " CAST(floor(sqrt(CAST(cnt AS DOUBLE))) AS BIGINT)))"
-        ).alias("step")
-    )
-    # r13 (guide §2.4): the previous form crossJoined every vector
-    # with the broadcast centroid table and took the argmax with a
-    # groupBy(vec_id) — re-shuffling every (v, nv) payload through an
-    # exchange just to pick a centroid id. The argmax is a pure
-    # per-row function of the broadcast centroids, so fold it
-    # map-side: collapse the centroids to ONE broadcast row holding
-    # an array of (cent_id, cv, ncv) structs and take
-    # array_max(transform(...)) per vector — zero exchanges, the
-    # literal "map-side argmax over broadcast centroids" this
-    # docstring always promised. array_max uses the same struct
-    # ordering as the old max(struct) aggregate (cc desc, then
-    # -cent_id), so assignments are bit-identical.
-    cents = (
-        ep.crossJoin(F.broadcast(params))
-        .filter(F.col("vec_id") % F.col("step") == 0)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("v").alias("cv"),
-            F.col("nv").alias("ncv"),
-        )
-        .agg(F.collect_list(F.struct("cent_id", "cv", "ncv")).alias("cents"))
-    )
-    best = F.array_max(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                (dot(F.col("v"), c["cv"]) / (F.col("nv") * c["ncv"])).alias("cc"),
-                (-c["cent_id"]).alias("nc"),
-            ),
-        )
-    )
-    return (
-        ep.crossJoin(F.broadcast(cents))
-        .select("vec_id", "v", "nv", (-best["nc"]).alias("cent_id"))
-        .persist()  # self-joined by every caller
-    )
+    return ivf_assign(ep, coarse_centroids(ep)).persist()
 
 
 def _cluster_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -319,9 +281,9 @@ def dedup_semdedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     and for every vector that duplicates a lower-id clustermate the
     lowest-id such neighbor is reported as the kept representative.
 
-    Scale shape: assignment is the IVF map-side-argmax (broadcast
-    centroids, one row per vector shuffled); the pair join shuffles
-    on cent_id only, so candidate volume is Σ_k C(n_k, 2) ≈ n·sqrt(n)
+    Scale shape: assignment is the IVF map-side pick against the
+    broadcast centroids (no shuffle of the corpus); the pair join
+    shuffles on cent_id only, so candidate volume is Σ_k C(n_k, 2) ≈ n·sqrt(n)
     for balanced clusters — the SemDeDup paper's reason for
     clustering first. Skewed clusters are the known failure mode at
     scale; the mitigation is raising n_cent (centroid count is a

@@ -9,10 +9,16 @@ Ranking ties break on neighbor id.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafkastreamer_spark.operators._embed import cosine, dot, norm
+from kafkastreamer_spark.operators._embed import (
+    coarse_centroids,
+    cosine,
+    dot,
+    nearest_centroids,
+    norm,
+)
 from kafkastreamer_spark.registry import REGISTRY, register
 from kafkastreamer_spark.tables import load_table
 
@@ -161,92 +167,70 @@ def similarity_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     every step-th vector), nearest-centroid assignment, query probes
     its 2 closest lists, exact re-rank within probed lists.
 
-    Scale: search cost drops from n per query to nprobe·(n/n_cent);
-    the assignment shuffle partitions the corpus by centroid — the
-    same layout a real IVF index materializes once and reuses. A
-    k-means trainer can replace the centroid choice without changing
-    the query plan. Two 10x-corpus-measured design points:
-    n_cent ∝ sqrt(n) keeps assignment at O(n^1.5) (a fixed stride was
-    O(n²/stride): 97-stride assignment went superlinear at 10x), and
-    per-side norms are computed ONCE and PERSISTED — without the
+    Scale: search cost drops from n per query to nprobe·(n/n_cent).
+    Assignment and probing are map-side picks against the centroids
+    collected into one broadcast row; the probed-list join broadcasts
+    the |queries|·nprobe probe rows. A k-means trainer can replace the
+    centroid choice without changing the query plan. n_cent ∝ sqrt(n)
+    keeps assignment at O(n^1.5) (a fixed stride is O(n²/stride)).
+    Per-side norms are computed once and persisted: without the
     persist barrier Catalyst's project-collapse inlines the norm back
-    into the join and re-evaluates it per (vector, centroid) pair
-    (measured 2.4x slower; cosine = 3 array folds per pair instead
-    of 1). The division order dot/(nv·ncv) with nv=sqrt(dot(a,a))
-    matches the oracle's expression exactly, so scores stay
-    bit-identical.
+    into the join and re-evaluates it per (vector, centroid) pair.
+    The division order dot/(nv·ncv) with nv=sqrt(dot(a,a)) matches
+    the oracle's expression exactly, so scores stay bit-identical.
     """
-    e = _emb(spark, sf_dir)
-    # norms materialized once per side: corpus persists (reused by the
-    # assignment and the re-rank), the ~sqrt(n)-row centroid side too.
-    ep = e.select("vec_id", "v", norm(F.col("v")).alias("nv")).persist()
-    # r14 (ADVICE r13): the centroid stride used to come from a
-    # DRIVER-side e.count() at DataFrame-BUILD time, so every caller —
-    # including plan-only consumers like the 541-plan audit — ran a
-    # full-scan Spark job just to construct the plan. The stride is
-    # now the same integer arithmetic over a one-row broadcast params
-    # relation (exactly the oracle's params CTE), evaluated inside the
-    # plan. Only the params fold moved — the measured max(struct)
-    # argmax below is unchanged (the r13 revert bundled both; this is
-    # the individually-measured half).
-    params = ep.agg(F.count(F.lit(1)).alias("cnt")).select(
-        F.expr(
-            "greatest(CAST(1 AS BIGINT), cnt div greatest(CAST(1 AS BIGINT),"
-            " CAST(floor(sqrt(CAST(cnt AS DOUBLE))) AS BIGINT)))"
-        ).alias("step")
-    )
-    cp = (
-        ep.crossJoin(F.broadcast(params))
-        .filter(F.col("vec_id") % F.col("step") == 0)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("v").alias("cv"),
-            F.col("nv").alias("ncv"),
-        )
-        .persist()
-    )
-    # argmax via max(struct(score, -cent_id)) aggregation: partial
-    # (map-side) aggregation shuffles one row per vector, where a
-    # row_number window would shuffle the full n x n_centroids score
-    # matrix (measured 2.5x slower at sf0.1).
-    assign = (
-        ep.crossJoin(F.broadcast(cp))
-        .select(
-            "vec_id",
-            "v",
-            "nv",
-            "cent_id",
-            (dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv"))).alias("cc"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max(F.struct(F.col("cc"), (-F.col("cent_id")).alias("nc"))).alias("m"),
-            F.first("v").alias("v"),
-            F.first("nv").alias("nv"),
-        )
-        .select("vec_id", "v", "nv", (-F.col("m.nc")).alias("cent_id"))
-    )
-    q = ep.filter(F.col("vec_id") < N_QUERIES).select(
+    ep, cp = _ivf_inputs(spark, sf_dir)
+    probes = ivf_probes(_ivf_queries(ep), cp, IVF_NPROBE)
+    return ivf_rerank(ivf_assign(ep, cp), probes)
+
+
+def _cos_to(v: str, nv: str):
+    """Cosine from row columns (v, nv) to a centroid struct (cv, ncv),
+    in the oracle's expression order."""
+    return lambda c: dot(F.col(v), c["cv"]) / (F.col(nv) * c["ncv"])
+
+
+def _ivf_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """The corpus with norms (vec_id, v, nv) and its coarse centroids
+    (cent_id, cv, ncv), both persisted."""
+    ep = _emb(spark, sf_dir).select("vec_id", "v", norm(F.col("v")).alias("nv"))
+    ep = ep.persist()
+    return ep, coarse_centroids(ep).persist()
+
+
+def _ivf_queries(ep: DataFrame) -> DataFrame:
+    return ep.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("v").alias("qv"),
         F.col("nv").alias("qnv"),
     )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("qc"), "cent_id")
-    probes = (
-        q.crossJoin(F.broadcast(cp))
-        .select(
-            "query_id",
-            "qv",
-            "qnv",
-            "cent_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qnv") * F.col("ncv"))).alias("qc"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= IVF_NPROBE)
-        .select("query_id", "qv", "qnv", "cent_id")
-    )
+
+
+def ivf_assign(ep: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, v, nv, cent_id): every vector's nearest list by
+    cosine, ties to the lowest cent_id. ``cents``: (cent_id, cv, ncv)."""
+    return nearest_centroids(
+        ep, cents, "cent_id", _cos_to("v", "nv"), best="max"
+    ).drop("score")
+
+
+def ivf_probes(queries: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, qv, qnv, cent_id[, rank]): each query's ``nprobe``
+    nearest lists (``rank`` when nprobe > 1). ``queries``:
+    (query_id, qv, qnv)."""
+    return nearest_centroids(
+        queries, cents, "cent_id", _cos_to("qv", "qnv"), n=nprobe, best="max"
+    ).drop("score")
+
+
+def ivf_rerank(lists: DataFrame, probes: DataFrame, k: int = TOP_K) -> DataFrame:
+    """Exact top-``k`` within the probed lists: ``lists`` (vec_id, v,
+    nv, cent_id) joined to ``probes`` on cent_id, ranked by cosine
+    then neighbor id → (query_id, neighbor_id, cosine4, rank)."""
     scored = (
-        assign.join(F.broadcast(probes), "cent_id")
+        lists.join(
+            F.broadcast(probes.select("query_id", "qv", "qnv", "cent_id")), "cent_id"
+        )
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -257,7 +241,7 @@ def similarity_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     w_rank = Window.partitionBy("query_id").orderBy(F.desc("c"), "neighbor_id")
     return (
         scored.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= TOP_K)
+        .filter(F.col("rank") <= k)
         .select(
             "query_id",
             "neighbor_id",
@@ -378,10 +362,10 @@ def embedding_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     list_dot_product), combined in one fixed expression order, so the
     argmin — ties to the lowest code — matches the oracle exactly.
 
-    Scale shape: the codebook (4 codes × 4 subspaces) broadcasts; the
-    16-way candidate fan-out is map-side only, and the argmin is a
-    vec-local window over 4 rows — no shuffle touches the full
-    embedding table until the final 16-group histogram."""
+    Scale shape: the 4-code codebook broadcasts as one row and each
+    (vector, subspace) row picks its code map-side
+    (``nearest_centroids``) — no shuffle touches the full embedding
+    table until the final 16-group histogram."""
     e = _emb(spark, sf_dir)
     cent = (
         e.filter(F.col("vec_id") < 4)
@@ -394,26 +378,12 @@ def embedding_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s",
         F.slice("v", F.col("s") * 16 + 1, 16).alias("xs"),
     )
-    pairs = sub.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "s",
-        "code",
-        F.slice("cv", F.col("s") * 16 + 1, 16).alias("cs"),
-        "xs",
-    )
-    from kafkastreamer_spark.operators._embed import dot
 
-    d2 = (
-        dot(F.col("xs"), F.col("xs"))
-        - 2 * dot(F.col("xs"), F.col("cs"))
-        + dot(F.col("cs"), F.col("cs"))
-    )
-    w = Window.partitionBy("vec_id", "s").orderBy("d2", "code")
-    best = (
-        pairs.select("vec_id", "s", "code", d2.alias("d2"))
-        .select("vec_id", "s", "code", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") == 1)
-    )
+    def d2(c: Column) -> Column:
+        xs, cs = F.col("xs"), F.slice(c["cv"], F.col("s") * 16 + 1, 16)
+        return dot(xs, xs) - 2 * dot(xs, cs) + dot(cs, cs)
+
+    best = nearest_centroids(sub, cent, "code", d2)
     return (
         best.groupBy(F.col("s").alias("subspace"), "code")
         .agg(
@@ -860,7 +830,7 @@ def embedding_matryoshka_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- batch 203: IVF nprobe -> recall tuning curve -----------------------------
+# --- IVF nprobe -> recall tuning curve ---------------------------------------
 
 _NPROBE_LEVELS = (1, 2, 4, 8)
 
@@ -960,79 +930,27 @@ def similarity_nprobe_recall_curve(spark: SparkSession, sf_dir: str) -> DataFram
     real index tuning sweeps the curve: recall rises with nprobe
     while scanned volume grows ~linearly, and the knee is the
     config). Probe ranks are computed ONCE up to max(nprobe) and each
-    level filters rn <= nprobe, so the sweep costs one extra column,
+    level filters rank <= nprobe, so the sweep costs one extra column,
     not four re-searches; recall and volume are exact BIGINT ratios.
 
-    Scale shape: centroid assignment is the persisted map-side argmax
-    of similarity_ivf_probe (one row per vector shuffles); the level
+    Scale shape: centroid assignment and probing are the map-side
+    picks of similarity_ivf_probe (no shuffle of the corpus); the level
     lattice multiplies only the PROBE table (|queries|·max_nprobe
     rows, broadcast); candidate scoring stays bounded by
     nprobe·(n/√n) per query per level. The brute-force truth is the
     |queries|·n scan the curve exists to amortize — at 100 TB it runs
     on a held-out calibration slice exactly as here (N_QUERIES
     queries), never the full corpus."""
-    e = _emb(spark, sf_dir)
-    ep = e.select("vec_id", "v", norm(F.col("v")).alias("nv")).persist()
-    # stride from a one-row broadcast params relation, not a build-time
-    # driver count() — see similarity_ivf_probe (same oracle CTE).
-    params = ep.agg(F.count(F.lit(1)).alias("cnt")).select(
-        F.expr(
-            "greatest(CAST(1 AS BIGINT), cnt div greatest(CAST(1 AS BIGINT),"
-            " CAST(floor(sqrt(CAST(cnt AS DOUBLE))) AS BIGINT)))"
-        ).alias("step")
-    )
-    cp = (
-        ep.crossJoin(F.broadcast(params))
-        .filter(F.col("vec_id") % F.col("step") == 0)
-        .select(
-            F.col("vec_id").alias("cent_id"),
-            F.col("v").alias("cv"),
-            F.col("nv").alias("ncv"),
-        )
-        .persist()
-    )
-    assign = (
-        ep.crossJoin(F.broadcast(cp))
-        .select(
-            "vec_id",
-            "v",
-            "nv",
-            "cent_id",
-            (dot(F.col("v"), F.col("cv")) / (F.col("nv") * F.col("ncv"))).alias("cc"),
-        )
-        .groupBy("vec_id")
-        .agg(
-            F.max(F.struct(F.col("cc"), (-F.col("cent_id")).alias("nc"))).alias("m"),
-            F.first("v").alias("v"),
-            F.first("nv").alias("nv"),
-        )
-        .select("vec_id", "v", "nv", (-F.col("m.nc")).alias("cent_id"))
-    )
-    q = ep.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nv").alias("qnv"),
-    )
-    w_probe = Window.partitionBy("query_id").orderBy(F.desc("qc"), "cent_id")
-    prober = (
-        q.crossJoin(F.broadcast(cp))
-        .select(
-            "query_id",
-            "qv",
-            "qnv",
-            "cent_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qnv") * F.col("ncv"))).alias("qc"),
-        )
-        .withColumn("rn", F.row_number().over(w_probe))
-        .filter(F.col("rn") <= max(_NPROBE_LEVELS))
-        .select("query_id", "qv", "qnv", "cent_id", "rn")
-    )
+    ep, cp = _ivf_inputs(spark, sf_dir)
+    assign = ivf_assign(ep, cp)
+    q = _ivf_queries(ep)
+    prober = ivf_probes(q, cp, max(_NPROBE_LEVELS))
     levels = spark.createDataFrame(
         [(p,) for p in _NPROBE_LEVELS], "nprobe long"
     )
     probes_l = (
         prober.crossJoin(F.broadcast(levels))
-        .filter(F.col("rn") <= F.col("nprobe"))
+        .filter(F.col("rank") <= F.col("nprobe"))
         .select("nprobe", "query_id", "qv", "qnv", "cent_id")
     )
     cand = (

@@ -25,7 +25,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kafkastreamer_spark.operators._embed import SQL_TOKENS, dot, norm, tokens
+from kafkastreamer_spark.operators._embed import (
+    SQL_TOKENS,
+    dot,
+    nearest_centroids,
+    norm,
+    tokens,
+)
 from kafkastreamer_spark.queries._util import SCALE, fixed
 from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table, widen
@@ -257,24 +263,20 @@ def _sql_assign_cte() -> str:
     """
 
 
+def _l2_d4(c: Column) -> Column:
+    """Fixed-point squared L2 distance from row column ``v`` to the
+    centroid vector ``c.cv``."""
+    diff = F.zip_with(F.col("v"), c["cv"], lambda x, y: x - y)
+    return F.floor(dot(diff, diff) * SCALE).cast("long")
+
+
 def _assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, v, cluster, d4): nearest-centroid assignment. The
-    K-way distance eval is a broadcast cross join (K rows) + per-pair
-    fold — a pure map stage; the argmin is a K-row window per vector."""
-    e = _vecs(spark, sf_dir)
+    """(vec_id, v, cluster, d4): each vector's nearest of the K
+    md5-derived centroids, ties to the lower cluster id."""
     cl = spark.range(KMEANS_K).select(F.col("id").cast("int").alias("c"))
-    diff = F.zip_with(F.col("v"), _centroid(F.col("c")), lambda x, y: x - y)
-    dists = e.crossJoin(F.broadcast(cl)).select(
-        "vec_id",
-        "v",
-        "c",
-        F.floor(dot(diff, diff) * SCALE).cast("long").alias("d4"),
-    )
-    w = Window.partitionBy("vec_id").orderBy("d4", "c")
-    return (
-        dists.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "v", F.col("c").alias("cluster"), "d4")
+    cents = cl.select("c", _centroid(F.col("c")).alias("cv"))
+    return nearest_centroids(_vecs(spark, sf_dir), cents, "c", _l2_d4).select(
+        "vec_id", "v", F.col("c").alias("cluster"), F.col("score").alias("d4")
     )
 
 
@@ -290,14 +292,12 @@ def embedding_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means assignment step: each embedding to its nearest of
     {KMEANS_K} deterministic (md5-derived) centroids by squared L2 —
     the clustering primitive behind diversity sampling and IVF
-    coarse quantization (similarity.py reuses the same shape).
+    coarse quantization.
 
-    Scale shape: centroids broadcast; distance eval is map-side; the
-    only shuffle is the per-vector argmin window (K rows per vector;
-    at 100 TB replace with a map-side min_by struct compare — kept as
-    the window form here so the oracle checks an independent
-    strategy). Distances compare in fixed point so ties break
-    identically across engines."""
+    Scale shape: the K centroids collect into one broadcast row and
+    each vector picks its nearest map-side (``nearest_centroids``);
+    the vectors' only exchange is the output sort. Distances compare
+    in fixed point so ties break identically across engines."""
     return (
         _assign(spark, sf_dir).select("vec_id", "cluster", "d4").orderBy("vec_id")
     )
@@ -480,22 +480,9 @@ def embedding_kmeans_two_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: s["m"],
         ).alias("cv")
     )
-    diff = F.zip_with(F.col("v"), F.col("cv"), lambda x, y: x - y)
-    d2 = (
-        a1.select("vec_id", "v")
-        .crossJoin(F.broadcast(cent2))
-        .select(
-            "vec_id",
-            "c2",
-            F.floor(dot(diff, diff) * SCALE).cast("long").alias("d4"),
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy("d4", "c2")
-    assign2 = (
-        d2.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", F.col("c2").alias("cluster"), "d4")
-    )
+    assign2 = nearest_centroids(
+        a1.select("vec_id", "v"), cent2, "c2", _l2_d4
+    ).select("vec_id", F.col("c2").alias("cluster"), F.col("score").alias("d4"))
     return (
         assign2.groupBy("cluster")
         .agg(

@@ -1,4 +1,4 @@
-"""Round-9 batch 230: multi-source BFS reach, exact nearest-centroid
+"""Multi-source BFS reach, exact nearest-centroid
 classification report, greedy facility-location selection.
 
 * ``graph_bfs_distance_histogram`` — 3-round multi-source BFS over the
@@ -23,9 +23,10 @@ these belong to the SURVEY §2 Part-B graph/ML/LLM-data closure.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkastreamer_spark.operators._embed import nearest_centroids
 from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table, widen
 
@@ -246,14 +247,14 @@ def ml_nearest_centroid_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     folds when needed.
 
     All-integer distances mean no floating-point tie ambiguity: the
-    argmin is a deterministic (d2, label) first() on both engines.
+    argmin is a deterministic (d2, label) pick on both engines.
 
     Scale shape: centroid building is a posexplode to (label, dim)
     partial sums — map-side combine collapses to |labels| x 64 rows
-    before the exchange; the 10-row centroid table broadcasts; scoring
-    streams the corpus once computing |labels| integer fold distances
-    per vector map-side; the confusion rollup is count-only. No
-    vector pair join anywhere.
+    before the exchange; the 10-row centroid table broadcasts as one
+    row; ``nearest_centroids`` picks each vector's label map-side from
+    |labels| integer fold distances; the confusion rollup is
+    count-only. No vector pair join anywhere.
     """
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -281,22 +282,16 @@ def ml_nearest_centroid_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("c")
         )
     )
-    scored = e.crossJoin(F.broadcast(cent)).select(
-        "vec_id",
-        "label",
+    pred = nearest_centroids(
+        e,
+        cent,
         "clabel",
-        F.aggregate(
-            F.zip_with("q", "c", lambda a, b: (a - b) * (a - b)),
+        lambda c: F.aggregate(
+            F.zip_with("q", c["c"], lambda a, b: (a - b) * (a - b)),
             F.lit(0).cast("long"),
             lambda acc, x: acc + x,
-        ).alias("d2"),
-    )
-    w = Window.partitionBy("vec_id").orderBy("d2", "clabel")
-    pred = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "label", F.col("clabel").alias("plabel"))
-    )
+        ),
+    ).select("vec_id", "label", F.col("clabel").alias("plabel"))
     labels = e.select("label").distinct().select(F.col("label").alias("l"))
     conf = (
         labels.crossJoin(pred)

@@ -145,3 +145,28 @@ def test_probe_scan_is_partition_pruned(spark, sf_dir, tmp_path):
     assert scanned and scanned < full, (
         f"probe read {len(scanned)}/{len(full)} files — not pruned"
     )
+
+
+def test_empty_centroid_table_is_refused(spark, sf_dir, tmp_path):
+    """With no centroids every vector would land in no list, so the
+    index and the probe refuse an empty centroid table before any
+    query starts: no checkpoint commit, no index files."""
+    import os
+
+    import pytest
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    cents, queries = _centroids_and_queries(spark, sf_dir)
+    empty = cents.limit(0)
+    inp = str(tmp_path / "in")
+    idx, ckpt = str(tmp_path / "ivf_index"), str(tmp_path / "ckpt")
+    emb.coalesce(1).write.parquet(inp)
+
+    with pytest.raises(ValueError, match="centroid table is empty"):
+        q = maintain_ivf_index(file_source(spark, inp, emb.schema), empty, idx, ckpt)
+        q.awaitTermination(180)
+    assert not os.path.exists(os.path.join(ckpt, "commits", "0"))
+    assert not os.path.exists(idx)
+
+    with pytest.raises(ValueError, match="centroid table is empty"):
+        ivf_probe_maintained(spark, idx, queries, empty)
