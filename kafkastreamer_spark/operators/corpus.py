@@ -68,41 +68,15 @@ def pipeline_training_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (3x split(lower(text)), regexp_replace, aggregate/transform)
     # into a Filter that runs at raw-scan parallelism (ONE task on the
     # single-file fixture) and then RE-computes every feature in the
-    # projections above — measured 26 s of task time on 5,000 docs at
-    # sf0.1 (r13 SQL-node profile). Behind the barrier the score is
-    # computed once, after the scan has been parallelized.
+    # projections above — 26 s of task time on 5,000 docs at sf0.1.
+    # Behind the barrier the score is computed once, after the scan
+    # has been parallelized.
     quality = (
         quality_scores_unsorted(spark, sf_dir)
         .select("doc_id", "lang", "quality_score")
         .persist()
     )
-    # Overlap independent jobs: the quality leg shares nothing with
-    # the pair/CC pipeline until the final join, and
-    # dedup_cluster_representatives' build below runs the CC rounds as
-    # driver-coordinated jobs anyway — so materialize the quality
-    # persist on a concurrent driver thread and let its tasks
-    # back-fill the CC stages' idle slots. Same per-run compute (the
-    # persist is fresh per call and cleared by the caller's
-    # clearCache protocol); only the serialization between the two
-    # legs is removed. A failure on the thread is re-raised here.
-    from pyspark import InheritableThread  # noqa: PLC0415
-
-    errors: list[Exception] = []
-
-    def warm_quality() -> None:
-        try:
-            quality.write.format("noop").mode("overwrite").save()
-        except Exception as e:  # noqa: BLE001 — re-raised after join
-            errors.append(e)
-
-    warm = InheritableThread(target=warm_quality, daemon=True)
-    warm.start()
-    try:
-        reps = dedup_cluster_representatives(spark, sf_dir)
-    finally:
-        warm.join()
-    if errors:
-        raise errors[0]
+    reps = dedup_cluster_representatives(spark, sf_dir)
     keep = quality.filter(F.col("quality_score") >= MIN_QUALITY)
     return (
         keep.join(reps, "doc_id", "left")

@@ -37,6 +37,7 @@ from kafkastreamer_spark.operators._embed import (
     sql_shingles,
     tokens,
 )
+from kafkastreamer_spark.operators._graph import min_label_step
 from kafkastreamer_spark.registry import REGISTRY, register
 from kafkastreamer_spark.tables import load_table, widen
 
@@ -734,38 +735,23 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
     """Min-label propagation over an undirected edge list → (id,
-    rep_id) with rep = smallest doc id in the component.
+    label) with label = smallest id in the component.
 
-    ``edges`` must be unique (src, dst) pairs with src < dst — the
-    caller's pair aggregate guarantees it, and the symmetrizer below
-    relies on it to skip a dedup exchange. (Duplicate edges would not
-    change the labels — min-propagation is idempotent — only waste
-    per-round join work.)
+    ``edges`` is any (src, dst) list: duplicate, reversed and
+    self-loop edges cost join work only and never change the labels
+    (a min over a multiset of the same neighbours is the same min).
 
-    The iterative-algorithm pattern on DataFrames (Pregel-style):
-    each round joins labels to neighbors and takes the min; rounds are
-    driver-coordinated with ``localCheckpoint`` truncating lineage so
-    plan depth stays O(1) per round (at cluster scale use
+    The iterative-algorithm pattern on DataFrames (Pregel-style): each
+    round is one ``min_label_step`` over the closed edge list; rounds
+    are driver-coordinated with ``localCheckpoint`` truncating lineage
+    so plan depth stays O(1) per round (at cluster scale use
     ``checkpoint`` with a reliable dir instead). Converges in
     O(diameter) rounds — near-dup clusters are shallow.
     """
-    # materialize the edge list once — every iteration (and the
-    # convergence check) joins against it; without this the entire
-    # upstream candidate pipeline re-executes per round.
-    # Symmetrize with ONE explode instead of union(edges, edges.swap):
-    # the union referenced the (unpersisted) input twice, so the whole
-    # upstream candidate pipeline — for dedup_cluster_representatives
-    # the full n-gram Jaccard posting self-join — executed twice
-    # inside this checkpoint's job, the two branches racing the cache
-    # (r13 stage profile: every heavy stage appeared as a duplicated
-    # pair). The explode keeps a single reference: upstream runs once.
-    # No distinct on the symmetrized list (r14, guide §2.4): the input
-    # pair list is already unique with src < dst (it is the output of
-    # a (doc_a, doc_b) aggregate), so the explode's two copies cannot
-    # collide — the old distinct was a full exchange + aggregate of
-    # the edge volume for nothing. Min-label propagation is idempotent
-    # under duplicate edges anyway (duplicates cost work, never change
-    # the min), so this is purely physical.
+    # Materialize the symmetrized edge list once: every round joins
+    # against it. One explode keeps a single reference to the
+    # (unpersisted) input, so the upstream candidate pipeline runs
+    # once; a union with its swap would run it twice.
     und = (
         edges.select(
             F.explode(
@@ -781,35 +767,30 @@ def connected_components(edges: DataFrame, max_iter: int = 25) -> DataFrame:
         .localCheckpoint()
     )
     labels = (
-        und.select(F.col("src").alias("id"))
+        und.select(F.col("src").alias("node"))
         .distinct()
-        .withColumn("label", F.col("id"))
+        .withColumn("lbl", F.col("node"))
         .localCheckpoint()
     )
-    # convergence check: min-label propagation strictly DECREASES
-    # Σlabel every round until the fixpoint, so an unchanged sum IS
-    # convergence — one cheap aggregate on the just-checkpointed
-    # labels instead of the old label-vs-label join + count (same
-    # round count, one fewer join job per round). Seeding prev_sum
-    # with the initial Σid (vs None) lets an already-converged
-    # labeling — every node its own component — exit after ONE
-    # propagation round instead of two. Σlabel overflow is
-    # theoretical for these id domains (doc ids < 2^31, n < 2^31 ⇒
-    # Σ < 2^62 fits a long) and left as this comment.
-    prev_sum = labels.agg(F.sum("label")).first()[0]
+    # Close the edge list with one self-loop per node: a union of two
+    # checkpointed relations, no exchange.
+    closed = und.unionByName(
+        labels.select(F.col("node").alias("src"), F.col("node").alias("dst"))
+    )
+    # Min-label propagation strictly decreases Σlabel every round until
+    # the fixpoint, so an unchanged sum is convergence: one cheap
+    # aggregate on the just-checkpointed labels. Seeding with the
+    # initial Σid lets an already-converged labeling exit after one
+    # round. Σlabel fits a long for these id domains (ids < 2^31,
+    # n < 2^31).
+    prev_sum = labels.agg(F.sum("lbl")).first()[0]
     for _ in range(max_iter):
-        msgs = und.join(labels, und.src == labels.id).select(
-            F.col("dst").alias("id"), F.col("label")
-        )
-        new_labels = (
-            labels.unionByName(msgs).groupBy("id").agg(F.min("label").alias("label"))
-        ).localCheckpoint()
-        cur_sum = new_labels.agg(F.sum("label")).first()[0]
-        labels = new_labels
+        labels = min_label_step(closed, labels).localCheckpoint()
+        cur_sum = labels.agg(F.sum("lbl")).first()[0]
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
-    return labels
+    return labels.select(F.col("node").alias("id"), F.col("lbl").alias("label"))
 
 
 def _cluster_oracle() -> str:

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafkastreamer_spark.operators._graph import closed_edges, min_label_step
 from kafkastreamer_spark.operators.deskew import md5_ranked
 from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table
@@ -189,6 +190,28 @@ def _cc_iter_sql(prev: str, out: str) -> str:
         )"""
 
 
+def closed_part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part–supplier graph from lineitem (part nodes 2p, supplier
+    nodes 2s+1) as a closed, deduplicated (src, dst) list: both
+    directions plus one self-loop per node, hash-partitioned by src
+    and persisted for the rounds that join on it."""
+    li = load_table(spark, sf_dir, "lineitem")
+    half = li.select(
+        (F.col("l_partkey") * 2).alias("src"),
+        (F.col("l_suppkey") * 2 + 1).alias("dst"),
+    ).distinct()
+    return (
+        closed_edges(half)
+        # hash(src) satisfies the dedup aggregate's clustering on
+        # (src, dst), so dropDuplicates after the repartition plans
+        # without an exchange of its own; every round's join reuses
+        # the layout
+        .repartition(F.col("src"))
+        .dropDuplicates(["src", "dst"])
+        .persist()
+    )
+
+
 @register(
     "graph_connected_components",
     oracle=f"""
@@ -239,55 +262,12 @@ def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     side and stays hash-partitioned by src across all rounds (the
     join key never changes); only the small (node,label) relation
     reshuffles between rounds."""
-    li = load_table(spark, sf_dir, "lineitem")
-    half = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
-    # single-reference symmetrize + self-loops: the old 4-way union
-    # referenced the (unpersisted) half subtree four times, so the
-    # lineitem scan + distinct ran four times inside the edge-build
-    # job (r13 plan audit: four scan+Exchange+HashAggregate branches).
-    # One explode keeps one subtree, feeding the SAME trailing
-    # distinct the union already needed (dedup.py connected_components
-    # got the identical fix).
-    s, d = F.col("src"), F.col("dst")
-    edges = (
-        half.select(
-            F.explode(
-                F.array(
-                    F.struct(s, d),
-                    F.struct(d.alias("src"), s.alias("dst")),
-                    F.struct(s, s.alias("dst")),
-                    F.struct(d.alias("src"), d.alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        # hash-partition by the (never-changing) join key, THEN dedup
-        # (r14, guide §2.4 shared exchange): hash(src) satisfies the
-        # dedup aggregate's ClusteredDistribution([src, dst]) — rows
-        # equal on (src, dst) are equal on src — so dropDuplicates
-        # after the repartition plans WITHOUT its own exchange. The
-        # old distinct().repartition(src) order exchanged the edge
-        # volume twice (once clustered by (src,dst) for the distinct,
-        # once by src for the loop layout); this is one exchange of
-        # the same volume. Every round's join reuses the cached
-        # hash(src) layout as before, and the labels-init distinct on
-        # src is also exchange-free on it.
-        .repartition(F.col("src"))
-        .dropDuplicates(["src", "dst"])
-        .persist()  # reused every round
-    )
+    edges = closed_part_supplier_edges(spark, sf_dir)
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
     for _ in range(4):
-        labels = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lbl").alias("lbl"))
-        )
+        labels = min_label_step(edges, labels)
     return (
         labels.groupBy("lbl")
         .agg(F.count(F.lit(1)).alias("csize"))
@@ -475,41 +455,15 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation staying hash-partitioned in cache across steps.
     """
     edges = _trade_edges(spark, sf_dir)
-    # r13: single-explode symmetrize + self-loops (the CC fix applied
-    # here). The old union(edges, edges.swap) referenced the
-    # unpersisted 5-way trade-edge join TWICE, executing it once per
-    # branch inside the persist's first job; self-loops fold the
-    # "keep your own label" LEAST(own, min-neighbor) carry-over into
-    # the propagation min, so each superstep references lbl ONCE (one
-    # join + one min-agg) instead of twice (nbr build + left-join
-    # update) — linear lineage, no outer join, and min over the closed
-    # neighborhood {own} ∪ neighbors is bit-identical to the oracle's
-    # LEAST(own, COALESCE(min-neighbor, own)).
-    s, d = F.col("src"), F.col("dst")
-    sym = (
-        edges.select(
-            F.explode(
-                F.array(
-                    F.struct(s, d),
-                    F.struct(d.alias("src"), s.alias("dst")),
-                    F.struct(s, s.alias("dst")),
-                    F.struct(d.alias("src"), d.alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        .persist()
-    )
+    # The self-loops fold the oracle's LEAST(own, COALESCE(min-
+    # neighbour, own)) carry-over into the step's min over the closed
+    # neighbourhood.
+    sym = closed_edges(edges).distinct().persist()
     lbl = (
         sym.select(F.col("src").alias("node"))
         .distinct()
         .select("node", F.col("node").alias("lbl"))
     )
     for _ in range(2):
-        lbl = (
-            sym.join(F.broadcast(lbl), sym.src == lbl.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lbl").alias("lbl"))
-        )
+        lbl = min_label_step(sym, F.broadcast(lbl))
     return lbl.select("node", F.col("lbl").alias("label")).orderBy("node")

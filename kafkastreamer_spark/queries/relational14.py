@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafkastreamer_spark.operators._embed import tokens
+from kafkastreamer_spark.operators._graph import min_label_step
 from kafkastreamer_spark.operators.deskew import bucketed_row_number
 from kafkastreamer_spark.operators.sampling import sql_hash_bucket
 from kafkastreamer_spark.queries.graph import _cc_iter_sql
@@ -154,16 +155,6 @@ def orders_survival_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _er_cc_iter(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """One min-label propagation superstep over string-labelled nodes."""
-    return (
-        edges.join(labels, edges.src == labels.node)
-        .groupBy("dst")
-        .agg(F.min("lbl").alias("lbl"))
-        .select(F.col("dst").alias("node"), "lbl")
-    )
-
-
 @register(
     "er_part_entity_clusters",
     oracle=f"""
@@ -224,29 +215,7 @@ def er_part_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign by join), so no salting or capping is needed on the fact
     side at any scale."""
     p = load_table(spark, sf_dir, "part")
-    nm = (
-        p.select("p_name")
-        .distinct()
-        .select(
-            F.col("p_name").alias("name"),
-            F.element_at(F.split("p_name", " "), -1).alias("noun"),
-        )
-    )
-    a, b = nm.alias("a"), nm.alias("b")
-    edges = (
-        a.join(
-            b,
-            (F.col("a.noun") == F.col("b.noun"))
-            & (F.levenshtein(F.col("a.name"), F.col("b.name")) <= 4),
-        )
-        .select(F.col("a.name").alias("src"), F.col("b.name").alias("dst"))
-        # persist: each CC round references edges once, so the
-        # unpersisted levenshtein self-join executed 4x (r13)
-        .persist()
-    )
-    labels = nm.select(F.col("name").alias("node"), F.col("name").alias("lbl"))
-    for _ in range(4):
-        labels = _er_cc_iter(edges, labels)
+    labels = part_entities(spark, sf_dir)
     asg = p.join(
         F.broadcast(labels.select(F.col("node").alias("p_name"), "lbl")),
         "p_name",
@@ -262,6 +231,45 @@ def er_part_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("entity")
     )
+
+
+def part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct part-name vocabulary ``(name, noun)``; ``noun`` is
+    the last name token, the ER blocking key."""
+    return (
+        load_table(spark, sf_dir, "part")
+        .select("p_name")
+        .distinct()
+        .select(
+            F.col("p_name").alias("name"),
+            F.element_at(F.split("p_name", " "), -1).alias("noun"),
+        )
+    )
+
+
+def part_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part-name entity closure ``(node, lbl)``: names sharing a
+    head noun within levenshtein distance 4 are matched, then 4 fixed
+    rounds of min-label propagation label each name with the least
+    name reachable in 4 hops. The block join is non-strict, so every
+    name matches itself and the edge list is closed."""
+    nm = part_names(spark, sf_dir)
+    a, b = nm.alias("a"), nm.alias("b")
+    edges = (
+        a.join(
+            b,
+            (F.col("a.noun") == F.col("b.noun"))
+            & (F.levenshtein(F.col("a.name"), F.col("b.name")) <= 4),
+        )
+        .select(F.col("a.name").alias("src"), F.col("b.name").alias("dst"))
+        # every round joins it; unpersisted, the levenshtein self-join
+        # would run once per round
+        .persist()
+    )
+    labels = nm.select(F.col("name").alias("node"), F.col("name").alias("lbl"))
+    for _ in range(4):
+        labels = min_label_step(edges, labels)
+    return labels
 
 
 @register(
@@ -2127,8 +2135,8 @@ def nation_trade_balance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def part_substitution_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substitution-affinity audit composing two engine layers: the
-    ER entity clusters (er_part_entity_clusters' blocking + edit-
-    distance + fixed-round closure, rebuilt here label-for-label) and
+    ER entity clusters (``part_entities``, the blocking + edit-
+    distance + fixed-round closure of er_part_entity_clusters) and
     basket co-occurrence lift. For every part pair bought together in
     at least one order, lift = N·n_ab/(n_a·n_b) in exact 1e-4 fixed
     point; pairs are then split into SAME-entity (candidate
@@ -2144,29 +2152,7 @@ def part_substitution_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     dimension-sized broadcasts; the final aggregate has two groups."""
     li = load_table(spark, sf_dir, "lineitem")
     p = load_table(spark, sf_dir, "part")
-    nm = (
-        p.select("p_name")
-        .distinct()
-        .select(
-            F.col("p_name").alias("name"),
-            F.element_at(F.split("p_name", " "), -1).alias("noun"),
-        )
-    )
-    edges = (
-        nm.alias("a")
-        .join(
-            nm.alias("b"),
-            (F.col("a.noun") == F.col("b.noun"))
-            & (F.levenshtein(F.col("a.name"), F.col("b.name")) <= 4),
-        )
-        .select(F.col("a.name").alias("src"), F.col("b.name").alias("dst"))
-        # persist: each CC round references edges once, so the
-        # unpersisted levenshtein self-join executed 4x (r13)
-        .persist()
-    )
-    labels = nm.select(F.col("name").alias("node"), F.col("name").alias("lbl"))
-    for _ in range(4):
-        labels = _er_cc_iter(edges, labels)
+    labels = part_entities(spark, sf_dir)
     lab = p.join(
         F.broadcast(labels.select(F.col("node").alias("p_name"), "lbl")),
         "p_name",
@@ -4152,29 +4138,7 @@ def part_sku_rationalization(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("(10000 * n_periods) div n_active").alias("adi_fp4"),
         )
     )
-    nm = (
-        p.select("p_name")
-        .distinct()
-        .select(
-            F.col("p_name").alias("name"),
-            F.element_at(F.split("p_name", " "), -1).alias("noun"),
-        )
-    )
-    edges = (
-        nm.alias("a")
-        .join(
-            nm.alias("b"),
-            (F.col("a.noun") == F.col("b.noun"))
-            & (F.levenshtein(F.col("a.name"), F.col("b.name")) <= 4),
-        )
-        .select(F.col("a.name").alias("src"), F.col("b.name").alias("dst"))
-        # persist: each CC round references edges once, so the
-        # unpersisted levenshtein self-join executed 4x (r13)
-        .persist()
-    )
-    labels = nm.select(F.col("name").alias("node"), F.col("name").alias("lbl"))
-    for _ in range(4):
-        labels = _er_cc_iter(edges, labels)
+    labels = part_entities(spark, sf_dir)
     lab = p.join(
         F.broadcast(labels.select(F.col("node").alias("p_name"), "lbl")),
         "p_name",

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafkastreamer_spark.queries.graph import _TRADE_EDGES_SQL, _trade_edges
+from kafkastreamer_spark.queries.relational14 import part_names
 from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table
 
@@ -2028,16 +2029,7 @@ def er_blocking_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     a production linkage team calibrates blocking: exhaustively on a
     vocabulary/sample, never on the record cross product. The fact
     table is touched once, by the distinct()."""
-    p = load_table(spark, sf_dir, "part")
-    nm = (
-        p.select("p_name")
-        .distinct()
-        .select(
-            F.col("p_name").alias("name"),
-            F.element_at(F.split("p_name", " "), -1).alias("noun"),
-        )
-        .persist()  # all-pairs + blocked-pairs both read it
-    )
+    nm = part_names(spark, sf_dir).persist()  # all-pairs + blocked pairs
     a, b = nm.alias("a"), nm.alias("b")
     allp = (
         a.join(F.broadcast(b), F.col("a.name") < F.col("b.name"))

@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafkastreamer_spark.operators._embed import nearest_centroids
+from kafkastreamer_spark.queries.graph import closed_part_supplier_edges
 from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table, widen
 
@@ -104,42 +105,16 @@ def graph_bfs_distance_histogram(
     Weight-0 self-loops fold the distance carry-forward into the min
     (graph.py's self-loop discipline adapted to weighted relaxation),
     so each round references the frontier exactly ONCE — linear
-    lineage, no per-round persist needed, no outer join in the loop.
-    The r9 UNION-ALL carry-forward referenced the frontier twice per
-    round, replicating each round's subplan 2^k-fold (16.6 s at
-    sf0.01); this form is the fix. The single LEFT join (unreached
-    accounting) happens once at the end against the node set.
+    lineage, no per-round persist needed, no outer join in the loop
+    (a UNION-ALL carry-forward would reference it twice per round and
+    replicate each round's subplan 2^k-fold). The single LEFT join
+    (unreached accounting) happens once at the end against the node
+    set.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    # persisted because the plan below references it four times (both
-    # union directions, plus both again via nodes_raw): unpersisted,
-    # the lineitem scan + distinct subtree executed 4x inside the
-    # edges_w materialization job (r13 plan audit). All four readers
-    # sit in one job, so the cached RDD is a single stage — computed
-    # once, no cross-job race.
-    half = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct().persist()
-    edges = half.unionByName(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    nodes_raw = edges.select(F.col("src").alias("node")).distinct()
-    edges_w = (
-        edges.select("src", "dst", F.lit(1).alias("w"))
-        .unionByName(
-            nodes_raw.select(
-                F.col("node").alias("src"),
-                F.col("node").alias("dst"),
-                F.lit(0).alias("w"),
-            )
-        )
-        # hash-partition by the (never-changing) join key before the
-        # persist: every round's join reuses this layout, and the
-        # cached relation is session-width partitions instead of the
-        # union's 3x width (cached plans bypass AQE coalescing)
-        .repartition(F.col("src"))
-        .persist()
+    # weight 1 on every edge, 0 on the self-loops: the closed list
+    # graph_connected_components propagates over, read from one cache
+    edges_w = closed_part_supplier_edges(spark, sf_dir).select(
+        "src", "dst", (F.col("src") != F.col("dst")).cast("int").alias("w")
     )
     nodes = edges_w.filter(F.col("w") == 0).select(F.col("src").alias("node"))
     dist = nodes.filter(

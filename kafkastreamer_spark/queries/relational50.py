@@ -38,6 +38,7 @@ from kafkastreamer_spark.operators.dedup import (
     JACCARD_THRESHOLD,
     _ngram_jaccard_pairs,
 )
+from kafkastreamer_spark.queries.relational14 import part_entities
 from kafkastreamer_spark.queries.relational16 import _PER_USER_SQL, _per_user
 from kafkastreamer_spark.registry import REGISTRY, register
 from kafkastreamer_spark.tables import load_table, widen
@@ -412,8 +413,8 @@ def er_golden_record_survivorship(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Golden-record survivorship over the resolved part entities
-    (identical blocking + levenshtein match + 4-round closure as
-    er_part_entity_clusters): per entity, the canonical attributes a
+    (``part_entities``, the closure er_part_entity_clusters
+    reports on): per entity, the canonical attributes a
     master-data hub would publish — modal brand (most records;
     lexicographic tie-break), most-descriptive name (longest, then
     lexicographic), max observed price in cents, and the record
@@ -426,34 +427,8 @@ def er_golden_record_survivorship(
     assignment, then three bounded per-entity rollups (the votes
     relation is |entities × brands|).
     """
-    # rebuild the parent's assignment by calling the registered parent
-    # construction up to the entity column: reuse its Spark body via
-    # the shared registry function, then re-derive asg-equivalent rows
     p = load_table(spark, sf_dir, "part")
-    nm = (
-        p.select("p_name")
-        .distinct()
-        .select(
-            F.col("p_name").alias("name"),
-            F.element_at(F.split("p_name", " "), -1).alias("noun"),
-        )
-    )
-    a = nm.alias("a")
-    b = nm.alias("b")
-    edges = a.join(
-        b,
-        (F.col("a.noun") == F.col("b.noun"))
-        & (F.levenshtein(F.col("a.name"), F.col("b.name")) <= 4),
-    ).select(F.col("a.name").alias("src"), F.col("b.name").alias("dst"))
-    edges = edges.persist()
-    labels = nm.select(F.col("name").alias("node"), F.col("name").alias("lbl"))
-    for _ in range(4):
-        labels = (
-            edges.join(labels, edges.src == labels.node)
-            .groupBy("dst")
-            .agg(F.min("lbl").alias("lbl"))
-            .select(F.col("dst").alias("node"), "lbl")
-        )
+    labels = part_entities(spark, sf_dir)
     asg = p.join(labels, p.p_name == labels.node).select(
         F.col("lbl").alias("entity"), "p_name", "p_brand", "p_retailprice"
     )

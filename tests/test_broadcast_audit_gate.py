@@ -52,11 +52,6 @@ ALLOWLIST = {
     "embedding_kcenter_coreset",
     # literal vec_id < 20 anchor filter
     "embedding_margin_audit",
-    # every step-th vector ≈ n_centroid rows (quantizer parameter)
-    "similarity_nprobe_recall_curve",
-    # coarse-quantizer centroids: n_cent rows by construction
-    "dedup_semdedup_clustered",
-    "dedup_semdedup_threshold_sweep",
     # per-type median/MAD via window-rank (no Aggregate node): one row
     # per event_type — bounded domain
     "events_anomaly_mad",
@@ -70,14 +65,6 @@ ALLOWLIST = {
     "graph_triangle_count",
     "graph_reciprocity",
     "graph_local_clustering",
-    "graph_assortativity",
-    "graph_boruvka_round",
-    "graph_kcore_peel",
-    "graph_rich_club_ladder",
-    "graph_bipartite_projection",
-    "graph_link_prediction_jaccard",
-    "nation_copeland_ranking",
-    # round-13: same nation-graph class (3*tri/wedges on <=25 nodes)
     "graph_global_transitivity",
 }
 

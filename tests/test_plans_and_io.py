@@ -482,16 +482,20 @@ def test_pagerank_broadcasts_rank_vector(spark, sf_dir):
     edge list as a broadcast — never shuffling edges by rank key — and
     the big lineitem⋈orders edge build is the only sort-merge join.
 
-    ADVICE r13: pin the INTENDED invariants only — at least the two
-    per-iteration rank joins broadcast, and no more sort-merge joins
-    than the fact-fact edge build. The old total-BroadcastHashJoin
-    count (>= 8) also counted unhinted joins whose strategy floats
-    with auto-broadcast estimation / partition settings."""
+    Pins the intended invariants only: at least the two per-iteration
+    rank joins broadcast, no more sort-merge joins than the fact-fact
+    edge build, and the hinted customer/supplier dimension joins in
+    ``_trade_edges`` broadcast. A total BroadcastHashJoin count would
+    also count unhinted joins whose strategy floats with
+    auto-broadcast estimation / partition settings."""
     from kafkastreamer_spark.queries.graph import graph_pagerank_two_iter
 
     plan = _physical_plan(graph_pagerank_two_iter(spark, sf_dir))
     assert plan.count("BroadcastHashJoin") >= 2  # 2 iters × rank join
     assert plan.count("SortMergeJoin") <= 2  # only the fact-fact edge build
+    for key in ("c_custkey", "s_suppkey"):
+        joins = [ln for ln in plan.splitlines() if "Join" in ln and f"[{key}#" in ln]
+        assert joins and all("BroadcastHashJoin" in ln for ln in joins), (key, joins)
 
 
 def test_cooccurrence_lift_prunes_before_pairing(spark, sf_dir):
