@@ -50,10 +50,6 @@ SIMHASH_BITS = 128  # round-8 rework: was 64 (see dedup_simhash docstring)
 SIMHASH_MAX_HAMMING = 8
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return widen(load_table(spark, sf_dir, "documents"))
-
-
 # One persisted shingle DataFrame per (session, sf_dir): queries that
 # compose two near-dup pipelines (dedup_lsh_recall_audit runs the
 # ngram truth AND the minhash candidate side in one plan) would
@@ -108,7 +104,7 @@ def _shingle_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_session = _SHINGLE_MEMO.setdefault(spark, {})
     df = per_session.get(sf_dir)
     if df is None:
-        d = _docs(spark, sf_dir)
+        d = widen(load_table(spark, sf_dir, "documents"))
         df = (
             d.select("doc_id", tokens("text").alias("w"))
             .select("doc_id", shingles(F.col("w")).alias("sh"))
@@ -146,7 +142,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scale the shuffle moves 32-byte keys instead of document
     bodies, and min(doc_id) picks a deterministic representative.
     """
-    d = _docs(spark, sf_dir)
+    d = widen(load_table(spark, sf_dir, "documents"))
     content_hash = F.md5(
         F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     )
@@ -500,7 +496,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     every pair unique before the distinct — the distinct is a safety
     net, not a dedup shuffle.
     """
-    d = _docs(spark, sf_dir)
+    d = widen(load_table(spark, sf_dir, "documents"))
     # Signature build as explode + a PACKED-accumulator groupBy, all
     # primitive long arithmetic inside whole-stage codegen. The md5
     # hex splits into eight 4-hex-char (16-bit) chunks via conv() —
@@ -891,7 +887,7 @@ def dedup_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     eval-shingle document frequency in train — never |train|x|eval|.
     The shingle sets reuse _shingle_sets' persisted build."""
     sh = _shingle_sets(spark, sf_dir)
-    src = _docs(spark, sf_dir).select("doc_id", "source")
+    src = widen(load_table(spark, sf_dir, "documents")).select("doc_id", "source")
     sh_src = sh.join(src, "doc_id")
     eval_sh = (
         sh_src.filter(F.col("source") == "src0")
@@ -954,7 +950,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     rescanned from raw text); the anti-join then shuffles only hash
     keys. Within-batch first-wins is a window over the same key, so
     both decisions reuse one partitioning."""
-    d = _docs(spark, sf_dir)
+    d = widen(load_table(spark, sf_dir, "documents"))
     old_hashes = (
         d.filter(F.col("doc_id") % 10 < 8).select(F.md5("text").alias("h")).distinct()
     )

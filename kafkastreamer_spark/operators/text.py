@@ -28,10 +28,6 @@ LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
 }
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return widen(load_table(spark, sf_dir, "documents"))
-
-
 @register(
     "text_token_stats",
     oracle=f"""
@@ -52,7 +48,7 @@ def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens, distinct tokens, long-token
     ratio (fixed-point), total token chars. Single narrow scan; at
     100 TB this is embarrassingly parallel with no shuffle."""
-    d = _docs(spark, sf_dir)
+    d = widen(load_table(spark, sf_dir, "documents"))
     w = F.col("w")
     return (
         d.select("doc_id", "n_chars", tokens("text").alias("w"))
@@ -117,7 +113,7 @@ def quality_scores_unsorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     composition into downstream plans (pipeline_training_corpus feeds
     it into a join+filter and must not inherit a useless range
     exchange)."""
-    d = _docs(spark, sf_dir)
+    d = widen(load_table(spark, sf_dir, "documents"))
     w = F.col("w")
     nc = F.length("text")
     n_punct = nc - F.length(F.regexp_replace("text", "[^a-z0-9 ]", ""))
@@ -198,7 +194,7 @@ def lang_pred_expr(en, es, de, fr):
 def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stopword-hit language ID heuristic with deterministic
     preference order en>es>de>fr on ties."""
-    d = _docs(spark, sf_dir)
+    d = widen(load_table(spark, sf_dir, "documents"))
     w = F.col("w")
 
     scored = d.select("doc_id", "lang", tokens("text").alias("w")).select(
@@ -227,7 +223,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document fingerprint: md5 over the sorted distinct token set
     (order-insensitive content hash — catches word-order shuffles that
     exact-text dedup misses)."""
-    d = _docs(spark, sf_dir)
+    d = widen(load_table(spark, sf_dir, "documents"))
     fp = F.md5(F.array_join(F.array_sort(F.array_distinct(F.col("w"))), " "))
     return (
         d.select("doc_id", tokens("text").alias("w"))
@@ -277,7 +273,7 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    d = _docs(spark, sf_dir)
+    d = widen(load_table(spark, sf_dir, "documents"))
     w = F.col("w")
     grams = (
         d.select("doc_id", tokens("text").alias("w"))
@@ -402,7 +398,7 @@ def text_distinctive_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     is token-keyed (df is |vocab| rows — broadcastable for bounded
     vocabularies, left as a hash join for web-scale vocab); the
     per-doc top-3 is a window over ≤|distinct tokens per doc| rows."""
-    tok = _docs(spark, sf_dir).select(
+    tok = widen(load_table(spark, sf_dir, "documents")).select(
         "doc_id", F.explode(tokens("text")).alias("t")
     )
     tf = tok.groupBy("doc_id", "t").agg(F.count(F.lit(1)).alias("tf"))
@@ -1190,7 +1186,7 @@ def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the array form is the default because pretraining filters run on
     bounded-length chunks.
     """
-    d = _docs(spark, sf_dir)
+    d = widen(load_table(spark, sf_dir, "documents"))
     w = F.col("w")
     hapax = F.size(
         F.filter(
@@ -1258,9 +1254,8 @@ def udtf_chunk_text(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i // size, " ".join(w[i : i + size])
 
     spark.udtf.register("engine_chunk_text", _ChunkText)
-    _docs(spark, sf_dir).select("doc_id", "text").createOrReplaceTempView(
-        "_udtf_chunk_docs"
-    )
+    docs = widen(load_table(spark, sf_dir, "documents"))
+    docs.select("doc_id", "text").createOrReplaceTempView("_udtf_chunk_docs")
     return spark.sql(
         """
         SELECT d.doc_id, c.chunk_idx, c.chunk_text
@@ -1315,7 +1310,7 @@ def text_tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     zipf-distributed, and AQE's skew handling covers the stop-word
     head. The per-doc top-3 is a bounded window per document.
     """
-    d = _docs(spark, sf_dir)
+    d = widen(load_table(spark, sf_dir, "documents"))
     tok = d.select("doc_id", F.explode(tokens("text")).alias("term"))
     tf = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))

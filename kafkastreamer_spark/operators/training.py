@@ -43,10 +43,6 @@ KMEANS_K = 8
 DIM = 64
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return widen(load_table(spark, sf_dir, "documents"))
-
-
 def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return widen(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id",
@@ -84,7 +80,9 @@ def text_chunk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output rows ≈ n_tokens/stride per doc; the chunk content travels
     as a 32-byte md5, not the token text, so downstream exact-dedup
     of chunks shuffles fixed-size keys."""
-    w = _docs(spark, sf_dir).select("doc_id", tokens("text").alias("w"))
+    w = widen(load_table(spark, sf_dir, "documents")).select(
+        "doc_id", tokens("text").alias("w")
+    )
     start = F.col("chunk_idx") * CHUNK_STRIDE
     chunk = F.slice(F.col("w"), start + 1, F.lit(CHUNK_TOKENS))
     return (
@@ -139,7 +137,7 @@ def text_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-bucket from sample_stratified_hash) the same way; a single
     global ORDER BY would serialize and is deliberately avoided.
     Token counts are exact ints, so the cumsum is engine-portable."""
-    t = _docs(spark, sf_dir).select(
+    t = widen(load_table(spark, sf_dir, "documents")).select(
         "doc_id", "lang", F.size(tokens("text")).cast("long").alias("n_tok")
     )
     w = (
@@ -403,7 +401,7 @@ def text_embed_batch_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"e{j} double" for j in range(1, _EMBED_DIM + 1)
     )
     return (
-        _docs(spark, sf_dir)
+        widen(load_table(spark, sf_dir, "documents"))
         .select("doc_id", "text")
         .mapInPandas(_embed_batches, schema=schema)
         .orderBy("doc_id")

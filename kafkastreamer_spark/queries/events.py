@@ -20,10 +20,6 @@ from kafkastreamer_spark.streaming.stages import apply_stage_chain, parse_value
 from kafkastreamer_spark.tables import load_table, widen
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
 # ---------------------------------------------------------------------------
 # Reference semantics (A4-A10)
 # ---------------------------------------------------------------------------
@@ -48,7 +44,7 @@ def ref_running_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals ``groupBy(key).count()``. Keys mimic the reference source
     shape ``Key<i % partitions>`` (Producer.java:74) with P=4.
     """
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(F.concat(F.lit("Key"), (F.col("user_id") % 4).cast("string")).alias("key"))
         .groupBy("key")
@@ -75,7 +71,7 @@ def ref_stage_chain_adder(spark: SparkSession, sf_dir: str) -> DataFrame:
     String-in/string-out like the reference's Kafka payloads; the
     chain compiles to a single constant-folded projection.
     """
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     src = ev.select(
         F.concat(F.lit("Key"), (F.col("user_id") % 2).cast("string")).alias("key"),
         F.col("event_id").cast("string").alias("value"),
@@ -110,7 +106,7 @@ def ref_stage_chain_adder(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def ref_stage_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reference A4-A7: all four stage functions side by side (arg=1)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     v = F.col("event_id")
     return (
         ev.select(
@@ -141,7 +137,7 @@ def ref_stage_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON payload extraction from the ``props`` column."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(
             "event_id",
@@ -176,7 +172,7 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Identical expression works on a streaming DataFrame with
     ``withWatermark`` — see streaming core tests.
     """
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
@@ -209,7 +205,7 @@ def events_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 30 min (each event in 2 windows)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
         .agg(F.count(F.lit(1)).alias("n_events"), dsum("value", "sum_value"))
@@ -257,7 +253,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale note: one shuffle on user_id; both window passes reuse the
     same partitioning (no second exchange).
     """
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # exact microsecond gap — the oracle's INTERVAL comparison is exact,
     # so a second-truncated gap could diverge for true gaps in (1800, 1801)s
@@ -301,7 +297,7 @@ def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 def events_type_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot event_type → per-user counts (explicit value list so the
     plan is a single aggregate, no distinct-values pre-pass)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     types = ["click", "error", "purchase", "signup", "view"]
     return (
         ev.groupBy("user_id")
@@ -332,7 +328,7 @@ def events_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment join (batch form): events ⋈ customer ⋈
     nation. In streaming this is the same plan with events as a
     readStream — static sides are broadcast per micro-batch."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
     return (
@@ -376,7 +372,7 @@ def pipeline_compiled_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
             }
         )
     )
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     src = ev.select(
         F.concat(F.lit("Key"), (F.col("event_id") % 2).cast("string")).alias("key"),
         F.col("event_id").alias("value"),
@@ -425,7 +421,7 @@ def events_session_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     count view → click → purchase progressions (ordered by each
     step's first occurrence). The standard product-analytics shape:
     sessionize, pivot first-times per step, compare."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # exact microsecond gap — the oracle's INTERVAL comparison is exact,
     # so a second-truncated gap could diverge for true gaps in (1800, 1801)s
@@ -488,7 +484,7 @@ def events_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle instead of three separate scans+aggregations, and the
     partial (map-side) aggregation covers all three granularities.
     GROUPING() labels the level so downstream consumers can route."""
-    _events(spark, sf_dir).selectExpr(
+    load_table(spark, sf_dir, "events").selectExpr(
         "date_format(ts, 'yyyy-MM-dd') AS day", "hour(ts) AS hr", "value"
     ).createOrReplaceTempView("events_trunc")
     return spark.sql(
@@ -528,7 +524,7 @@ def events_mode_event_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact contract — so the engine ranks (count DESC, value ASC) and
     keeps rank 1. Two shuffles (count, then per-user window); at scale
     the window input is already tiny (groups x distinct values)."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     counts = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("user_id").orderBy(F.desc("n"), F.asc("event_type"))
     return (
@@ -573,7 +569,7 @@ def events_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, no join at any scale. The final (cohort_wk, offset_wk)
     aggregation is over a bounded key space. All date math is integer
     day arithmetic — engine-portable."""
-    ev = _events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
     return (
@@ -627,7 +623,7 @@ def events_daily_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     never on the raw events. The delta of the fixed-point sums stays
     in integer space until the final divide."""
     d = (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -682,7 +678,7 @@ def join_time_proximity_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     strategy. At 100 TB the bucket width trades shuffle fan-out (3x
     row copies on one side) against candidate density per bucket."""
     err = (
-        _events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "error")
         .select("event_id", epoch_us("ts").alias("us"))
     )
@@ -756,7 +752,7 @@ def events_value_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines derive them from identical integers, so the z-scores
     (and the ≥2.0 boundary) are bit-identical. Degenerate users
     (single event or zero variance) are filtered in integer space."""
-    f = _events(spark, sf_dir).select(
+    f = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",
         F.floor(F.col("value") * 10000).cast("long").alias("x"),

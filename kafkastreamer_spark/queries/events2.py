@@ -23,10 +23,6 @@ from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table
 
 
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
 @register(
     "events_cumulative_distinct_users",
     oracle="""
@@ -54,7 +50,7 @@ def events_cumulative_distinct_users(spark: SparkSession, sf_dir: str) -> DataFr
 
     Scale shape: one user_id-keyed shuffle with map-side min, one
     |days|-sized rollup; the window runs on ≤ thousands of rows."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     firsts = (
         ev.select("user_id", F.date_format("ts", "yyyy-MM-dd").alias("day"))
         .groupBy("user_id")
@@ -107,7 +103,7 @@ def events_interarrival_histogram(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: one user_id shuffle for the LAG sort (same
     partitioning every sessionization query already pays), then a
     6-group aggregate with map-side combine."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = epoch_us("ts")
     gaps = ev.select((us - F.lag(us).over(w)).alias("gap_us")).filter(
@@ -194,7 +190,7 @@ def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     |types|-sized median relation that broadcasts back onto the
     deviations; the final rollup is one map-side-combined aggregate.
     """
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         "event_type", "event_id", F.floor(F.col("value") * 10000).cast("long").alias("v_fp")
     )
@@ -292,7 +288,7 @@ def events_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     one event_type-partitioned sort over that collapsed relation; the
     final rollup is map-side combined.  No per-row window over raw
     events anywhere."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     nmax = ev.agg((F.max("event_id") + 1).alias("nall"))
     v = ev.crossJoin(F.broadcast(nmax)).select(
         "event_type",
@@ -359,7 +355,7 @@ def events_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one user_id-partitioned sort (rank + filter —
     TakeOrdered per group semantics), output bounded at keys×N."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return (
         ev.select(
@@ -407,7 +403,7 @@ def events_burst_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: raw events collapse to (type, hour) counts in one
     map-side-combined shuffle; the trailing frame then runs on the
     calendar-bounded hourly rollup, never the raw stream."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     hourly = (
         ev.groupBy(
             "event_type", F.date_trunc("hour", "ts").alias("hr")
@@ -478,7 +474,7 @@ def events_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         bucketed_running_agg,
     )
 
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     late = bucketed_running_agg(
         ev.select("event_id", "ts"),
         [],
@@ -547,7 +543,7 @@ def features_point_in_time_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one user_id-keyed shuffle + sort shared by every
     as-of/sessionization query on this stream; no join at all in the
     Spark plan."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -607,7 +603,7 @@ def events_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one 32-group aggregate with map-side combine — the
     report costs one scan regardless of stream size."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     bucket = (
         F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
         .cast("long")
@@ -661,7 +657,7 @@ def events_reactivation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: reuses the per-user (ts, event_id) sort every
     sessionization query pays, then a month-bounded rollup."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = epoch_us("ts")
     gaps = ev.select(
@@ -721,7 +717,7 @@ def events_error_budget_sli(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one calendar-bounded daily aggregation with map-side
     combine; running sums act on |days| rows."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("day")).agg(
         F.count(F.lit(1)).alias("n_total"),
         F.count_if(F.col("event_type") == "error").alias("n_errors"),
@@ -781,7 +777,7 @@ def events_ab_test_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: distinct users (one shuffle with map-side partial
     distinct), a LEFT SEMI join against purchase events for the flag,
     and a 2-group rollup; no per-event window anywhere."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     users = ev.select("user_id").distinct()
     bucket = F.when(
         F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
@@ -864,7 +860,7 @@ def events_pattern_match_cep(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only regex over |users| rows — no per-event state machine,
     no window.  Histories too long for a row fold would chunk by
     session first (events_sessionization) and match per session."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     seq = F.array_join(
         F.transform(
             F.array_sort(
@@ -938,7 +934,7 @@ def events_offset_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary gaps is exactly the global consecutive-pair census, so
     the result is bit-identical to the whole-table LEAD the
     mechanized plan lint banned."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     bounds = ev.agg(
         F.min("event_id").alias("lo"),
         F.max("event_id").alias("hi"),
@@ -1015,7 +1011,7 @@ def events_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one (user, type) count shuffle with map-side
     combine, a user-level rollup, and a 10-group histogram."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     per = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("c"))
     u = per.groupBy("user_id").agg(
         F.sum("c").cast("long").alias("n"),
@@ -1083,7 +1079,7 @@ def events_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one event_type-partitioned rank pass (shared with
     the percentile battery), cuts broadcast back, one
     map-side-combined rollup."""
-    ev = _events(spark, sf_dir)
+    ev = load_table(spark, sf_dir, "events")
     v = ev.select(
         "event_type",
         "event_id",

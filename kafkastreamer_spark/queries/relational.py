@@ -29,10 +29,6 @@ from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # ---------------------------------------------------------------------------
 # Flagship / TPC-H-style multi-operator queries
 # ---------------------------------------------------------------------------
@@ -64,7 +60,7 @@ def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushed to parquet; partial (map-side) aggregation on 6 groups means
     the shuffle moves ~6 rows per task regardless of input size.
     """
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     charge = disc_price * (1 + F.col("l_tax"))
     return (
@@ -114,11 +110,11 @@ def q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     on orderkey. The LIMIT after ORDER BY uses Spark's
     TakeOrderedAndProject (no full sort at scale).
     """
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = load_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15 00:00:00").cast("timestamp")
     )
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1995-03-15 00:00:00").cast("timestamp")
     )
     return (
@@ -161,15 +157,15 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation/region/supplier are broadcast; the only shuffles are
     lineitem⋈orders (orderkey) and orders⋈customer (custkey).
     """
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    l = load_table(spark, sf_dir, "lineitem")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -204,10 +200,10 @@ def q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10-style: returned-item revenue by customer, top 20."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    n = _t(spark, sf_dir, "nation")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    n = load_table(spark, sf_dir, "nation")
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -238,8 +234,8 @@ def q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi inner join orders⋈customer, aggregated by status×segment."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     return (
         o.join(c, o.o_custkey == c.c_custkey, "inner")
         .groupBy("o_orderstatus", "c_mktsegment")
@@ -261,8 +257,8 @@ def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer join: every customer with order count (0 kept)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     return (
         c.join(o, o.o_custkey == c.c_custkey, "left")
         .groupBy("c_custkey")
@@ -289,12 +285,12 @@ def join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer join of per-nation customer vs supplier counts."""
     cn = (
-        _t(spark, sf_dir, "customer")
+        load_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(F.count(F.lit(1)).alias("n_cust"))
     )
     sn = (
-        _t(spark, sf_dir, "supplier")
+        load_table(spark, sf_dir, "supplier")
         .groupBy(F.col("s_nationkey").alias("nk"))
         .agg(F.count(F.lit(1)).alias("n_supp"))
     )
@@ -322,8 +318,8 @@ def join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left semi join: customers having at least one finished order."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_semi")
         .select("c_custkey", "c_name")
@@ -343,8 +339,8 @@ def join_left_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def join_left_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left anti join: customers with no orders at all."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     return (
         c.join(o, c.c_custkey == o.o_custkey, "left_anti")
         .select("c_custkey", "c_name")
@@ -370,9 +366,9 @@ def join_broadcast_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the fact side never shuffles for these joins — both dims
     ship to every executor (BroadcastHashJoin).
     """
-    c = _t(spark, sf_dir, "customer")
-    n = F.broadcast(_t(spark, sf_dir, "nation"))
-    r = F.broadcast(_t(spark, sf_dir, "region"))
+    c = load_table(spark, sf_dir, "customer")
+    n = F.broadcast(load_table(spark, sf_dir, "nation"))
+    r = F.broadcast(load_table(spark, sf_dir, "region"))
     return (
         c.join(n, c.c_nationkey == n.n_nationkey)
         .join(r, n.n_regionkey == r.r_regionkey)
@@ -406,7 +402,7 @@ def join_range_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty bands with zero counts — same rows per band, same fixed-
     point sums, and the fact side is never widened or re-tested.
     """
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     pa = (
         p.filter((p.p_retailprice >= 0) & (p.p_retailprice < 10000))
         .groupBy((F.floor(p.p_retailprice / 500) * 500).cast("long").alias("lo"))
@@ -447,7 +443,7 @@ def join_range_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global (no grouping) aggregate battery over lineitem."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return li.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.countDistinct("l_orderkey").alias("n_orders"),
@@ -473,7 +469,7 @@ def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped exact distinct counts (expand-based in Spark)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy("o_orderpriority")
         .agg(
@@ -500,7 +496,7 @@ def agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP hierarchy over returnflag→linestatus with grand total."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(F.count(F.lit(1)).alias("n_rows"), dsum("l_quantity", "sum_qty"))
@@ -529,7 +525,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over status×priority: all 4 grouping combinations."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("n_orders"), dsum("o_totalprice", "total"))
@@ -557,7 +553,7 @@ def agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS: by-segment and by-nation in one pass."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
         SELECT COALESCE(c_mktsegment, '<all>') AS c_mktsegment,
@@ -593,7 +589,7 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANK per status partition; top 5 priciest orders per status."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderstatus").orderBy(F.desc("o_totalprice"), "o_orderkey")
     return (
         o.select("o_orderkey", "o_orderstatus", "o_totalprice", F.rank().over(w).alias("rnk"))
@@ -623,7 +619,7 @@ def window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LAG/LEAD over each customer's order history (orderdate order)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return (
         o.select(
@@ -659,7 +655,7 @@ def window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def window_running_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit ROWS frame: running lifetime spend per customer."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     frame = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     return (
@@ -694,7 +690,7 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     The canonical scale pattern: one shuffle on the group key, no
     global sort.
     """
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     w = Window.partitionBy("p_brand").orderBy(F.desc("p_retailprice"), "p_partkey")
     return (
         p.select("p_brand", "p_partkey", "p_retailprice", F.row_number().over(w).alias("rn"))
@@ -720,7 +716,7 @@ def topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-25 by price (TakeOrderedAndProject, not a full sort)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select("o_orderkey", "o_totalprice", "o_orderstatus")
         .orderBy(F.desc("o_totalprice"), "o_orderkey")
@@ -744,10 +740,10 @@ def sort_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION ALL of two keyed projections, then aggregate."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.lit("customer").alias("kind"), F.col("c_nationkey").alias("nationkey")
     )
-    s = _t(spark, sf_dir, "supplier").select(
+    s = load_table(spark, sf_dir, "supplier").select(
         F.lit("supplier").alias("kind"), F.col("s_nationkey").alias("nationkey")
     )
     return (
@@ -771,8 +767,8 @@ def setop_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT: nations having both customers and suppliers."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return c.intersect(s).orderBy("nationkey")
 
 
@@ -792,7 +788,7 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the earlier nations-without-suppliers form went empty at sf0.1 —
     every nation has suppliers there; this pair stays ~90% of the
     order-customer set at every scale)."""
-    o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("custkey"))
+    o = load_table(spark, sf_dir, "orders").select(F.col("o_custkey").alias("custkey"))
     ev = load_table(spark, sf_dir, "events").select(
         F.col("user_id").alias("custkey")
     )
@@ -822,7 +818,7 @@ def setop_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String function battery: case, substring, length, concat, replace."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return (
         p.select(
             "p_partkey",
@@ -855,7 +851,7 @@ def scalar_string(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math battery: abs/sqrt/floor/ceil/mod/div (all IEEE-exact ops)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.select(
             "l_orderkey",
@@ -888,7 +884,7 @@ def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_date(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date/time battery: extract parts, format, truncate."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select(
             "o_orderkey",
@@ -925,7 +921,7 @@ def scalar_date(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_case(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE WHEN bucketing of account balances."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     tier = (
         F.when(F.col("c_acctbal") < 0, "debt")
         .when(F.col("c_acctbal") < 3000, "low")

@@ -21,10 +21,6 @@ from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "join_fuzzy_part_names",
     oracle="""
@@ -53,7 +49,7 @@ def join_fuzzy_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both engines implement textbook Levenshtein, so the verify
     predicate is exact cross-engine.
     """
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_name", "p_brand", "p_type")
+    p = load_table(spark, sf_dir, "part").select("p_partkey", "p_name", "p_brand", "p_type")
     a = p.alias("a")
     b = p.alias("b")
     lev = F.levenshtein(F.col("a.p_name"), F.col("b.p_name"))
@@ -117,7 +113,7 @@ def orders_chisq_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the first shuffle is broadcast-sized regardless of fact
     cardinality.
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     cells = (
         o.groupBy(
             F.col("o_orderpriority").alias("p"), F.col("o_orderstatus").alias("s")
@@ -213,7 +209,7 @@ def layout_zorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines and fully whole-stage-codegen'd; the only shuffle is the
     64-key prefix groupBy, map-side combined.
     """
-    o = _t(spark, sf_dir, "orders").select(
+    o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("date"))
         .cast("long")
@@ -274,7 +270,7 @@ def events_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     by many paths). The companion string-function form is
     ``events_json_extract``.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     k = F.variant_get(F.parse_json("props"), "$.k", "long")
     return (
         ev.select(k.alias("k"))
@@ -348,7 +344,7 @@ def events_window_restatement(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of re-aggregating history; deltas join on the hour key
     (bounded rows).
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     cut = ev.agg(
         F.expr("(max(event_id) + 1) * 95 div 100").alias("c")
     )
@@ -421,7 +417,7 @@ def events_purchase_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     never payloads. (ts, event_id) is the total order — event_id alone
     is unique (fixture-canaried) and breaks timestamp ties.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     ordered = ev.select(
         "user_id",

@@ -18,10 +18,6 @@ from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table, widen
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "join_right_outer",
     oracle=f"""
@@ -37,8 +33,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 )
 def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right outer join: all nations kept, suppliers optional."""
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     return (
         s.join(n, s.s_nationkey == n.n_nationkey, "right")
         .groupBy("n_nationkey", "n_name")
@@ -65,7 +61,7 @@ def join_right_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution window functions: ntile, percent_rank, cume_dist,
     dense_rank over price within priority class."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
     return (
         o.select(
@@ -99,7 +95,7 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order array function battery over the embedding column:
     size/min/max/filter/transform+aggregate — all JVM expressions."""
-    e = widen(_t(spark, sf_dir, "embeddings")).select(
+    e = widen(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "label", F.transform("embedding", lambda x: x.cast("double")).alias("v")
     )
     l1 = F.aggregate(
@@ -130,7 +126,7 @@ def agg_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct/median would shuffle every value. No oracle — sketch
     results are engine-specific; the driver records a rows-only check,
     and the test suite bounds the estimates against exact values."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -178,7 +174,7 @@ def text_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     punctuation) via an Arrow pandas UDF, next to the JVM whitespace
     count — the UDF-surface demo with an exact oracle (integer counts
     from an identical regex)."""
-    d = widen(_t(spark, sf_dir, "documents"))
+    d = widen(load_table(spark, sf_dir, "documents"))
     bpe = _make_bpe_token_count()
     return (
         d.select(

@@ -15,10 +15,6 @@ from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table, widen
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "subquery_scalar",
     oracle=f"""
@@ -41,7 +37,7 @@ def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     produces for an uncorrelated scalar subquery (the 1-row side
     broadcasts; the fact side streams once).
     """
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     avg_price = o.agg(
         (F.sum(F.floor(F.col("o_totalprice") * 10000).cast("long")).cast("double") / 10000
          / F.count("o_totalprice")).alias("ap")
@@ -76,7 +72,7 @@ def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_string_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Extended string battery: padding, reverse, repeat, left/right,
     regexp extraction, predicates."""
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     return (
         p.select(
             "p_partkey",
@@ -111,7 +107,7 @@ def scalar_string_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scalar_date_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date arithmetic battery: datediff, interval add, add_months,
     last_day."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.select(
             "o_orderkey",
@@ -157,7 +153,7 @@ def scalar_map_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map functions: build a per-user event_type→count map
     (map_from_entries over sorted entries), then key lookups and
     map_keys — the MapType surface of the engine's data model."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     per_user = ev.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
     m = per_user.groupBy("user_id").agg(
         F.map_from_entries(
@@ -209,7 +205,7 @@ def events_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     Session start is truncated to seconds in the output (the window
     boundary carries the first event's full timestamp).
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
@@ -264,7 +260,7 @@ def udf_grouped_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     grouped pandas logic that built-ins can't express (per-group model
     fitting, custom quantization, ...): one shuffle on the group key,
     whole groups as pandas frames."""
-    e = widen(_t(spark, sf_dir, "embeddings")).select("vec_id", "label")
+    e = widen(load_table(spark, sf_dir, "embeddings")).select("vec_id", "label")
     return (
         e.groupBy("label")
         .applyInPandas(_label_stats, schema=_GROUP_STATS_SCHEMA)
@@ -290,7 +286,7 @@ def q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6-style: pure filter + global aggregate — the canonical
     scan-bound query. All four predicates push to the parquet reader;
     no shuffle beyond the single-row final aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.filter(
             (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
@@ -326,11 +322,11 @@ def q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4-style: correlated EXISTS as a left-semi join with a
     non-key predicate (l_shipdate > o_orderdate crosses the two
     tables), then priority counts."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = load_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-07-01 00:00:00").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1996-10-01 00:00:00").cast("timestamp"))
     )
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     return (
         o.join(
             l,

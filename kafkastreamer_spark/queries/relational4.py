@@ -13,10 +13,6 @@ from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table, widen
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "window_value_functions",
     oracle="""
@@ -37,7 +33,7 @@ def window_value_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     latest, and second order price (full-partition frame for the
     latter two — the default running frame would make last_value ==
     current row)."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     w_full = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     return (
@@ -67,7 +63,7 @@ def agg_string_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered string aggregation (LISTAGG semantics) via sorted
     collect_list + array_join — deterministic output regardless of
     partitioning."""
-    n = _t(spark, sf_dir, "nation")
+    n = load_table(spark, sf_dir, "nation")
     return (
         n.groupBy("n_regionkey")
         .agg(
@@ -95,7 +91,7 @@ def agg_median_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (median + p90) per group —
     results floored at 2 decimals since the interpolation arithmetic
     is the one place both engines can differ in the last ulp."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = load_table(spark, sf_dir, "lineitem")
     return (
         li.groupBy("l_returnflag")
         .agg(
@@ -126,7 +122,7 @@ def text_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token frequency top-50 (explode → count → top-k): the
     vocabulary-building primitive. Partial aggregation keeps the
     shuffle at vocabulary size, not corpus size."""
-    d = widen(_t(spark, sf_dir, "documents"))
+    d = widen(load_table(spark, sf_dir, "documents"))
     return (
         d.select(F.explode(tokens("text")).alias("token"))
         .groupBy("token")
@@ -155,8 +151,8 @@ def text_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q12_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12-style: join + conditional (CASE) aggregation —
     priority mix per line status for lines shipped in 1996."""
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem").filter(
+    o = load_table(spark, sf_dir, "orders")
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
     )
@@ -192,11 +188,11 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     part, conditional fixed-point sums. (The ratio itself is left to
     the consumer: dividing the two exact sums is deterministic but the
     engine reports both components.)"""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-07-01 00:00:00").cast("timestamp"))
     )
-    p = _t(spark, sf_dir, "part")
+    p = load_table(spark, sf_dir, "part")
     fp = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount")) * 10000).cast("long")
     promo = F.when(F.col("p_type").startswith("PROMO"), fp).otherwise(F.lit(0))
     return (
@@ -238,9 +234,9 @@ def q18_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery as a semi join on the pre-aggregated order quantities,
     then re-join for the report columns. Quantity threshold scaled to
     the fixture (sum qty > 140)."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
     fpq = F.floor(F.col("l_quantity") * 10000).cast("long")
     big = (
         l.groupBy("l_orderkey")

@@ -12,10 +12,6 @@ from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "scalar_null_handling",
     oracle="""
@@ -39,8 +35,8 @@ def scalar_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null semantics battery: COALESCE chains, NULLIF, IS NULL
     flags, null-safe equality (<=> / IS NOT DISTINCT FROM) — over an
     outer join that actually produces nulls."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     j = c.join(
         o, (c.c_custkey == o.o_custkey) & (o.o_totalprice > 400000), "left"
     ).select("c_custkey", "c_acctbal", "o_totalprice")
@@ -78,10 +74,10 @@ def scalar_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def setop_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """unionByName: column order differs between the two sides —
     positional UNION would silently mis-bind."""
-    c = _t(spark, sf_dir, "customer").select(
+    c = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("nationkey"), F.lit("c").alias("kind")
     )
-    s = _t(spark, sf_dir, "supplier").select(
+    s = load_table(spark, sf_dir, "supplier").select(
         F.lit("s").alias("kind"), F.col("s_nationkey").alias("nationkey")
     )
     return (
@@ -107,8 +103,8 @@ def setop_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset INTERSECT ALL (keeps min multiplicity per side)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return (
         c.intersectAll(s)
         .groupBy("nationkey")
@@ -132,8 +128,8 @@ def setop_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def setop_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiset EXCEPT ALL (subtracts multiplicities)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
     return (
         c.exceptAll(s)
         .groupBy("nationkey")
@@ -168,7 +164,7 @@ def explode_outer_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode_outer: rows with NULL arrays survive (pos -1, null
     token) — the LATERAL VIEW OUTER surface. Every 7th doc's array is
     nulled to exercise the outer path."""
-    d = _t(spark, sf_dir, "documents")
+    d = load_table(spark, sf_dir, "documents")
     toks = F.when(
         F.col("doc_id") % 7 != 0, F.split(F.substring("text", 1, 20), " ")
     )

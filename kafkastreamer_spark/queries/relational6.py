@@ -24,10 +24,6 @@ from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 # NOTE: built lazily — a module-level Column would run F.col() when
 # Python UDF workers re-import the package without an active
 # SparkContext (Spark 4.1 classic asserts on that).
@@ -77,7 +73,9 @@ def join_asof_prev_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle deliberately uses the naive-join + ROW_NUMBER
     formulation so the two independent strategies check each other.
     """
-    ev = _t(spark, sf_dir, "events").select("event_id", "user_id", "ts", "event_type", "value")
+    ev = load_table(spark, sf_dir, "events").select(
+        "event_id", "user_id", "ts", "event_type", "value"
+    )
     purchases = ev.filter(F.col("event_type") == "purchase").select(
         "user_id",
         "ts",
@@ -155,14 +153,14 @@ def q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     direction. Scale shape: the only big-big join is lineitem-orders
     (shuffle on orderkey); supplier/nation/customer are broadcast so
     the nation predicate prunes rows before the wide shuffle."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
     n1 = n.select(F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("supp_nation"))
     n2 = n.select(F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("cust_nation"))
     return (
@@ -214,13 +212,13 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast; lineitem-orders is the single shuffle join, and the
     PROMO filter runs before it via the broadcast part join.
     """
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
+    o = load_table(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     n2 = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).select(
         F.col("n_nationkey").alias("c_nk")
     )
@@ -272,8 +270,8 @@ def q13_customer_order_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     'special requests' predicate is adapted to o_orderpriority).
     Two-level aggregation; COUNT(o_orderkey) counts only matched rows
     so no-order customers land in the c_count=0 bucket."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderpriority") != "1-URGENT")
     co = (
         c.join(o, c.c_custkey == o.o_custkey, "left")
         .groupBy("c_custkey")
@@ -312,11 +310,11 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     quarter. The max-equality compares exact fixed-point BIGINTs (a
     double comparison would be rounding-hazardous); the scalar-max
     subquery becomes a broadcast single-row join."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1996-04-01 00:00:00").cast("timestamp"))
     )
-    s = _t(spark, sf_dir, "supplier")
+    s = load_table(spark, sf_dir, "supplier")
     rev = l.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
         F.sum(fixed(_rev())).alias("fr")
     )
@@ -369,12 +367,12 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the broadcast part-dim join, one shuffle on l_partkey.
     """
     pf = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter((F.col("p_brand") == "Brand#3") & (F.col("p_size") < 15))
         .select("p_partkey")
     )
     li = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .join(F.broadcast(pf), F.col("l_partkey") == F.col("p_partkey"))
         .select("l_partkey", "l_quantity", "l_extendedprice")
     )
@@ -415,8 +413,8 @@ def q19_disjunctive_predicates(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays a broadcast equi-join on partkey with the OR residual as a
     post-join filter — Catalyst also derives the implied
     brand-IN/size-range pushdown on part from the disjunction."""
-    l = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    l = load_table(spark, sf_dir, "lineitem")
+    p = load_table(spark, sf_dir, "part")
     q, sz, br = F.col("l_quantity"), F.col("p_size"), F.col("p_brand")
     disj = (
         ((br == "Brand#1") & sz.between(1, 10) & q.between(1, 20))
@@ -465,8 +463,8 @@ def q22_inactive_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     custkeys. Scale shape: the scalar avg is a broadcast single-row
     join; the anti join shuffles on custkey (or broadcasts the
     aggregated key set when it fits)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
+    c = load_table(spark, sf_dir, "customer")
+    o = load_table(spark, sf_dir, "orders")
     elig = (
         c.filter(F.col("c_nationkey").isin(1, 3, 5, 7, 9, 11) & (F.col("c_acctbal") > 0))
         .select("c_custkey", "c_nationkey", fixed("c_acctbal").alias("fb"))
@@ -517,7 +515,7 @@ def window_range_frame_trailing(spark: SparkSession, sf_dir: str) -> DataFrame:
     include each other symmetrically — semantics a rowsBetween frame
     cannot express. The fixed-point sum keeps the windowed aggregate
     order-independent; one shuffle on o_custkey."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     d = F.datediff(F.col("o_orderdate"), F.lit("1995-01-01").cast("date"))
     w = (
         Window.partitionBy("o_custkey")
@@ -558,8 +556,8 @@ def join_cross_region_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic dimension-grid scaffold for dense reports). Both sides are
     tiny dims; Spark plans a broadcast nested-loop join — a cross join
     of two large tables would be rejected by design."""
-    r = _t(spark, sf_dir, "region").select("r_name")
-    seg = _t(spark, sf_dir, "customer").select("c_mktsegment").distinct()
+    r = load_table(spark, sf_dir, "region").select("r_name")
+    seg = load_table(spark, sf_dir, "customer").select("c_mktsegment").distinct()
     return (
         r.crossJoin(F.broadcast(seg))
         .select(
@@ -590,7 +588,7 @@ def scalar_hash_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     length — the content-addressing toolbox (cache keys, content
     dedup, URL-safe ids). All five are bit-identical across engines
     (verified; hex is uppercase in both)."""
-    c = _t(spark, sf_dir, "customer")
+    c = load_table(spark, sf_dir, "customer")
     return (
         c.select(
             "c_custkey",
@@ -632,7 +630,7 @@ def agg_covar_corr_fixedpoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines or even across partitionings. One map-side-combined
     shuffle; the BIGINT moments hold to ~2e18 (≈ sf100 on these
     0..10^3-scale fixed columns) before needing DECIMAL(38)."""
-    l = _t(spark, sf_dir, "lineitem")
+    l = load_table(spark, sf_dir, "lineitem")
     x, y = fixed("l_discount"), fixed("l_tax")
     n = F.count(F.lit(1))
     return (
@@ -672,7 +670,7 @@ def agg_histogram_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer bin ids from floor division, min/max per bin exact (no
     sums, so no fixed-point needed). Map-side combine reduces each
     partition to ≤ #bins rows before the shuffle."""
-    o = _t(spark, sf_dir, "orders")
+    o = load_table(spark, sf_dir, "orders")
     return (
         o.groupBy(F.floor(F.col("o_totalprice") / 50000).cast("long").alias("bin"))
         .agg(

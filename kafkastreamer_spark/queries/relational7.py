@@ -30,10 +30,6 @@ from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "q2_min_cost_supplier",
     oracle=f"""
@@ -83,16 +79,16 @@ def q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays in fixed-point BIGINT so MIN and the rank order are exact.
     """
     ps = (
-        _t(spark, sf_dir, "lineitem")
+        load_table(spark, sf_dir, "lineitem")
         .groupBy("l_partkey", "l_suppkey")
         .agg(F.min(fixed("l_extendedprice")).alias("cost_fp"))
     )
-    p = _t(spark, sf_dir, "part").filter(
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_size") == 15) & (F.col("p_type") == "STANDARD")
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation")
+    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
     cand = (
         ps.join(p, ps.l_partkey == p.p_partkey)
         .join(s, ps.l_suppkey == s.s_suppkey)
@@ -147,15 +143,15 @@ def q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier and nation are broadcast. Profit is summed as the exact
     BIGINT difference of two fixed-point legs — quantity is
     integer-valued in the fixtures so cost stays exact too."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    l = load_table(spark, sf_dir, "lineitem")
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     p = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%red%"))
         .select("p_partkey", "p_retailprice")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     profit_fp = fixed(
         F.col("l_extendedprice") * (1 - F.col("l_discount"))
     ) - fixed("p_retailprice") * F.col("l_quantity").cast("long")
@@ -209,11 +205,11 @@ def q11_important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     space (value*n*2 > 3*total) so no double rounding can flip a
     boundary row between engines. At 100 TB the per-part aggregate is
     ~|parts| rows — the global re-agg is trivial."""
-    l = _t(spark, sf_dir, "lineitem").select(
+    l = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice"
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
     v = (
         l.join(s, l.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
@@ -263,13 +259,13 @@ def q16_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the distinct-count aggregation. COUNT(DISTINCT) expands to a
     two-phase exact distinct — fine here because the group count is
     bounded by |brand|x|type|x|sizes|, not by data volume."""
-    l = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    p = _t(spark, sf_dir, "part").filter(
+    l = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    p = load_table(spark, sf_dir, "part").filter(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
         & F.col("p_size").isin(1, 9, 14, 19, 23, 36, 45, 49)
     )
-    bad = _t(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
+    bad = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
         "s_suppkey"
     )
     return (
@@ -325,12 +321,12 @@ def q20_excess_shipping_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame
     comparison is exact in integers: qty*2*n > total avoids the
     double division. The final supplier filter is a broadcast
     semi-join, so the big side never reshuffles."""
-    l = _t(spark, sf_dir, "lineitem").filter(
+    l = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp"))
     )
     small = (
-        _t(spark, sf_dir, "part")
+        load_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("small%"))
         .select("p_partkey")
     )
@@ -347,8 +343,8 @@ def q20_excess_shipping_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame
         .filter(F.col("qty") * 2 * F.col("n_supp") > F.col("total_qty"))
         .select("l_suppkey")
     )
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
+    s = load_table(spark, sf_dir, "supplier")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_5")
     return (
         s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(heavy, s.s_suppkey == heavy.l_suppkey, "left_semi")
@@ -398,16 +394,16 @@ def q21_sole_fault_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     one shuffle on orderkey co-partitioned with the l1-orders join.
     No per-row re-scan of lineitem, which is what the naive
     correlated plan would do at 100 TB."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_suppkey", "l_returnflag"
     )
     o = (
-        _t(spark, sf_dir, "orders")
+        load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderstatus") == "F")
         .select("o_orderkey")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
+    n = load_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_7")
 
     l1 = li.filter(F.col("l_returnflag") == "R").select(
         F.col("l_orderkey").alias("o1_key"), F.col("l_suppkey").alias("s1_key")

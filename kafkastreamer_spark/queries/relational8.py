@@ -24,10 +24,6 @@ from kafkastreamer_spark.tables import load_table, widen
 _BASKET_CAP = 64
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
-
-
 @register(
     "merge_upsert_customers",
     oracle=f"""
@@ -68,7 +64,7 @@ def merge_upsert_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-prunable (only buckets with changes rewrite, the
     Delta/Iceberg optimization). Balances stay in fixed-point BIGINT
     through the merge, so the result is engine-exact."""
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     upd = (
         ev.filter(F.col("event_type") == "purchase")
         .groupBy(F.col("user_id").alias("k"))
@@ -79,7 +75,7 @@ def merge_upsert_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
         fixed("value").alias("delta_fp"),
     )
     changes = upd.unionByName(ins)
-    base = _t(spark, sf_dir, "customer").select(
+    base = load_table(spark, sf_dir, "customer").select(
         "c_custkey", fixed("c_acctbal").alias("bal_fp")
     )
     return (
@@ -128,7 +124,7 @@ def events_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the same one-pass-per-key cost as the as-of
     join's sweep."""
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ev = _t(spark, sf_dir, "events")
+    ev = load_table(spark, sf_dir, "events")
     return (
         ev.select(
             "user_id",

@@ -22,39 +22,33 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Always use the serialized sort-based shuffle writer (r14, guide
-    # §2.2/§7). The default bypassMergeThreshold (200) routes every
-    # map task of a <=200-partition shuffle through
-    # BypassMergeSortShuffleWriter, which opens one file PER REDUCE
-    # PARTITION and then concatenates them with mmap/transferTo —
-    # M x R tiny files per exchange. jstack during the bench showed
+    # Always use the serialized sort-based shuffle writer. The default
+    # bypassMergeThreshold (200) routes every map task of a
+    # <=200-partition shuffle through BypassMergeSortShuffleWriter,
+    # which opens one file PER REDUCE PARTITION and then concatenates
+    # them with mmap/transferTo — M x R tiny files per exchange, with
     # task threads serialized in FileChannelImpl.map/unmap (munmap
-    # takes process-wide locks), the cause of the 32-core
-    # anti-scaling cluster in PERF_r13 (q2 0.25, dedup_exact 0.29,
-    # text_chunk_tokens 0.32 low/high-core ratios): stage runtime 12 s
-    # vs 4.6 s CPU on a 0.9 MB shuffle. With threshold=1 the
-    # UnsafeShuffleWriter buffers serialized rows and writes ONE
-    # spill file + index per map task — the exact writer every
-    # production shuffle (R > 200) already uses, so this makes local
-    # writer choice match scale instead of tuning for it. Interleaved
-    # A/B at sf0.1: dedup_exact 1.89->0.75 s, q2 1.94->1.41,
-    # text_chunk_tokens 1.14->0.47, dedup_ngram_jaccard 2.51->1.69,
-    # q3 1.25->0.83; no query measured worse at 32 or 8 cores.
-    # Static (core) conf: applied by get_spark's builder; a session
-    # built elsewhere can't set it at runtime, and
-    # ensure_engine_conf warns when it is missing (correctness is
-    # unaffected — it only picks the writer implementation).
+    # takes process-wide locks): on 32 cores, stages ran ~2.6x their
+    # CPU time on a sub-MB shuffle. With threshold=1 the UnsafeShuffleWriter buffers
+    # serialized rows and writes ONE spill file + index per map task —
+    # the writer every production shuffle (R > 200) already uses, so
+    # local writer choice matches scale instead of tuning for it.
+    # Static (core) conf: only a session builder can set it;
+    # ensure_engine_conf warns when a session built elsewhere lacks
+    # it (correctness is unaffected — it only picks the writer).
     "spark.shuffle.sort.bypassMergeThreshold": "1",
-    # Apply AQE inside cached (persisted) plan compilation too — the
-    # default pins every shuffle under a .persist() to the raw
-    # shuffle-partition count and pins downstream joins to that width
-    # (see tables.load_table, which also sets this for driver-built
-    # sessions).
+    # Apply AQE inside cached (persisted) plan compilation too. The
+    # default (false) compiles every persisted subtree without AQE, so
+    # each shuffle under a .persist() runs at the raw shuffle-partition
+    # count — 200 near-empty tasks per stage in a default-conf session
+    # — and every downstream join is pinned to that width (iterative
+    # graph kernels ran 3-5x slower). Purely a physical-planning flag:
+    # values are partition-invariant.
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Deterministic timestamp semantics for oracle parity.
     "spark.sql.session.timeZone": "UTC",
-    # The driver fixtures store events.ts as parquet TIMESTAMP(NANOS)
-    # which Spark cannot read natively; read as long + convert
+    # The fixtures store events.ts as parquet TIMESTAMP(NANOS), which
+    # Spark cannot read natively; read as long + convert
     # (tables._load_events).
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # Arrow for any pandas-UDF path (similarity / multimodal ops).
@@ -64,10 +58,6 @@ ENGINE_CONF: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
 }
 
-
-#: ENGINE_CONF entries only a session builder can set (Spark core
-#: confs); ensure_engine_conf checks them on the running SparkContext
-STATIC_CONF = ("spark.shuffle.sort.bypassMergeThreshold",)
 
 ROCKSDB_STATE_CONF = {
     # Large streaming state (wide key spaces, long watermarks) should
@@ -86,7 +76,6 @@ def get_spark(
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    rocksdb_state: bool = False,
 ) -> SparkSession:
     """Build (or get) a SparkSession with engine defaults.
 
@@ -97,16 +86,12 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
 
     builder = SparkSession.builder.appName(app_name).master(master)
     conf = dict(ENGINE_CONF)
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
+    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions or cpus)
     conf.setdefault("spark.ui.enabled", "false")
     conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-    if rocksdb_state:
-        conf.update(ROCKSDB_STATE_CONF)
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -115,16 +100,18 @@ def get_spark(
 
 
 def ensure_engine_conf(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine confs to an externally-built session.
+    """Apply the engine confs to a session built elsewhere.
 
     The verification driver constructs its own SparkSession; queries
-    still need UTC semantics and the nanos-as-long parquet reader.
-    Nothing is dropped silently: a conf that cannot be set, and a
-    static conf (``STATIC_CONF``) the running SparkContext lacks, each
-    emit one RuntimeWarning per process.
+    still need UTC semantics, the nanos-as-long parquet reader and AQE
+    inside cached plans. This is the only place the package sets a
+    conf at runtime: the entry adapters and ``sql.run_sql`` call it
+    once per query. Nothing is dropped silently: a conf that cannot be
+    set, and a static conf (not ``isModifiable``) the running
+    SparkContext lacks, each emit one RuntimeWarning per process.
     """
     for k, v in ENGINE_CONF.items():
-        if k in STATIC_CONF:
+        if not spark.conf.isModifiable(k):
             if spark.sparkContext.getConf().get(k) != v:
                 _warn_once(
                     k,

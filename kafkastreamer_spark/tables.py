@@ -4,9 +4,10 @@ Plain ``spark.read.parquet`` scans — schema comes from the footer, so
 Catalyst gets column pruning and predicate pushdown for free. The one
 wrinkle is ``events.ts``: the fixture stores parquet TIMESTAMP(NANOS)
 which Spark's vectorized reader rejects; with
-``spark.sql.legacy.parquet.nanosAsLong`` the column arrives as a long
-nanosecond count and is converted to a microsecond TimestampType
-column here. The DuckDB oracle reads the same column natively as
+``spark.sql.legacy.parquet.nanosAsLong`` (an engine conf, set by
+``session.get_spark`` or ``session.ensure_engine_conf``) the column
+arrives as a long nanosecond count and is converted to a microsecond
+TimestampType column here. The DuckDB oracle reads the same column natively as
 TIMESTAMP_NS, so both engines agree after truncation to micros.
 """
 
@@ -37,14 +38,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # .parquet costs ~90-120 ms per call (file listing + footer schema
 # read through py4j), and composed operators re-load the same table
 # several times inside one query build — measured ~0.5 s of pure
-# driver time per benched query (r13 build-time ranking). This
-# memoizes the PLAN handle only — no data is cached or persisted, so
-# every action still computes from the parquet files; clearCache
-# between bench runs is unaffected. Same immutable-fixture contract
-# as operators.dedup._SHINGLE_MEMO (testdata is generated once,
-# read-only); a caller that rewrites a fixture dir in place must call
-# invalidate_table_memo(spark, sf_dir) first. Weak-keyed so a stopped
-# session's entries are collectable.
+# driver time per benched query. This memoizes the PLAN handle only —
+# no data is cached or persisted, so every action still computes from
+# the parquet files; clearCache between bench runs is unaffected.
+# Same immutable-fixture contract as operators.dedup._SHINGLE_MEMO
+# (testdata is generated once, read-only); a caller that rewrites a
+# fixture dir in place must call invalidate_table_memo(spark, sf_dir)
+# first. Weak-keyed so a stopped session's entries are collectable.
 _TABLE_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -69,19 +69,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table as a DataFrame."""
     if name not in TABLES:
         raise ValueError(f"unknown table {name!r}; expected one of {TABLES}")
-    # Let AQE re-plan shuffles INSIDE cached plans. The default
-    # (false) compiles every persisted subtree without AQE, so each
-    # shuffle under a .persist() runs at raw spark.sql.shuffle
-    # .partitions — 200 empty-ish tasks per stage in a default-conf
-    # session — and every downstream join is then pinned to that
-    # width too. Purely a physical-planning flag (values and the
-    # fixed-point hashes are partition-invariant; swept at 3 shuffle
-    # settings). Measured on the driver's plain session at sf0.01:
-    # graph_connected_components 11.9 s → 2.4 s, BFS 8.6 s → 2.6 s.
-    # Runtime-settable SQL conf, same pattern as nanosAsLong below.
-    spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true"
-    )
     per_session = _TABLE_MEMO.setdefault(spark, {})
     key = (sf_dir, name)
     df = per_session.get(key)
@@ -93,9 +80,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _load_events(spark: SparkSession, path: str) -> DataFrame:
-    # Runtime-settable SQL conf; required because the driver may build
-    # the session without it.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
@@ -124,7 +108,7 @@ def widen(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     Partition estimation is metadata-only — ``inputFiles()`` plus local
     file sizes against ``spark.sql.files.maxPartitionBytes`` — instead
     of ``df.rdd.getNumPartitions()``, which forced plan materialization
-    through the RDD API on every call (round-2 VERDICT item 8). When
+    through the RDD API on every call. When
     the layout can't be cheaply estimated (many files, non-local paths,
     unreadable sizes) the answer is "don't shuffle": every such case is
     a real storage layout where the scan already parallelizes.

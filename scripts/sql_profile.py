@@ -8,10 +8,11 @@ Usage: python scripts/sql_profile.py QUERY [sf_dir] [runs]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kafkastreamer_spark.registry import REGISTRY, _ensure_loaded  # noqa: E402
 from kafkastreamer_spark.session import get_spark  # noqa: E402

@@ -4,7 +4,8 @@ sizing lesson to the other bounded-key-domain twins).
 
 Protocol = the THROUGHPUT.md round-10/11/12 rows: sf0.1 events fed as
 4 time-ordered parquet chunks, `availableNow`, parquet sink, wall
-clock over the full drain on local[32]. The state-store partition
+clock over the full drain on get_spark's engine session
+(local[$SPARK_GRAFT_CPUS], 32 if unset). The state-store partition
 count is pinned by `spark.sql.shuffle.partitions` at FIRST query
 start, so each (twin, partitions) cell must run in a FRESH process —
 this script executes exactly one cell and prints one JSON line.
@@ -24,9 +25,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from kafkastreamer_spark.session import get_spark  # noqa: E402
 from kafkastreamer_spark.streaming.sketches import (  # noqa: E402
     rolling_median_stateful,
     sliding_distinct_pairs,
@@ -41,14 +42,7 @@ def main() -> None:
     twin = sys.argv[1]
     parts = int(sys.argv[2])
     sf_dir = sys.argv[3] if len(sys.argv) > 3 else "/root/testdata/sf0.1"
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .appName(f"twin-sizing-{twin}-{parts}")
-        .config("spark.sql.shuffle.partitions", str(parts))
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name=f"twin-sizing-{twin}-{parts}", shuffle_partitions=parts)
     spark.sparkContext.setLogLevel("ERROR")
     work = tempfile.mkdtemp(prefix=f"twin_sizing_{twin}_")
     inp = os.path.join(work, "in")

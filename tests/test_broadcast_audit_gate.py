@@ -27,6 +27,7 @@ classes flag and are allowlisted below).
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -35,7 +36,7 @@ from kafkastreamer_spark import tables as T
 from kafkastreamer_spark.operators import dedup as _dedup
 from kafkastreamer_spark.registry import REGISTRY, _ensure_loaded
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from scripts.broadcast_audit import FACT_TABLES, _flag_subtree, _subtree  # noqa: E402
 
 _ensure_loaded()

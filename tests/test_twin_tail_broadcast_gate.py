@@ -25,6 +25,7 @@ parity path calls):
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -41,7 +42,7 @@ from kafkastreamer_spark.queries.relational31 import (
 )
 from kafkastreamer_spark.tables import load_table
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from scripts.broadcast_audit import _flag_subtree, _subtree  # noqa: E402
 
 K = 16
