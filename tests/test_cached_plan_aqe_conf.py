@@ -28,9 +28,11 @@ def test_engine_conf_carries_the_flag():
     assert ENGINE_CONF.get(CONF) == "true"
 
 
-def test_entry_adapters_set_engine_confs_on_a_plain_session(spark, sf_dir):
+def test_load_table_sets_the_flag_on_a_plain_session(spark, sf_dir):
     # simulate a driver-built session state: flip both confs off, then
-    # verify each entry surface restores them before plans are built
+    # verify each entry surface restores them before any load_table
+    # plan is built. load_table itself sets no conf; the entry adapters
+    # and run_sql do, through ensure_engine_conf.
     q1 = entrymod.queries()["q1_pricing_summary"]
     surfaces = (
         lambda: q1(spark, sf_dir),

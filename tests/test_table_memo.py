@@ -5,13 +5,16 @@ times per query build. The memo must (a) be per-sf_dir isolated, (b)
 cache no data (actions still scan parquet), (c) set no conf — a hit
 and a miss do the same work, because the engine confs are applied
 once per query by session.ensure_engine_conf (pinned in
-test_cached_plan_aqe_conf.py), and (d) expose the same invalidation
+test_cached_plan_aqe_conf.py, and for a query built only from memo
+hits by test_conf_still_set_on_memo_hit), and (d) expose the same invalidation
 escape hatch as the shingle memo."""
 
 from __future__ import annotations
 
 import os
 
+import __spark_entry__ as entrymod
+from kafkastreamer_spark.session import ENGINE_CONF
 from kafkastreamer_spark.tables import (
     _TABLE_MEMO,
     invalidate_table_memo,
@@ -55,3 +58,18 @@ def test_invalidate_drops_one_dir_only(spark):
     assert per_session[(SF_B, "region")] is b
     assert load_table(spark, SF_A, "region") is not a
 
+
+def test_conf_still_set_on_memo_hit(spark):
+    # a query whose every table is a memo hit still gets the conf: it
+    # comes from the entry adapter, not from a load_table miss
+    conf = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    q1 = entrymod.queries()["q1_pricing_summary"]
+    q1(spark, SF_A)  # memoize the tables q1 reads
+    memo = dict(_TABLE_MEMO[spark])
+    spark.conf.set(conf, "false")
+    try:
+        q1(spark, SF_A)  # memo hits only
+        assert dict(_TABLE_MEMO[spark]) == memo
+        assert spark.conf.get(conf) == ENGINE_CONF[conf]
+    finally:
+        spark.conf.set(conf, ENGINE_CONF[conf])
