@@ -68,10 +68,12 @@ def nearest_centroids(
     score: Callable[[Column], Column],
     n: int = 1,
     best: str = "min",
+    by: tuple[str, ...] = (),
 ) -> DataFrame:
     """Each row's best ``n`` centroids, picked map-side: the centroid
-    table is collected into one broadcast row, and every row ranks
-    that array in place, so the row side never shuffles.
+    table is collected into one broadcast row (one per ``by`` group),
+    and every row ranks that array in place, so the row side never
+    shuffles.
 
     ``score(c)`` gives a row's score against one centroid; ``c`` is a
     struct of the centroid table's columns and row columns are
@@ -80,7 +82,13 @@ def nearest_centroids(
     lowest ``id``. Returns the row columns plus ``id`` and ``score``;
     when ``n > 1``, one row per pick with ``rank`` 1..n (fewer when
     there are fewer centroids). For ``n = 1`` an empty centroid table
-    gives a NULL ``id``."""
+    gives a NULL ``id``.
+
+    ``by`` splits the centroid table into independent groups: each
+    group is collected into its own array, every row is scored against
+    every group's array, and the ``by`` columns come after the row
+    columns. With ``by``, an empty centroid table has no groups and
+    gives no rows."""
     tie = (lambda c: c[id]) if best == "min" else (lambda c: -c[id])
     ranked = F.transform(
         "_cents",
@@ -93,17 +101,20 @@ def nearest_centroids(
         top = F.array(pick)
     else:
         top = F.slice(F.sort_array(ranked, asc=best == "min"), 1, n)
-    cents = centroids.agg(
-        F.collect_list(F.struct(*centroids.columns)).alias("_cents")
+    cents = centroids.groupBy(*by).agg(
+        F.collect_list(
+            F.struct(*[c for c in centroids.columns if c not in by])
+        ).alias("_cents")
     )
     # The picks are a generator's output, so a filter on the returned
     # id (e.g. the IS NOT NULL a join on it infers) stays above the
     # pick instead of being pushed below it as a second evaluation.
     return (
         rows.crossJoin(F.broadcast(cents))
-        .select(*rows.columns, F.posexplode(top).alias("_pos", "_best"))
+        .select(*rows.columns, *by, F.posexplode(top).alias("_pos", "_best"))
         .select(
             *rows.columns,
+            *by,
             F.col("_best")[id].alias(id),
             F.col("_best.score").alias("score"),
             *([(F.col("_pos") + 1).alias("rank")] if n > 1 else []),

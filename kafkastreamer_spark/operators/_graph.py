@@ -1,5 +1,5 @@
-"""Min-label propagation: the one Pregel superstep every component and
-label-propagation query in the package runs.
+"""Min-label propagation: the one Pregel superstep every component,
+label-propagation and fixed-round BFS query in the package runs.
 
 ``edges`` is ``(src, dst)`` and CLOSED: every labelled node carries its
 own self-loop, so "keep your own label" is part of the min and a step
@@ -15,15 +15,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def min_label_step(edges: DataFrame, labels: DataFrame) -> DataFrame:
+def min_label_step(
+    edges: DataFrame,
+    labels: DataFrame,
+    by: tuple[str, ...] = (),
+    hops: bool = False,
+) -> DataFrame:
     """One superstep: ``edges ⋈ labels ON src = node``, then each
     ``dst`` takes the minimum label over its closed in-neighbourhood.
-    Returns ``(node, lbl)``. After k steps from ``lbl = node`` every
-    node holds the minimum id within k hops."""
+    Returns ``(*by, node, lbl)``. After k steps from ``lbl = node``
+    every node holds the minimum id within k hops.
+
+    ``by`` columns of ``labels`` are carried through as group keys, so
+    independent propagations (one per seed, say) share one step. With
+    ``hops``, each message adds ``src != dst``: ``lbl`` is then a hop
+    distance, self-loops carry it over at no cost, and k steps from
+    ``lbl = 0`` on the seeds give every node within k hops its
+    distance to the nearest seed."""
+    lbl = F.col("lbl")
+    if hops:
+        lbl = lbl + (F.col("src") != F.col("dst")).cast("int")
     return (
         edges.join(labels, edges.src == labels.node)
-        .groupBy(F.col("dst").alias("node"))
-        .agg(F.min("lbl").alias("lbl"))
+        .groupBy(*by, F.col("dst").alias("node"))
+        .agg(F.min(lbl).alias("lbl"))
     )
 
 

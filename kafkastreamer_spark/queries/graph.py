@@ -30,10 +30,10 @@ from kafkastreamer_spark.operators.deskew import md5_ranked
 from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table
 
-# Quadratic-projection degree ceiling (round-3 verdict item #4): a key
-# with more than this many bipartite neighbors keeps a deterministic
-# md5-rank sample of them before any pairing self-join, bounding the
-# per-key candidate blowup at C(64,2) ≈ 2k pairs.
+# Quadratic-projection degree ceiling: a key with more than this many
+# bipartite neighbors keeps a deterministic md5-rank sample of them
+# before any pairing self-join, bounding the per-key candidate blowup
+# at C(64,2) ≈ 2k pairs.
 _DEGREE_CAP = 64
 
 # Rank fixed-point scale: 1e9 micro-units per unit of probability
@@ -142,15 +142,13 @@ def graph_pagerank_two_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = nodes.crossJoin(F.broadcast(nc)).select(
         "node", F.expr(f"{_R} div n").cast("long").alias("r")
     )
-    # r13: the update expression reads only (node, m, n) — never the
+    # The update expression reads only (node, m, n) — never the
     # previous r — so the node list comes from the STATIC nation scan
-    # instead of the previous ranks. The old form referenced ranks
-    # twice per iteration (contrib build + left-join update), doubling
-    # the unpersisted lineage every round (plan grew to 34 Exchanges
-    # for two iterations: 4 rank-seed subtrees, deg re-aggregated per
-    # reference). Now ranks_k references ranks_{k-1} exactly once —
-    # linear lineage, one |nodes| aggregate per superstep, same exact
-    # fixed-point arithmetic.
+    # instead of the previous ranks. Referencing ranks twice per
+    # iteration (contrib build + left-join update) would double the
+    # unpersisted lineage every round; ranks_k references ranks_{k-1}
+    # exactly once — linear lineage, one |nodes| aggregate per
+    # superstep, same exact fixed-point arithmetic.
     for _ in range(2):
         msgs = (
             edges.join(F.broadcast(ranks), edges.src == ranks.node)
@@ -190,18 +188,24 @@ def _cc_iter_sql(prev: str, out: str) -> str:
         )"""
 
 
-def closed_part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The part–supplier graph from lineitem (part nodes 2p, supplier
-    nodes 2s+1) as a closed, deduplicated (src, dst) list: both
-    directions plus one self-loop per node, hash-partitioned by src
-    and persisted for the rounds that join on it."""
+def part_supplier_half(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part–supplier graph from lineitem as distinct (src, dst)
+    pairs, one direction only: part nodes 2p, supplier nodes 2s+1, so
+    a node's side is its parity."""
     li = load_table(spark, sf_dir, "lineitem")
-    half = li.select(
+    return li.select(
         (F.col("l_partkey") * 2).alias("src"),
         (F.col("l_suppkey") * 2 + 1).alias("dst"),
     ).distinct()
+
+
+def closed_part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``part_supplier_half`` as a closed, deduplicated (src, dst)
+    list: both directions plus one self-loop per node,
+    hash-partitioned by src and persisted for the rounds that join on
+    it."""
     return (
-        closed_edges(half)
+        closed_edges(part_supplier_half(spark, sf_dir))
         # hash(src) satisfies the dedup aggregate's clustering on
         # (src, dst), so dropDuplicates after the repartition plans
         # without an exchange of its own; every round's join reuses
@@ -383,15 +387,14 @@ def graph_bipartite_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the projection is a self-join on the part key, so
     cost is Σ_p deg(p)² — dominated by high-degree parts.  The degree
-    ceiling is therefore IN the plan (round-3 verdict item #4, not
-    prose): each part keeps at most ``_DEGREE_CAP`` suppliers, chosen
-    by deterministic md5-rank (``operators/deskew.md5_ranked`` — the
-    rank computation itself is skew-free), so a viral part contributes
-    ≤ C(64,2) pairs instead of deg². The oracle applies the identical
-    cap, so the contract is exact at ANY degree distribution — the
-    fixture's ~4-supplier parts never hit it, but the semantics no
-    longer depend on that.  Top-30 compiles to
-    TakeOrderedAndProject."""
+    ceiling is therefore IN the plan, not prose: each part keeps at
+    most ``_DEGREE_CAP`` suppliers, chosen by deterministic md5-rank
+    (``operators/deskew.md5_ranked`` — the rank computation itself is
+    skew-free), so a viral part contributes ≤ C(64,2) pairs instead of
+    deg². The oracle applies the identical cap, so the contract is
+    exact at ANY degree distribution — the fixture's ~4-supplier parts
+    never hit it, but the semantics do not depend on that.  Top-30
+    compiles to TakeOrderedAndProject."""
     li = load_table(spark, sf_dir, "lineitem")
     ps = (
         md5_ranked(

@@ -1,7 +1,7 @@
-"""Round-4 batches 125+: survival analysis (Nelson–Aalen), entity
-resolution, ranking metrics (ROC-AUC, calibration), the t-closeness
-privacy audit, sequential pattern mining, robust regression
-(Theil–Sen), and WOE/IV feature binning.
+"""Survival analysis (Nelson–Aalen), entity resolution, ranking
+metrics (ROC-AUC, calibration), the t-closeness privacy audit,
+sequential pattern mining, robust regression (Theil–Sen), and WOE/IV
+feature binning.
 
 The reference has no relational/statistical surface (its operators
 are the keyed arithmetic stages, Streamer.java:443-466); these extend
@@ -20,7 +20,7 @@ from kafkastreamer_spark.operators._embed import tokens
 from kafkastreamer_spark.operators._graph import min_label_step
 from kafkastreamer_spark.operators.deskew import bucketed_row_number
 from kafkastreamer_spark.operators.sampling import sql_hash_bucket
-from kafkastreamer_spark.queries.graph import _cc_iter_sql
+from kafkastreamer_spark.queries.graph import _cc_iter_sql, part_supplier_half
 from kafkastreamer_spark.queries.relational2 import _BPE_PATTERN
 from kafkastreamer_spark.queries._util import epoch_s
 from kafkastreamer_spark.registry import register
@@ -1336,19 +1336,13 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the edge list stays hash-partitioned on src across all
     rounds and the survivor sets broadcast once they fit. Each
     round's survivor set is persisted and the whole ladder (all four
-    node counts plus the core composition) folds into ONE action —
-    the first cut counted each round eagerly without persisting, so
-    round r's lineage re-executed every earlier round per action and
-    the fixed 3-round peel went quadratic in rounds (121 s at
-    sf0.01); persist + single-action brings it to a couple of
-    seconds. The persisted sets are intentionally NOT unpersisted
-    inside the function: the returned plan still references them, and
-    they are a few thousand node ids."""
-    li = load_table(spark, sf_dir, "lineitem")
-    half = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
+    node counts plus the core composition) folds into ONE action:
+    round r's survivors are read by round r+1 and by the ladder, so
+    without the cache every read would re-run every earlier round.
+    The persisted sets are intentionally NOT unpersisted inside the
+    function: the returned plan still references them, and they are a
+    few thousand node ids."""
+    half = part_supplier_half(spark, sf_dir)
     edges = (
         half.unionByName(
             half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -27,9 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kafkastreamer_spark.operators._embed import nearest_centroids
+from kafkastreamer_spark.operators._graph import min_label_step
 from kafkastreamer_spark.queries.graph import closed_part_supplier_edges
 from kafkastreamer_spark.registry import register
-from kafkastreamer_spark.tables import load_table, widen
+from kafkastreamer_spark.tables import load_table
 
 # ---------------------------------------------------------------------------
 # graph_bfs_distance_histogram
@@ -99,36 +100,28 @@ def graph_bfs_distance_histogram(
     sketches at diameter scale.
 
     Scale shape: one equi-join + one min-aggregation per round — the
-    Pregel superstep, same as connected components: the edge list is
+    Pregel superstep ``min_label_step`` with ``hops``, over the closed
+    list graph_connected_components propagates over: the edge list is
     the big side and keeps its src hash-partitioning across all
     rounds; only the bounded (node, dist) relation reshuffles.
-    Weight-0 self-loops fold the distance carry-forward into the min
-    (graph.py's self-loop discipline adapted to weighted relaxation),
+    Cost-0 self-loops fold the distance carry-forward into the min,
     so each round references the frontier exactly ONCE — linear
-    lineage, no per-round persist needed, no outer join in the loop
-    (a UNION-ALL carry-forward would reference it twice per round and
-    replicate each round's subplan 2^k-fold). The single LEFT join
-    (unreached accounting) happens once at the end against the node
-    set.
+    lineage, no per-round persist needed, no outer join in the loop.
+    The single LEFT join (unreached accounting) happens once at the
+    end against the node set.
     """
-    # weight 1 on every edge, 0 on the self-loops: the closed list
-    # graph_connected_components propagates over, read from one cache
-    edges_w = closed_part_supplier_edges(spark, sf_dir).select(
-        "src", "dst", (F.col("src") != F.col("dst")).cast("int").alias("w")
+    edges = closed_part_supplier_edges(spark, sf_dir)
+    nodes = edges.filter(F.col("src") == F.col("dst")).select(
+        F.col("src").alias("node")
     )
-    nodes = edges_w.filter(F.col("w") == 0).select(F.col("src").alias("node"))
     dist = nodes.filter(
         (F.col("node") % 2 == 0)
         & (F.expr(f"(node div 2) % {_BFS_SEED_MOD}") == 0)
-    ).select("node", F.lit(0).alias("d"))
+    ).select("node", F.lit(0).alias("lbl"))
     for _ in range(_BFS_ROUNDS):
-        dist = (
-            edges_w.join(dist, edges_w.src == dist.node)
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min(F.col("d") + F.col("w")).alias("d"))
-        )
+        dist = min_label_step(edges, dist, hops=True)
     reach = nodes.join(dist, "node", "left").select(
-        "node", F.coalesce("d", F.lit(-1)).alias("dist")
+        "node", F.coalesce("lbl", F.lit(-1)).alias("dist")
     )
     return (
         reach.groupBy(F.col("dist").cast("long").alias("dist"))
@@ -441,15 +434,13 @@ def sample_facility_location_greedy(
         # persist each step's 1-row pick: it is referenced three ways
         # (output union, coverage update, exclusion set) and —
         # because cov_k reads cov_{k-1} both directly and through
-        # pick_k — an unpersisted pick doubled the coverage chain per
-        # step (2^K copies; the r13 plan audit counted 156 scan
-        # leaves, 0 ReusedExchange; 5.8 s steady at sf0.1). Caching
-        # pick bounds each chain re-derivation at the previous cached
-        # pick: 3.0 s steady. Counter-experiment: ALSO persisting the
-        # corpus-width cov per step measured 12.4 s — eight serialized
-        # cache-materialization barriers cost more than the remaining
-        # (now linear) recomputation, so cov stays lazy. The 1-row
-        # pick caches are not unpersisted per step (ADVICE r13): they
+        # pick_k — an unpersisted pick doubles the coverage chain per
+        # step (2^K copies of the plan). Caching pick bounds each
+        # chain re-derivation at the previous cached pick. The
+        # corpus-width cov stays lazy: persisting it too adds one
+        # serialized cache-materialization barrier per step, which
+        # costs more than the remaining (now linear) recomputation.
+        # The 1-row pick caches are not unpersisted per step: they
         # materialize only inside the final action, so build-time
         # unpersist would revert the fix; clearCache between queries
         # releases them (same trade-off note as relational8).

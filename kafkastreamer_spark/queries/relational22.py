@@ -1,5 +1,5 @@
-"""Round-9 batch 231: Mann–Kendall trend test, learning-curve by
-training fraction, shard-local vs cross-shard dedup economics.
+"""Mann–Kendall trend test, learning-curve by training fraction,
+shard-local vs cross-shard dedup economics.
 
 * ``events_mann_kendall_trend`` — the standard nonparametric trend
   test (S statistic + Kendall tau) on daily series: all pairwise
@@ -21,9 +21,10 @@ these belong to the SURVEY §2 Part-B time-series/ML/LLM-data closure.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kafkastreamer_spark.operators._embed import nearest_centroids
 from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table, widen
 
@@ -212,11 +213,12 @@ def ml_learning_curve_fractions(
 
     Scale shape: centroid sums partial-aggregate map-side to
     |fractions| x |labels| x 64 rows; the <= 30-row centroid table
-    broadcasts; scoring streams the corpus once computing
-    |fractions| x |labels| integer fold distances per vector; the
-    accuracy rollup is count-only. The fraction explode multiplies
-    only the tiny centroid build and the broadcast side, never the
-    corpus scan count.
+    broadcasts as one array per fraction; scoring streams the corpus
+    once, and ``nearest_centroids`` picks each vector's label per
+    fraction map-side from |fractions| x |labels| integer fold
+    distances (ties to the lowest label); the accuracy rollup is
+    count-only. The fraction explode multiplies only the tiny centroid
+    build and the broadcast side, never the corpus scan count.
     """
     e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -268,26 +270,20 @@ def ml_learning_curve_fractions(
     ntr = cent.groupBy("pct").agg(
         F.sum("n_train_label").cast("long").alias("n_train")
     )
-    scored = e.crossJoin(F.broadcast(cent.select("pct", "clabel", "c"))).select(
-        "pct",
-        "vec_id",
-        "label",
+    pred = nearest_centroids(
+        e,
+        cent.select("pct", "clabel", "c"),
         "clabel",
-        F.aggregate(
-            F.zip_with("q", "c", lambda a, b: (a - b) * (a - b)),
+        lambda c: F.aggregate(
+            F.zip_with("q", c["c"], lambda a, b: (a - b) * (a - b)),
             F.lit(0).cast("long"),
             lambda acc, x: acc + x,
-        ).alias("d2"),
-    )
-    w = Window.partitionBy("pct", "vec_id").orderBy("d2", "clabel")
-    pred = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("pct", "label", F.col("clabel").alias("plabel"))
+        ),
+        by=("pct",),
     )
     acc = pred.groupBy("pct").agg(
         F.count(F.lit(1)).cast("long").alias("n_eval"),
-        F.count_if(F.col("plabel") == F.col("label"))
+        F.count_if(F.col("clabel") == F.col("label"))
         .cast("long")
         .alias("n_correct"),
     )

@@ -1,5 +1,5 @@
-"""Round-13 batch 252: probabilistic-filter calibration, LM smoothing
-statistics, sessionized engagement quality, and seed-node centrality.
+"""Probabilistic-filter calibration, LM smoothing statistics,
+sessionized engagement quality, and seed-node centrality.
 
 * ``layout_bloom_fpp_audit`` — build a Bloom filter (md5-derived
   positions, fixed m/k) over the keys of customers WITH orders,
@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from kafkastreamer_spark.operators._embed import SQL_TOKENS, tokens
+from kafkastreamer_spark.operators._graph import min_label_step
+from kafkastreamer_spark.queries.graph import closed_part_supplier_edges
 from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table, widen
 
@@ -448,21 +450,15 @@ def graph_harmonic_centrality_seeds(
     Σ 1/d folds to exact integers: harmonic4 = 10000·(6c1 + 3c2 +
     2c3)/6 via one integer division.
 
-    Scale shape: per-seed BFS state is (seed, node, d) — bounded by
+    Scale shape: per-seed BFS state is (seed, node, lbl) — bounded by
     seeds × nodes with the seed count FIXED at 5; each round is one
-    equi-join against the edge list (which keeps its src partitioning
-    across rounds) + one min-aggregation. The seed pick itself is a
-    degree count + global top-5 over the node-sized degree relation.
+    ``min_label_step`` keyed by seed over the closed edge list (which
+    keeps its src partitioning across rounds). The seed pick itself
+    is a degree count + global top-5 over the node-sized degree
+    relation; every node has exactly one self-loop in the closed
+    list, so its count is the degree plus one and ranks the same.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    half = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
-    edges = half.unionByName(
-        half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    edges = edges.repartition(F.col("src")).persist()  # reused every round
+    edges = closed_part_supplier_edges(spark, sf_dir)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).alias("degree")
     )
@@ -471,36 +467,15 @@ def graph_harmonic_centrality_seeds(
             F.col("node").alias("seed")
         )
     )
-    dist = seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("d"))
+    dist = seeds.select("seed", F.col("seed").alias("node"), F.lit(0).alias("lbl"))
     for _ in range(_HC_ROUNDS):
-        # persist each round's frontier table: the relaxation
-        # references it twice (union carry-over + expansion join), and
-        # unpersisted that doubles the lineage per round — the r13
-        # plan audit measured 2^3 = 8 executed copies of the
-        # seed-selection top-5 (each a full degree aggregation) and 0
-        # ReusedExchange. One cached (seed, node, d) relation per
-        # round keeps it linear; the relation is seeds × reached
-        # nodes, tiny at any scale. Not unpersisted per round
-        # (ADVICE r13): the caches materialize only inside the final
-        # action, so build-time unpersist would revert the fix; the
-        # clearCache-between-queries protocol releases them (same
-        # documented trade-off as relational8's pointer-doubling).
-        dist = dist.persist()
-        dist = (
-            dist.unionByName(
-                edges.join(dist, edges.src == dist.node).select(
-                    "seed", F.col("dst").alias("node"), (F.col("d") + 1).alias("d")
-                )
-            )
-            .groupBy("seed", "node")
-            .agg(F.min("d").alias("d"))
-        )
+        dist = min_label_step(edges, dist, by=("seed",), hops=True)
     return (
         dist.groupBy("seed")
         .agg(
-            F.count_if(F.col("d") == 1).cast("long").alias("c1"),
-            F.count_if(F.col("d") == 2).cast("long").alias("c2"),
-            F.count_if(F.col("d") == 3).cast("long").alias("c3"),
+            F.count_if(F.col("lbl") == 1).cast("long").alias("c1"),
+            F.count_if(F.col("lbl") == 2).cast("long").alias("c2"),
+            F.count_if(F.col("lbl") == 3).cast("long").alias("c3"),
         )
         .select(
             "seed",

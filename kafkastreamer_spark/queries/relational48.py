@@ -1,5 +1,5 @@
-"""Round-13 batch 257: content-defined chunking, the two-sample t
-statistic, graph-degree inequality, and a calibration z-test.
+"""Content-defined chunking, the two-sample t statistic, graph-degree
+inequality, and a calibration z-test.
 
 * ``dedup_cdc_storage_savings`` — storage-dedup accounting under
   CONTENT-DEFINED chunking (md5 rolling-window boundaries): the
@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from kafkastreamer_spark.queries.graph import part_supplier_half
 from kafkastreamer_spark.queries.relational16 import _PER_USER_SQL, _per_user
 from kafkastreamer_spark.registry import register
 from kafkastreamer_spark.tables import load_table, widen
@@ -346,11 +347,7 @@ def graph_degree_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list, then one rank window over the node-sized degree
     relation and a 4-number rollup.
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    half = li.select(
-        (F.col("l_partkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    ).distinct()
+    half = part_supplier_half(spark, sf_dir)
     edges = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )

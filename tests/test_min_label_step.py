@@ -1,9 +1,12 @@
 """``operators/_graph.min_label_step`` and ``dedup.connected_components``
 against pure-Python references on a hand-built graph: two small
 components plus a 6-hop chain, so fixed-round propagation stops short
-of the chain's far end for k < 6."""
+of the chain's far end for k < 6. The ``hops`` form is checked against
+breadth-first search, multi-source and (with ``by``) one per seed."""
 
 from __future__ import annotations
+
+from collections import defaultdict
 
 import pytest
 
@@ -85,3 +88,58 @@ def test_connected_components_matches_union_find(spark):
     want = _union_find(messy)
     assert got == want
     assert got[43] == 33 and got[60] == 60
+
+
+def _bfs(edges, seeds, k):
+    """{node: hop distance to the nearest seed} for nodes within k hops."""
+    adj = defaultdict(set)
+    for s, d in edges:
+        adj[s].add(d)
+        adj[d].add(s)
+    dist = {v: 0 for v in seeds}
+    frontier = set(seeds)
+    for step in range(1, k + 1):
+        frontier = {w for v in frontier for w in adj[v] if w not in dist}
+        dist.update({w: step for w in frontier})
+    return dist
+
+
+def _hop_steps(spark, labels, schema, k, by=()):
+    e = spark.createDataFrame(sorted(EDGES), "src long, dst long")
+    lab = spark.createDataFrame(sorted(labels), schema)
+    closed = closed_edges(e)
+    for _ in range(k):
+        lab = min_label_step(closed, lab, by=by, hops=True)
+    return lab
+
+
+# 9 sits in the triangle; 40 is the chain end, 6 hops from 43. The pair
+# {7, 3} is never reached.
+SEEDS = [9, 40]
+
+
+@pytest.mark.parametrize("k", [1, 2, 3, 4, 5, 6])
+def test_hops_match_multi_source_bfs(spark, k):
+    got = _hop_steps(spark, [(v, 0) for v in SEEDS], "node long, lbl long", k)
+    res = {r.node: r.lbl for r in got.collect()}
+    assert res == _bfs(EDGES, SEEDS, k)
+    assert 7 not in res and 3 not in res
+    assert (43 in res) == (k == 6)
+
+
+@pytest.mark.parametrize("k", [1, 3, 6])
+def test_hops_by_seed_match_one_bfs_per_seed(spark, k):
+    seeds = [5, 40, 42, 3]
+    got = _hop_steps(
+        spark,
+        [(s, s, 0) for s in seeds],
+        "seed long, node long, lbl long",
+        k,
+        by=("seed",),
+    )
+    assert got.columns == ["seed", "node", "lbl"]
+    res = {(r.seed, r.node): r.lbl for r in got.collect()}
+    want = {
+        (s, v): d for s in seeds for v, d in _bfs(EDGES, [s], k).items()
+    }
+    assert res == want

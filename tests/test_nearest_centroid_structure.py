@@ -19,10 +19,6 @@ CENTROID_IDS = {"c", "c2", "code", "clabel", "cent_id", "cluster"}
 ROW_KEYS = {"vec_id", "query_id"}
 STRIDE = re.compile(r"cnt\s+div\s+greatest\(")
 
-# Per-fraction centroid sets (one centroid table per training
-# fraction) do not fit the one-table kernel yet.
-KNOWN = {("queries/relational22.py", "ml_learning_curve_fractions")}
-
 
 def _name(call: ast.Call) -> str | None:
     f = call.func
@@ -83,7 +79,7 @@ def test_centroid_search_only_in_kernel():
             continue
         tree = ast.parse(path.read_text(encoding="utf-8"))
         found |= set(_violations(rel, tree))
-    assert {(rel, owner) for rel, owner, _ in found} <= KNOWN, sorted(found)
+    assert not found, sorted(found)
 
 
 def test_guard_catches_the_removed_forms():

@@ -1,7 +1,8 @@
 """``nearest_centroids`` against a NumPy brute force on a hand-built
 input: fixed-point squared L2 (best="min") and cosine (best="max"),
-exact ties from duplicate centroids going to the lowest id, and the
-rank order for n = 1 and n = 3."""
+exact ties from duplicate centroids going to the lowest id, the rank
+order for n = 1 and n = 3, and the grouped form (``by``) scored per
+group."""
 
 from __future__ import annotations
 
@@ -48,12 +49,12 @@ def _cos(v, c):
     return _fold_dot(v, c) / (math.sqrt(_fold_dot(v, v)) * math.sqrt(_fold_dot(c, c)))
 
 
-def _brute_force(metric, best, n):
+def _brute_force(metric, best, n, cents=CENTS):
     """{vec_id: [(cent_id, score), ...]} best-first, ties to lowest id."""
-    ids = np.array([cid for cid, _ in CENTS])
+    ids = np.array([cid for cid, _ in cents])
     out = {}
     for vid, v in ROWS:
-        scores = np.array([metric(v, c) for _, c in CENTS], dtype=float)
+        scores = np.array([metric(v, c) for _, c in cents], dtype=float)
         key = scores if best == "min" else -scores
         order = np.lexsort((ids, key))[:n]
         out[vid] = [(int(ids[i]), scores[i]) for i in order]
@@ -124,3 +125,43 @@ def test_empty_centroid_table_gives_null_id(frames):
     got = nearest_centroids(rows, cents.limit(0), "cent_id", _spark_l2)
     assert got.count() == len(ROWS)
     assert got.filter(F.col("cent_id").isNotNull()).count() == 0
+
+
+# Group 1 is CENTS; group 2 reuses ids 2 and 4 for other vectors and
+# holds its own exact tie (3 duplicates 8).
+GROUPS = {
+    1: CENTS,
+    2: [
+        (8, [0.5, 0.5, 0.0]),
+        (3, [0.5, 0.5, 0.0]),
+        (2, [-1.0, 0.0, 2.0]),
+        (4, [2.0, 2.0, 1.0]),
+    ],
+}
+
+
+@pytest.mark.parametrize("metric,spark_score,best", CASES)
+def test_grouped_matches_brute_force_per_group(spark, frames, metric, spark_score, best):
+    rows, _ = frames
+    cents = spark.createDataFrame(
+        [(g, cid, cv) for g, cs in GROUPS.items() for cid, cv in cs],
+        "g long, cent_id long, cv array<double>",
+    ).withColumn("ncv", F.sqrt(dot(F.col("cv"), F.col("cv"))))
+    got = nearest_centroids(rows, cents, "cent_id", spark_score, best=best, by=("g",))
+    assert got.columns == [*rows.columns, "g", "cent_id", "score"]
+    res = {(r["g"], r["vec_id"]): [(r["cent_id"], r["score"])] for r in got.collect()}
+    want = {
+        (g, vid): picks
+        for g, cs in GROUPS.items()
+        for vid, picks in _brute_force(metric, best, 1, cs).items()
+    }
+    assert res == want
+    # row 3 equals both 8 and 3 in group 2
+    assert res[(2, 3)][0][0] == 3
+
+
+def test_grouped_empty_centroid_table_gives_no_rows(frames):
+    rows, cents = frames
+    empty = cents.limit(0).withColumn("g", F.lit(1))
+    got = nearest_centroids(rows, empty, "cent_id", _spark_l2, by=("g",))
+    assert got.count() == 0
