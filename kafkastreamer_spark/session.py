@@ -56,6 +56,22 @@ ENGINE_CONF: dict[str, str] = {
     # Dimension tables (region/nation/supplier/part at bench SF) are
     # broadcast-joined; keep the threshold generous.
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # Write streaming checkpoints (offset and commit logs, state-store
+    # deltas, file-sink _spark_metadata) through FileSystem.rename. The
+    # default FileContext-based manager renames through FileContext,
+    # which on the local FS without libhadoop resolves symlinks by
+    # forking a `readlink` child of the JVM for the source and the
+    # destination of each file and of its .crc; those forks serialize,
+    # so every state partition's commit waits on them (4 partitions on
+    # 4 cores: ~1.6 s of commit per 6-batch drain, ~0.05 s here). Each
+    # file is still written as temp file + rename, atomic on POSIX and
+    # HDFS; no-overwrite is exists-then-rename, the check FileContext
+    # itself makes on the local FS (AbstractFileSystem.renameInternal).
+    # An object store needs its own manager, set through extra_conf.
+    "spark.sql.streaming.checkpointFileManagerClass": (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    ),
 }
 
 
@@ -103,26 +119,33 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     """Apply the engine confs to a session built elsewhere.
 
     The verification driver constructs its own SparkSession; queries
-    still need UTC semantics, the nanos-as-long parquet reader and AQE
-    inside cached plans. This is the only place the package sets a
-    conf at runtime: the entry adapters and ``sql.run_sql`` call it
-    once per query. Nothing is dropped silently: a conf that cannot be
-    set, and a static conf (not ``isModifiable``) the running
-    SparkContext lacks, each emit one RuntimeWarning per process.
+    still need UTC semantics, the nanos-as-long parquet reader, AQE
+    inside cached plans and the FileSystem-based checkpoint manager.
+    This is the only place the package sets a conf at runtime: the
+    entry adapters and ``sql.run_sql`` call it once per query.
+
+    Every conf is set first; ``spark.conf.isModifiable`` is no guide
+    (it is False for the checkpoint manager class, which a runtime set
+    does apply). Only a conf the session refuses as static
+    (``CANNOT_MODIFY_CONFIG``, as a core conf like the shuffle bypass
+    threshold raises) is checked on the running SparkContext instead.
+    Nothing is dropped silently: a conf that cannot be set, and a
+    static conf the SparkContext lacks, each emit one RuntimeWarning
+    per process.
     """
     for k, v in ENGINE_CONF.items():
-        if not spark.conf.isModifiable(k):
-            if spark.sparkContext.getConf().get(k) != v:
+        try:
+            spark.conf.set(k, v)
+        except Exception as exc:
+            condition = getattr(exc, "getCondition", lambda: None)()
+            if condition != "CANNOT_MODIFY_CONFIG":
+                _warn_once(k, f"could not apply engine conf {k}={v}: {exc}")
+            elif spark.sparkContext.getConf().get(k) != v:
                 _warn_once(
                     k,
                     f"running without the static conf {k}={v}; set it when "
                     "building the session (session.get_spark does)",
                 )
-            continue
-        try:
-            spark.conf.set(k, v)
-        except Exception as exc:
-            _warn_once(k, f"could not apply engine conf {k}={v}: {exc}")
     return spark
 
 

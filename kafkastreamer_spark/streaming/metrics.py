@@ -40,14 +40,23 @@ def stage_counter(df: DataFrame, stage: str) -> DataFrame:
 
 @dataclass
 class BatchMetrics:
+    """One micro-batch's progress. ``duration_ms`` is the progress
+    report's ``durationMs`` (phase -> ms: ``addBatch``, ``walCommit``,
+    ``commitOffsets``, ``triggerExecution``, ...); ``state_commit_ms``
+    sums ``commitTimeMs`` over the batch's stateful operators (0 for a
+    stateless query)."""
+
     batch_id: int
     num_input_rows: int
     observed: dict[str, int] = field(default_factory=dict)
+    duration_ms: dict[str, int] = field(default_factory=dict)
+    state_commit_ms: int = 0
 
 
 class MetricsCollector(StreamingQueryListener):
     """Driver-side progress capture: one BatchMetrics per micro-batch,
-    with every ``stage_*`` observed num_msg counter. Thread-safe —
+    with every ``stage_*`` observed num_msg counter and the batch's
+    phase timings. Thread-safe —
     listener callbacks arrive on Spark's listener-bus thread."""
 
     def __init__(self) -> None:
@@ -71,6 +80,10 @@ class MetricsCollector(StreamingQueryListener):
                     batch_id=int(p.batchId),
                     num_input_rows=int(p.numInputRows),
                     observed=observed,
+                    duration_ms=dict(p.durationMs or {}),
+                    state_commit_ms=sum(
+                        int(op.commitTimeMs) for op in p.stateOperators or ()
+                    ),
                 )
             )
 

@@ -1,13 +1,23 @@
-"""Time specific registry queries with the exact bench.py methodology
-(noop sink, clearCache + driver GC between runs, min of warm runs).
+"""Time specific registry queries with the bench.py methodology
+(noop sink, clearCache + driver GC between runs) and report the
+median of the warm runs as ``steady``.
 
 Usage: python scripts/mini_bench.py [-r RUNS] QUERY [QUERY ...]
+
+RUNS (default 7) counts the cold run too. One or two warm runs are
+not a steady state: at sf0.1 warm times keep falling for 5-6 runs
+in one process, so the min of two warm runs reads wherever that
+descent happened to be, and two fresh processes of one tree differed
+by up to 0.4 s on a 2 s query. The median of six warm runs sits in
+the later, flatter part of that descent and ignores one outlier
+either way.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -19,7 +29,7 @@ from kafkastreamer_spark.session import get_spark  # noqa: E402
 
 def main() -> None:
     args = sys.argv[1:]
-    runs = 3
+    runs = 7
     if args and args[0] == "-r":
         runs = int(args[1])
         args = args[2:]
@@ -50,8 +60,9 @@ def main() -> None:
                 warm.append(dt)
             else:
                 cold = dt
-        out[name] = {"steady": min(warm), "cold": cold, "warm": warm}
-        print(f"{name}: steady={min(warm)} cold={cold} warm={warm}", flush=True)
+        steady = round(statistics.median(warm), 3)
+        out[name] = {"steady": steady, "cold": cold, "warm": warm}
+        print(f"{name}: steady={steady} cold={cold} warm={warm}", flush=True)
     print(json.dumps(out))
     spark.stop()
 

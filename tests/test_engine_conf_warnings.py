@@ -13,7 +13,7 @@ from kafkastreamer_spark import session
 from kafkastreamer_spark.session import ENGINE_CONF, ensure_engine_conf
 
 REFUSED = "spark.sql.session.timeZone"
-# the one ENGINE_CONF key spark.conf.isModifiable rejects (a core conf)
+# the one ENGINE_CONF key spark.conf.set refuses (a core conf)
 STATIC = "spark.shuffle.sort.bypassMergeThreshold"
 
 
