@@ -11,9 +11,20 @@ across engines (the DuckDB oracle runs in UTC-naive time).
 
 from __future__ import annotations
 
+import functools
+import glob
+import hashlib
 import os
+import re
+import shutil
+import subprocess
+import tempfile
 import warnings
+from pathlib import Path
 
+import pyspark
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 ENGINE_CONF: dict[str, str] = {
@@ -87,6 +98,76 @@ ROCKSDB_STATE_CONF = {
 }
 
 
+# The local FileSystem for a local master, with an in-process chmod(2)
+# as setPermission. Without libhadoop, Hadoop's own forks a `chmod`
+# child of the JVM for every file it creates, for the file's .crc and
+# for every directory: about 15 forks per streaming micro-batch
+# (offset, commit and source logs, sink metadata, one parquet file per
+# task). The class is on the driver's classpath, which a local master's
+# executors share; a cluster keeps its own FileSystem.
+NO_FORK_FS = "kafkastreamer_spark.NoForkLocalFileSystem"
+_NO_FORK_FS_SOURCE = Path(__file__).with_name("jvm") / "NoForkLocalFileSystem.java"
+
+
+@functools.cache
+def _no_fork_fs_dir() -> str | None:
+    """The classpath dir holding the compiled ``NO_FORK_FS``, compiled
+    once per machine into a cache dir keyed by the source's hash; None,
+    with one RuntimeWarning, when it cannot be compiled."""
+    source = _NO_FORK_FS_SOURCE.read_bytes()
+    out = Path.home() / ".cache" / "kafkastreamer_spark" / hashlib.sha256(source).hexdigest()[:16]
+    if out.is_dir():
+        return str(out)
+    spark_home = os.environ.get("SPARK_HOME") or os.path.dirname(pyspark.__file__)
+    jars = glob.glob(os.path.join(spark_home, "jars", "hadoop-client-api-*.jar"))
+    javac = shutil.which("javac")
+    try:
+        if not (javac and jars):
+            raise OSError("no javac or no hadoop-client-api jar")
+        out.parent.mkdir(parents=True, exist_ok=True)
+        with tempfile.TemporaryDirectory(dir=out.parent) as tmp:
+            classes = os.path.join(tmp, "classes")
+            subprocess.run(
+                [javac, "--release", "17", "-cp", jars[0], "-d", classes, str(_NO_FORK_FS_SOURCE)],
+                check=True,
+                capture_output=True,
+                text=True,
+                timeout=300,
+            )
+            try:
+                os.replace(classes, out)
+            except OSError:
+                # another process compiled it first
+                if not out.is_dir():
+                    raise
+    except (OSError, subprocess.SubprocessError) as exc:
+        detail = getattr(exc, "stderr", None) or exc
+        warnings.warn(
+            f"could not compile {_NO_FORK_FS_SOURCE.name}, keeping Hadoop's local "
+            f"FileSystem (one chmod fork per created file): {detail}",
+            RuntimeWarning,
+            stacklevel=4,
+        )
+        return None
+    return str(out)
+
+
+def _no_fork_fs_classpath() -> str | None:
+    """The classpath entry of ``NO_FORK_FS``, or None when a session
+    built now could not load it: it did not compile, or a JVM already
+    running (a session was built before in this process) was launched
+    without it and cannot gain it; ``fs.file.impl`` naming a missing
+    class breaks every file read."""
+    classes = _no_fork_fs_dir()
+    if classes is None or SparkContext._jvm is None:
+        return classes
+    try:
+        SparkContext._jvm.java.lang.Class.forName(NO_FORK_FS)
+    except Py4JJavaError:
+        return None
+    return classes
+
+
 def get_spark(
     app_name: str = "kafkastreamer-spark",
     master: str | None = None,
@@ -98,7 +179,9 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 if unset);
     ``shuffle_partitions`` defaults to the same width so local shuffles
     use every core without tiny-partition overhead. On a real cluster
-    callers pass their own master/partition count.
+    callers pass their own master/partition count. A local master also
+    gets ``NO_FORK_FS`` as the ``file:`` FileSystem, its classes
+    appended to ``spark.driver.extraClassPath``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
@@ -110,6 +193,11 @@ def get_spark(
     conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     if extra_conf:
         conf.update(extra_conf)
+    classes = _no_fork_fs_classpath() if re.fullmatch(r"local(\[.*\])?", master) else None
+    if classes:
+        classpath = filter(None, (conf.get("spark.driver.extraClassPath"), classes))
+        conf["spark.driver.extraClassPath"] = os.pathsep.join(classpath)
+        conf.setdefault("spark.hadoop.fs.file.impl", NO_FORK_FS)
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -124,30 +212,41 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     This is the only place the package sets a conf at runtime: the
     entry adapters and ``sql.run_sql`` call it once per query.
 
-    Every conf is set first; ``spark.conf.isModifiable`` is no guide
-    (it is False for the checkpoint manager class, which a runtime set
-    does apply). Only a conf the session refuses as static
-    (``CANNOT_MODIFY_CONFIG``, as a core conf like the shuffle bypass
-    threshold raises) is checked on the running SparkContext instead.
-    Nothing is dropped silently: a conf that cannot be set, and a
-    static conf the SparkContext lacks, each emit one RuntimeWarning
-    per process.
+    Every conf is set; ``spark.conf.isModifiable`` is no guide (it is
+    False for the checkpoint manager class, which a runtime set does
+    apply). A conf the session refuses as static (``CANNOT_MODIFY_CONFIG``,
+    as a core conf like the shuffle bypass threshold raises) is checked
+    on the running SparkContext instead, and is not set again in this
+    process: the refused set costs a py4j exception (~7 ms) per call.
+    Nothing is dropped silently: a conf that cannot be set, and a static
+    conf the SparkContext lacks, each emit one RuntimeWarning per
+    process; a static conf found missing is not checked again (copying
+    the SparkContext's conf costs ~9 ms, and the check has nothing left
+    to report).
     """
     for k, v in ENGINE_CONF.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception as exc:
-            condition = getattr(exc, "getCondition", lambda: None)()
-            if condition != "CANNOT_MODIFY_CONFIG":
-                _warn_once(k, f"could not apply engine conf {k}={v}: {exc}")
-            elif spark.sparkContext.getConf().get(k) != v:
-                _warn_once(
-                    k,
-                    f"running without the static conf {k}={v}; set it when "
-                    "building the session (session.get_spark does)",
-                )
+        if k not in _static:
+            try:
+                spark.conf.set(k, v)
+                continue
+            except Exception as exc:
+                condition = getattr(exc, "getCondition", lambda: None)()
+                if condition != "CANNOT_MODIFY_CONFIG":
+                    _warn_once(k, f"could not apply engine conf {k}={v}: {exc}")
+                    continue
+                _static.add(k)
+        if k not in _warned and spark.sparkContext.getConf().get(k) != v:
+            _warn_once(
+                k,
+                f"running without the static conf {k}={v}; set it when "
+                "building the session (session.get_spark does)",
+            )
     return spark
 
+
+# confs spark.conf.set refused as static: which keys those are depends
+# only on the Spark build
+_static: set[str] = set()
 
 # confs already warned about: ensure_engine_conf runs once per query
 # (__spark_entry__.queries), and one warning per conf is enough

@@ -2,8 +2,9 @@
 FileSystem-based checkpoint manager (``session.ENGINE_CONF``), on
 sessions built by ``get_spark`` and on sessions built elsewhere once
 ``ensure_engine_conf`` ran. The offset and commit logs rely on its
-no-overwrite rename, and checkpoints written under Spark's default
-FileContext-based manager restart under it unchanged."""
+no-overwrite rename, state files on its overwrite, and checkpoints
+written under Spark's default FileContext-based manager restart under
+it unchanged."""
 
 from __future__ import annotations
 
@@ -26,11 +27,15 @@ SCHEMA = StructType(
 )
 
 
-def _manager(spark, path: str):
+def _manager(spark, path: str, fs_impl: str | None = None):
     jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    if fs_impl is not None:
+        conf.set("fs.file.impl", fs_impl)
+        # FileSystem.get caches one instance per scheme, whatever the conf
+        conf.set("fs.file.impl.disable.cache", "true")
     return jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
-        jvm.org.apache.hadoop.fs.Path(path),
-        spark._jsparkSession.sessionState().newHadoopConf(),
+        jvm.org.apache.hadoop.fs.Path(path), conf
     )
 
 
@@ -70,6 +75,17 @@ def _write_atomic(manager, path, data: bytes, overwrite: bool) -> None:
     out.close()
 
 
+def _overwrite(manager, spark, directory) -> tuple[bytes, list[str]]:
+    """Write ``1.delta`` twice, the second time with
+    ``overwriteIfPossible=True``; its content and the dir's listing."""
+    directory.mkdir()
+    target = directory / "1.delta"
+    path = spark._jvm.org.apache.hadoop.fs.Path(str(target))
+    _write_atomic(manager, path, b"first", overwrite=False)
+    _write_atomic(manager, path, b"third", overwrite=True)
+    return target.read_bytes(), sorted(os.listdir(directory))
+
+
 def test_create_atomic_refuses_to_overwrite(spark, tmp_path):
     """The offset and commit logs write batch N's file with
     ``createAtomic(path, overwriteIfPossible=False)``; a second writer
@@ -90,12 +106,47 @@ def test_create_atomic_refuses_to_overwrite(spark, tmp_path):
     )
     assert target.read_bytes() == b"first"
 
-    # overwriteIfPossible=True (state deltas and snapshots) is best
-    # effort: it raises nothing, and the file stays whole. FileSystem
-    # rename never replaces an existing file on the local FS, so a
-    # re-run version keeps the delta its first attempt committed.
-    _write_atomic(manager, path, b"third", overwrite=True)
-    assert target.read_bytes() in (b"first", b"third")
+    # overwriteIfPossible=True (state deltas and snapshots) replaces the
+    # file, as rename(2) does under the session's plain LocalFileSystem,
+    # and leaves no temp file or .crc beside it
+    state = tmp_path / "state"
+    assert _overwrite(manager, spark, state) == (b"third", [".1.delta.crc", "1.delta"])
+
+
+def test_create_atomic_on_sessions_built_elsewhere(spark, plain, tmp_path):
+    """What a session not built by ``get_spark`` does today. Its default
+    FileContext-based manager replaces the file on overwrite. After
+    ``ensure_engine_conf`` the FileSystem-based manager writes through
+    the ``file:`` FileSystem of the JVM, which Hive's jars make their
+    ProxyLocalFileSystem when the session builder did not name one; its
+    rename refuses an existing target, so the overwrite keeps the first
+    file and leaves its temp file and .crc beside it."""
+    refused = tmp_path / "refused"
+    refused.mkdir()
+    context = _manager(plain, str(refused))
+    assert context.getClass().getName() == PKG + "FileContextBasedCheckpointFileManager"
+    path = spark._jvm.org.apache.hadoop.fs.Path(str(refused / "0"))
+    _write_atomic(context, path, b"first", overwrite=False)
+    with pytest.raises(Py4JJavaError) as err:
+        _write_atomic(context, path, b"second", overwrite=False)
+    assert "org.apache.hadoop.fs.FileAlreadyExistsException" in _class_chain(
+        err.value.java_exception
+    )
+    assert (refused / "0").read_bytes() == b"first"
+
+    assert _overwrite(context, spark, tmp_path / "context") == (
+        b"third",
+        [".1.delta.crc", "1.delta"],
+    )
+
+    ensure_engine_conf(plain)
+    proxy = _manager(plain, str(tmp_path), fs_impl="org.apache.hadoop.hive.ql.io.ProxyLocalFileSystem")
+    assert proxy.getClass().getName() == ENGINE_CONF[KEY]
+    content, names = _overwrite(proxy, spark, tmp_path / "proxy")
+    assert content == b"first"
+    temp = [n for n in names if ".tmp" in n]
+    assert [n for n in names if n not in temp] == [".1.delta.crc", "1.delta"]
+    assert len(temp) == 2 and {n.rsplit(".tmp", 1)[1] for n in temp} == {"", ".crc"}
 
 
 def _append(spark, path: str, rows) -> None:

@@ -62,3 +62,31 @@ def test_missing_static_conf_warns_once(spark, monkeypatch, fresh_warnings):
     got = _engine_warnings(record)
     assert len(got) == 1
     assert f"{STATIC}={ENGINE_CONF[STATIC]}" in got[0]
+
+
+def test_second_call_skips_the_static_conf(spark, monkeypatch, fresh_warnings):
+    """Once the static conf was found missing and warned about, a second
+    call neither copies the SparkContext's conf nor sets the key again
+    (a refused set raises through py4j)."""
+    copies, sets = [], []
+    real_set = spark.conf.set
+
+    def empty_conf():
+        copies.append(1)
+        return SparkConf(loadDefaults=False)
+
+    def recording_set(key, value):
+        sets.append(key)
+        real_set(key, value)
+
+    monkeypatch.setattr(spark.sparkContext, "getConf", empty_conf)
+    monkeypatch.setattr(spark.conf, "set", recording_set)
+    with warnings.catch_warnings(record=True) as record:
+        warnings.simplefilter("always")
+        ensure_engine_conf(spark)
+        assert len(copies) == 1 and len(_engine_warnings(record)) == 1
+        sets.clear()
+        ensure_engine_conf(spark)
+    assert len(copies) == 1
+    assert STATIC not in sets
+    assert sorted(sets) == sorted(k for k in ENGINE_CONF if k != STATIC)
