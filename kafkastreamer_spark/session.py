@@ -215,14 +215,13 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
     Every conf is set; ``spark.conf.isModifiable`` is no guide (it is
     False for the checkpoint manager class, which a runtime set does
     apply). A conf the session refuses as static (``CANNOT_MODIFY_CONFIG``,
-    as a core conf like the shuffle bypass threshold raises) is checked
-    on the running SparkContext instead, and is not set again in this
-    process: the refused set costs a py4j exception (~7 ms) per call.
-    Nothing is dropped silently: a conf that cannot be set, and a static
-    conf the SparkContext lacks, each emit one RuntimeWarning per
-    process; a static conf found missing is not checked again (copying
-    the SparkContext's conf costs ~9 ms, and the check has nothing left
-    to report).
+    as a core conf like the shuffle bypass threshold raises) is not set
+    again in this process, since the refused set costs a py4j exception
+    (~7 ms) per call. It is checked on the running SparkContext instead,
+    once per SparkContext: a static conf cannot change while its context
+    runs, and copying the context's conf costs ~14 ms. Nothing is dropped
+    silently: a conf that cannot be set, and a static conf the
+    SparkContext lacks, each emit one RuntimeWarning per process.
     """
     for k, v in ENGINE_CONF.items():
         if k not in _static:
@@ -235,7 +234,11 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
                     _warn_once(k, f"could not apply engine conf {k}={v}: {exc}")
                     continue
                 _static.add(k)
-        if k not in _warned and spark.sparkContext.getConf().get(k) != v:
+        context_key = (spark.sparkContext.applicationId, k)
+        if context_key in _checked:
+            continue
+        _checked.add(context_key)
+        if spark.sparkContext.getConf().get(k) != v:
             _warn_once(
                 k,
                 f"running without the static conf {k}={v}; set it when "
@@ -247,6 +250,10 @@ def ensure_engine_conf(spark: SparkSession) -> SparkSession:
 # confs spark.conf.set refused as static: which keys those are depends
 # only on the Spark build
 _static: set[str] = set()
+
+# (applicationId, key) of each static conf already checked on that
+# SparkContext
+_checked: set[tuple[str, str]] = set()
 
 # confs already warned about: ensure_engine_conf runs once per query
 # (__spark_entry__.queries), and one warning per conf is enough

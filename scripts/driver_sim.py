@@ -8,48 +8,21 @@ Usage: python scripts/driver_sim.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 import time
-from datetime import date, datetime
-from decimal import Decimal
 
 import duckdb
 from pyspark.sql import SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
+from kafkastreamer_spark.tables import TABLES  # noqa: E402
+from perfbench.layers import cached_mb  # noqa: E402
+from perfbench.verify import multiset  # noqa: E402
 
 SF_DIR = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
-
-def canon(v):
-    if v is None:
-        return "␀"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, float):
-        return "nan" if math.isnan(v) else repr(v)
-    if isinstance(v, Decimal):
-        return repr(float(v))
-    if isinstance(v, datetime):
-        return v.strftime("%Y-%m-%d %H:%M:%S.%f")
-    if isinstance(v, date):
-        return v.strftime("%Y-%m-%d")
-    if isinstance(v, (list, tuple)):
-        return "[" + ",".join(canon(x) for x in v) + "]"
-    return str(v)
-
-
-def multiset(cols, rows):
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
 def main() -> int:
@@ -91,7 +64,7 @@ def main() -> int:
     print(f"== {len(qs)} queries, {len(oracles)} oracle-checked")
     failures = []
     n_done = 0
-    peak_storage: list = [0, ""]  # [bytes, query-name]
+    peak_mb, peak_name = 0.0, ""
     for name, fn in sorted(qs.items()):
         if ONLY and name not in ONLY:
             continue
@@ -113,23 +86,12 @@ def main() -> int:
         # collects it AFTER the function exits); without this, driver
         # heap pressure eventually kills an unrelated broadcast build
         # mid-sweep (observed at ~260 queries at sf0.1).
-        # Peak-storage telemetry (round-10 VERDICT #5): sample cached
-        # bytes BEFORE the clear, so the end-of-run line reports the
-        # worst single-query cache footprint the sweep ever held.
+        # Sample cached bytes BEFORE the clear, so the end-of-run line
+        # reports the worst single-query cache footprint the sweep held.
         try:
-            it = (
-                spark._jsparkSession.sparkContext()
-                .statusStore()
-                .rddList(False)
-                .iterator()
-            )
-            used = 0
-            while it.hasNext():
-                r = it.next()
-                used += r.memoryUsed() + r.diskUsed()
-            if used > peak_storage[0]:
-                peak_storage[0] = used
-                peak_storage[1] = name
+            used = cached_mb(spark)
+            if used > peak_mb:
+                peak_mb, peak_name = used, name
         except Exception:  # noqa: BLE001 - telemetry only
             pass
         spark.catalog.clearCache()
@@ -172,8 +134,7 @@ def main() -> int:
             diffs = [(a, b) for a, b in zip(s, d) if a != b][:3]
             print(f"      first diffs: {diffs}")
     print(
-        f"== peak per-query cache: {peak_storage[0] / 1024 / 1024:.1f} MiB "
-        f"(during {peak_storage[1]!r})"
+        f"== peak per-query cache: {peak_mb:.1f} MiB (during {peak_name!r})"
     )
     print(f"== done: {len(failures)} failures {failures}")
     spark.stop()

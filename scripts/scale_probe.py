@@ -27,16 +27,18 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from bench import timed_run  # noqa: E402
 from kafkastreamer_spark.registry import REGISTRY, _ensure_loaded  # noqa: E402
 from kafkastreamer_spark.session import get_spark  # noqa: E402
 from kafkastreamer_spark.tables import TABLES, load_table  # noqa: E402
+# this script's directory heads sys.path
+from query_profile import stage_rows  # noqa: E402
 
 BASE = "/tmp/scale_probe"
 # SCALE_PROBE_DISJOINT=1: make inflated document copies token-disjoint
@@ -47,11 +49,10 @@ DISJOINT = os.environ.get("SCALE_PROBE_DISJOINT", "0") == "1"
 # graph copies (edge growth linear in k). Only for probes that never
 # join the non-inflated part/supplier dims (graph_connected_components).
 REMAP_GRAPH = os.environ.get("SCALE_PROBE_REMAP_GRAPH", "0") == "1"
-# SCALE_PROBE_SPILL=1: enable the Spark UI and print a per-stage
-# spill/shuffle report (memoryBytesSpilled, diskBytesSpilled, peak
-# execution memory) for every rung — the instrument for attributing a
-# superlinear single-box rung to memory pressure vs plan pathology
-# (VERDICT r11 #1: measure, don't argue).
+# SCALE_PROBE_SPILL=1: print a per-stage spill/shuffle report (memory
+# and disk spill, peak execution memory) of every rung's second run —
+# the instrument for attributing a superlinear single-box rung to
+# memory pressure vs plan pathology.
 SPILL = os.environ.get("SCALE_PROBE_SPILL", "0") == "1"
 # Probes verified safe under the l_partkey/l_suppkey remap: they build
 # their node set from lineitem alone and never join the (non-inflated)
@@ -287,54 +288,6 @@ def _inflate(spark: SparkSession, sf_dir: str, name: str, k: int, out_dir: str) 
     out.write.mode("overwrite").parquet(os.path.join(out_dir, f"{name}.parquet"))
 
 
-def _max_stage_id(spark: SparkSession) -> int:
-    """Highest stage id the app has seen so far (REST), so a rung's
-    report can exclude earlier rungs' stages. -1 if none/unavailable."""
-    try:
-        return max([-1] + [st.get("stageId", -1) for st in _rest_stages(spark)])
-    except Exception:  # noqa: BLE001
-        return -1
-
-
-def _rest_stages(spark: SparkSession) -> list[dict]:
-    import urllib.request
-
-    ui = spark.sparkContext.uiWebUrl
-    app_id = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app_id}/stages") as r:
-        return json.load(r)
-
-
-def _stage_spill(spark: SparkSession, stage_floor: int) -> list[dict]:
-    """Per-stage spill/shuffle metrics for stages newer than
-    stage_floor, via the UI REST API (requires spark.ui.enabled)."""
-    stages = _rest_stages(spark)
-    out = []
-    for st in stages:
-        if st.get("stageId", -1) <= stage_floor:
-            continue
-        if st.get("status") not in ("COMPLETE", "ACTIVE"):
-            continue
-        out.append(
-            {
-                "stage": st["stageId"],
-                "name": st.get("name", "")[:60],
-                "tasks": st.get("numCompleteTasks"),
-                "run_ms": st.get("executorRunTime"),
-                "mem_spill_mb": round(st.get("memoryBytesSpilled", 0) / 1e6, 1),
-                "disk_spill_mb": round(st.get("diskBytesSpilled", 0) / 1e6, 1),
-                "shuffle_write_mb": round(
-                    st.get("shuffleWriteBytes", 0) / 1e6, 1
-                ),
-                "peak_exec_mem_mb": round(
-                    st.get("peakExecutionMemory", 0) / 1e6, 1
-                ),
-            }
-        )
-    out.sort(key=lambda x: -(x["mem_spill_mb"] + x["disk_spill_mb"]))
-    return out[:12]
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     if len(sys.argv) > 2:  # restrict to named queries while iterating
@@ -363,10 +316,7 @@ def main() -> None:
                 f"({sorted(REMAP_SAFE_PROBES)}) or unset the flag."
             )
     _ensure_loaded()
-    spark = get_spark(
-        app_name="kafkastreamer-spark-scale-probe",
-        extra_conf={"spark.ui.enabled": "true"} if SPILL else None,
-    )
+    spark = get_spark(app_name="kafkastreamer-spark-scale-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     needed: dict[tuple[str, int], None] = {}
@@ -395,27 +345,17 @@ def main() -> None:
         results[name] = {}
         for k in ladder:
             d = os.path.join(BASE, f"k{k}")
-            fn = REGISTRY[name].fn
-            elapsed = float("nan")
-            stage_floor = _max_stage_id(spark) if SPILL else -1
-            for _run in range(2):
-                spark.catalog.clearCache()
-                spark.sparkContext._jvm.System.gc()
-                if SPILL and _run:
-                    stage_floor = _max_stage_id(spark)  # report run 2 only
-                t0 = time.perf_counter()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                elapsed = round(time.perf_counter() - t0, 3)
+            for run in range(2):
+                group = f"{name}@k{k}#{run}"
+                spark.sparkContext.setJobGroup(group, name)
+                elapsed = timed_run(spark, REGISTRY[name].fn, d)
             results[name][k] = elapsed
             print(json.dumps({"query": name, "k": k, "sec": elapsed}), flush=True)
             if SPILL:
-                print(
-                    json.dumps(
-                        {"spill_report": {"query": name, "k": k,
-                                          "stages": _stage_spill(spark, stage_floor)}}
-                    ),
-                    flush=True,
-                )
+                stages = stage_rows(spark.sparkContext, group)
+                stages.sort(key=lambda s: -(s["mem_spill_mb"] + s["disk_spill_mb"]))
+                report = {"query": name, "k": k, "stages": stages[:12]}
+                print(json.dumps({"spill_report": report}), flush=True)
 
     summary = {}
     for name, by_k in results.items():

@@ -1,6 +1,7 @@
 """ensure_engine_conf never drops a conf silently: a runtime conf the
 session refuses, and a static conf the running SparkContext lacks,
-each raise one RuntimeWarning per process."""
+each raise one RuntimeWarning per process. A static conf is checked
+once per SparkContext."""
 
 from __future__ import annotations
 
@@ -19,7 +20,10 @@ STATIC = "spark.shuffle.sort.bypassMergeThreshold"
 
 @pytest.fixture
 def fresh_warnings(monkeypatch):
+    """No conf warned about, and no static conf checked on the test
+    session's SparkContext yet."""
     monkeypatch.setattr(session, "_warned", set())
+    monkeypatch.setattr(session, "_checked", set())
 
 
 def _engine_warnings(record) -> list[str]:
@@ -45,13 +49,8 @@ def test_refused_conf_warns_once(spark, monkeypatch, fresh_warnings):
 
 
 def test_missing_static_conf_warns_once(spark, monkeypatch, fresh_warnings):
-    # the test session is built by get_spark, so it has every static conf
-    with warnings.catch_warnings(record=True) as record:
-        warnings.simplefilter("always")
-        ensure_engine_conf(spark)
-    assert _engine_warnings(record) == []
-
-    # a session built without them, as plain SparkSession.builder does
+    # a session built without the static confs, as plain
+    # SparkSession.builder does
     monkeypatch.setattr(
         spark.sparkContext, "getConf", lambda: SparkConf(loadDefaults=False)
     )
@@ -62,6 +61,28 @@ def test_missing_static_conf_warns_once(spark, monkeypatch, fresh_warnings):
     got = _engine_warnings(record)
     assert len(got) == 1
     assert f"{STATIC}={ENGINE_CONF[STATIC]}" in got[0]
+
+
+def test_second_call_makes_no_conf_copy(spark, monkeypatch, fresh_warnings):
+    """The test session is built by get_spark, so it has every static
+    conf: the first call checks that on a copy of the SparkContext's
+    conf and warns about nothing; a second call on the same context
+    copies nothing."""
+    copies = []
+    real_get_conf = spark.sparkContext.getConf
+
+    def counting_get_conf():
+        copies.append(1)
+        return real_get_conf()
+
+    monkeypatch.setattr(spark.sparkContext, "getConf", counting_get_conf)
+    with warnings.catch_warnings(record=True) as record:
+        warnings.simplefilter("always")
+        ensure_engine_conf(spark)
+        assert len(copies) == 1
+        ensure_engine_conf(spark)
+    assert len(copies) == 1
+    assert _engine_warnings(record) == []
 
 
 def test_second_call_skips_the_static_conf(spark, monkeypatch, fresh_warnings):
